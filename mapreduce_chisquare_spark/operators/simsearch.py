@@ -1,22 +1,48 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline, plus a random-
-hyperplane LSH bucketing as the scale path (bucket first, then search
-within buckets — turns O(N*Q) into O(N*Q/2^p) probes).
+Every top-k search here is one skeleton, the partition -> prune ->
+local top-k -> refine shape of distributed top-k:
 
-Two interchangeable exact scorers, bit-identical by construction:
+    candidates -> score -> shortlist -> rerank
 
-- `cosine(...)`: F.aggregate/F.zip_with Catalyst expressions, summed
-  sequentially left-to-right — the oracle-parity reference form. The
-  lambdas are INTERPRETED (no codegen): ~3 boxed lambda evaluations
-  per row make it hypersensitive to CPU contention (observed 70x
-  degradation under load) and ~50x the CPU of the vectorized scorer
-  at scale. Kept as the reference; not the default.
-- `_cos_arrow()`: Arrow-batched numpy that accumulates
+The variants differ only in the candidate generator and the scorer;
+the steps are private helpers of this module:
+
+- Query rows (`_queries`): the vec_id < n_queries slice as
+  (query_id, q_emb, ...), always attached to the corpus as a
+  broadcast, so the corpus is scanned once and never shuffles.
+- Candidates + score (`_probe`): a broadcast probe join, self-match
+  removal and one score column per (query, vec) pair. The candidate
+  set is the whole corpus (cosine_topk, mine_hard_negatives,
+  mips_topk, pq_adc_topk, sq_topk), the query's hyperplane bucket
+  (lsh_topk) or its `nprobe` nearest IVF cells (`_ivf_probe`:
+  ivf_topk, ivfpq_topk). The two-corpus joins pair rows that share a
+  cell instead (`_cell_pairs`: similarity_join{,_topk,_reranked},
+  semantic_dedup, cosine_neardup_pairs).
+- Shortlist (`_shortlist`, topk.topk_per_group): the per-query
+  row_number cut, compiled to WindowGroupLimit (partial top-k before
+  the exchange).
+- Rerank (`_rerank_cos`): exact cosine over the shortlist only, the
+  full-precision corpus joined back for shortlisted rows
+  (pq_refined_topk, ivfpq_topk, sq_topk). similarity_join_reranked
+  reranks its shortlist by a weighted cosine.
+
+Scores: cosine, inner product, weighted cosine, PQ ADC distance or
+the int8 dot. Each float scorer has two interchangeable forms,
+bit-identical by construction:
+
+- the expression form (`cosine`, `dot`, `weighted_cosine`,
+  `int8_dot`): Catalyst expressions summed sequentially left-to-right,
+  the oracle-parity reference. F.aggregate/F.zip_with lambdas are
+  INTERPRETED (no codegen): ~3 boxed lambda evaluations per row make
+  them hypersensitive to CPU contention (observed 70x degradation
+  under load) and ~50x the CPU of the vectorized scorer at scale.
+  Kept as the reference; not the default.
+- `_pair_kernel(kind)`: Arrow-batched numpy that accumulates
   dimension-by-dimension, mirroring the same ((0+x1)+x2)+... order,
-  so cosines are bit-identical doubles to both the expression form
-  and the DuckDB oracle (float32 inputs widen exactly to double).
-  This is the DEFAULT scorer for the exact and LSH top-k paths.
+  so scores are bit-identical doubles to both the expression form and
+  the DuckDB oracle (float32 inputs widen exactly to double). This is
+  the DEFAULT scorer.
 
 Hyperplanes are deterministic ±1 vectors derived from md5 at import
 time — identical literals are embedded in the oracle SQL.
@@ -59,40 +85,164 @@ def dot(a: Column, b: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+    """Sequential double cosine; NULL when either norm is zero, as in
+    the DuckDB twins and the Arrow scorer (under ANSI a zero
+    denominator would otherwise raise DIVIDE_BY_ZERO)."""
+    return dot(a, b) / F.nullif(
+        F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)), F.lit(0.0)
+    )
 
 
-def _cos_arrow():
-    """Arrow-batched numpy cosine over two array columns. Accumulates
-    dimension-by-dimension (sequential over dims, vectorized over
-    rows), mirroring the engines' left-to-right dot order — so the
-    scores are bit-identical to the `cosine(...)` expression form and
-    the DuckDB oracle, by construction rather than by luck (a plain
-    .sum(axis=1) would be numpy pairwise summation)."""
+# kind -> (UDF name, Spark return type) of the Arrow pair kernels
+_PAIR_KERNELS = {
+    "cos": ("cos_batch", "double"),
+    "dot": ("dot_batch", "double"),
+    "wcos": ("wcos_batch", "double"),
+    "int8_dot": ("dot8", "long"),
+}
+
+
+def _pair_kernel(kind: str, weights: list | None = None):
+    """Arrow-batched numpy scorer over two array columns: cosine
+    ("cos"), inner product ("dot"), weighted cosine ("wcos", one
+    weight per dimension, terms associated as (w*x)*y like
+    weighted_cosine) or the exact BIGINT dot of int8 codes
+    ("int8_dot"). Accumulates dimension-by-dimension (sequential over
+    dims, vectorized over rows), mirroring the engines' left-to-right
+    fold — so the doubles are bit-identical to the expression forms
+    and the DuckDB oracle by construction rather than by luck (a plain
+    .sum(axis=1) would be numpy pairwise summation). A zero-norm
+    cosine comes out NaN, which Arrow hands back to Spark as NULL."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("double")
-    def cos_batch(a: pd.Series, b: pd.Series) -> pd.Series:
+    name, rtype = _PAIR_KERNELS[kind]
+    dtype = np.int64 if rtype == "long" else np.float64
+    ws = [float(w) for w in weights] if kind == "wcos" else None
+    norms = kind in ("cos", "wcos")
+
+    def kernel(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:  # np.stack raises on empty Arrow batches
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.zeros(A.shape[0])
-        aa = np.zeros(A.shape[0])
-        bb = np.zeros(A.shape[0])
+            return pd.Series([], dtype=dtype)
+        A = np.stack(a.to_numpy()).astype(dtype)
+        B = np.stack(b.to_numpy()).astype(dtype)
+        num = np.zeros(A.shape[0], dtype)
+        aa = np.zeros(A.shape[0], dtype)
+        bb = np.zeros(A.shape[0], dtype)
         for d in range(A.shape[1]):  # sequential over dims = engine order
             x, y = A[:, d], B[:, d]
-            num = num + x * y
-            aa = aa + x * x
-            bb = bb + y * y
+            wx, wy = (x, y) if ws is None else (ws[d] * x, ws[d] * y)
+            num = num + wx * y
+            if norms:
+                aa = aa + wx * x
+                bb = bb + wy * y
+        if not norms:
+            return pd.Series(num)
         return pd.Series(num / (np.sqrt(aa) * np.sqrt(bb)))
 
-    return cos_batch
+    kernel.__name__ = name  # the UDF name the plans show
+    return pandas_udf(kernel, rtype)
 
 
-def _score_cos(a: Column, b: Column, use_arrow: bool) -> Column:
-    return _cos_arrow()(a, b) if use_arrow else cosine(a, b)
+def _score_cos(
+    use_arrow: bool = True, a: str = "q_emb", b: str = "embedding"
+) -> Column:
+    return (_pair_kernel("cos") if use_arrow else cosine)(F.col(a), F.col(b))
+
+
+def _queries(
+    emb: DataFrame,
+    n_queries: int,
+    *extra,
+    vec: str = "embedding",
+    alias: str = "q_emb",
+    prep=None,
+) -> DataFrame:
+    """The query rows, vec_id < n_queries, as (query_id, <alias>,
+    *extra). `prep` runs on the filtered rows before the projection."""
+    rows = emb.filter(F.col("vec_id") < n_queries)
+    if prep is not None:
+        rows = prep(rows)
+    return rows.select(
+        F.col("vec_id").alias("query_id"), F.col(vec).alias(alias), *extra
+    )
+
+
+def _probe(
+    corpus: DataFrame,
+    q: DataFrame,
+    score: Column,
+    name: str = "cos",
+    on: str | None = None,
+    keep: Column | None = None,
+    cross: bool = False,
+) -> DataFrame:
+    """(query_id, vec_id, <name>): the broadcast query rows joined to
+    their candidates (every corpus row, or rows with an equal `on`
+    key), the query's own row and rows failing `keep` removed, one
+    score per pair."""
+    cond = F.col("vec_id") != F.col("query_id")
+    if keep is not None:
+        cond = cond & keep
+    joined = (
+        corpus.crossJoin(F.broadcast(q))
+        if cross
+        else corpus.join(F.broadcast(q), on)
+    )
+    return joined.filter(cond).select("query_id", "vec_id", score.alias(name))
+
+
+def _shortlist(
+    scored: DataFrame, group: str, order: Column, tie: str, n: int
+) -> DataFrame:
+    """The first `n` rows per `group` by (order, tie ASC), numbered in
+    `__rn`."""
+    w = Window.partitionBy(group).orderBy(order, F.asc(tie))
+    return scored.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") <= F.lit(int(n))
+    )
+
+
+def _rerank_cos(
+    cand: DataFrame,
+    emb: DataFrame,
+    n_queries: int,
+    k: int,
+    use_arrow: bool = True,
+) -> DataFrame:
+    """Exact-cosine top-k of a (query_id, vec_id) shortlist: the
+    full-precision corpus is joined back for the shortlisted rows
+    only, so the exact scorer runs on |Q| * shortlist rows whatever
+    the corpus size."""
+    rescored = (
+        cand.join(emb, "vec_id")
+        .join(F.broadcast(_queries(emb, n_queries)), "query_id")
+        .select("query_id", "vec_id", _score_cos(use_arrow).alias("cos"))
+    )
+    return topk_per_group(rescored, "query_id", "cos", "vec_id", k)
+
+
+def _cell_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    cents: list[list[float]] | None = None,
+    use_arrow: bool = True,
+    key: str = "centroid_id",
+    ids: tuple[str, str] = ("a_id", "b_id"),
+) -> DataFrame:
+    """Candidate pairs that share a cell: (key, a_id, emb_a, b_id,
+    emb_b) from two (vec_id, embedding, key) relations. With `cents`
+    both sides are first assigned to that shared centroid fit."""
+    if cents is not None:
+        a = with_centroid_assignment(a, cents, use_arrow)
+        b = with_centroid_assignment(b, cents, use_arrow)
+    left = a.select(
+        key, F.col("vec_id").alias(ids[0]), F.col("embedding").alias("emb_a")
+    )
+    right = b.select(
+        key, F.col("vec_id").alias(ids[1]), F.col("embedding").alias("emb_b")
+    )
+    return left.join(right, key)
 
 
 def cosine_topk(
@@ -102,28 +252,15 @@ def cosine_topk(
     n_queries): (query_id, vec_id, cos, rank). Queries are broadcast;
     the corpus is scanned once — the right shape when Q << N.
 
-    Scorer defaults to the Arrow/numpy batch path (_cos_arrow);
+    Scorer defaults to the Arrow/numpy batch path (_pair_kernel);
     use_arrow=False selects the interpreted-expression reference form
     — identical bits, ~50x the CPU at scale (module docstring)."""
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    scored = (
-        emb.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
-    )
+    scored = _probe(emb, _queries(emb, n_queries), _score_cos(use_arrow))
     return topk_per_group(scored, "query_id", "cos", "vec_id", k)
 
 
 def mine_hard_negatives(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, use_arrow: bool = True
+    emb: DataFrame, n_queries: int = 8, k: int = 5
 ) -> DataFrame:
     """Hard-negative mining for contrastive training (the DPR /
     sentence-embedding methodology, public): for each query vector
@@ -139,35 +276,11 @@ def mine_hard_negatives(
     corpus scan is replaced by the IVF/PQ shortlist exactly as in
     simsearch_ivfpq; the mining semantics (different-label filter +
     rank) are unchanged."""
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-    )
-    scored = (
-        emb.join(F.broadcast(q))
-        .filter(
-            (F.col("vec_id") != F.col("query_id"))
-            & (F.col("label") != F.col("q_label"))
-        )
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
+    q = _queries(emb, n_queries, F.col("label").alias("q_label"))
+    scored = _probe(
+        emb, q, _score_cos(), keep=F.col("label") != F.col("q_label")
     )
     return topk_per_group(scored, "query_id", "cos", "vec_id", k)
-
-
-def cosine_topk_pandas(
-    emb: DataFrame, n_queries: int = 8, k: int = 5
-) -> DataFrame:
-    """cosine_topk on the Arrow-vectorized scorer, kept as a distinct
-    registry entry so the pandas_udf escape hatch stays independently
-    oracle-checked (SURVEY.md §2.8). Same result relation."""
-    return cosine_topk(emb, n_queries, k, use_arrow=True)
 
 
 NEARDUP_MAX_BUCKET = 1000
@@ -177,23 +290,20 @@ def cosine_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.3,
     max_bucket: int = NEARDUP_MAX_BUCKET,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Embedding near-dup candidate pairs blocked on the hyperplane
     LSH bucket: (vec_a, vec_b, cos) with cos >= threshold and both
     vectors in the same (size-guarded) bucket.
 
-    The round-1 version self-joined on the ~10-value `label` column —
-    Σ n_ℓ² pairs, quadratic per block and a scale-killer at 100 TB.
     Blocking on the 2^NUM_PLANES-bucket LSH key bounds each block at
-    max_bucket rows (degenerate buckets are dropped, the same
-    documented semantic as the MinHash guard, dedup.py
-    minhash_candidate_pairs), and near-identical vectors agree on all
-    sign bits, so true near-dups stay co-bucketed. The guard is a
-    window count over the bucket key — one exchange that the self-join
-    reuses (same ReusedExchange pattern as the MinHash path)."""
-    from pyspark.sql import Window
-
+    max_bucket rows, where a self-join on the ~10-value `label` column
+    would cost Σ n_ℓ² pairs, quadratic per block. Degenerate buckets
+    are dropped, the same documented semantic as the MinHash guard
+    (dedup.py minhash_candidate_pairs), and near-identical vectors
+    agree on all sign bits, so true near-dups stay co-bucketed. The
+    guard is a window count over the bucket key — one exchange that
+    the self-join reuses (same ReusedExchange pattern as the MinHash
+    path)."""
     wb = emb.select(
         "vec_id", "embedding", hyperplane_bucket(F.col("embedding")).alias("bucket")
     )
@@ -203,22 +313,10 @@ def cosine_neardup_pairs(
         .filter((F.col("sz") >= 2) & (F.col("sz") <= max_bucket))
         .drop("sz")
     )
-    a = guarded.select(
-        "bucket", F.col("vec_id").alias("vec_a"), F.col("embedding").alias("emb_a")
-    )
-    b = guarded.select(
-        "bucket", F.col("vec_id").alias("vec_b"), F.col("embedding").alias("emb_b")
-    )
     return (
-        a.join(b, "bucket")
+        _cell_pairs(guarded, guarded, key="bucket", ids=("vec_a", "vec_b"))
         .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "vec_a",
-            "vec_b",
-            _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias(
-                "cos"
-            ),
-        )
+        .select("vec_a", "vec_b", _score_cos(a="emb_a", b="emb_b").alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -233,8 +331,6 @@ KMEANS_SCALE = 1048576.0  # 2^20
 
 
 def _norm(vals: list[float]) -> float:
-    import math
-
     s = 0.0
     for v in vals:  # left-to-right, matching the engines' dot order
         s += v * v
@@ -249,15 +345,12 @@ TARGET_CLUSTER_SIZE = 100
 def auto_n_centroids(
     n_rows: int, target_cluster_size: int = TARGET_CLUSTER_SIZE
 ) -> int:
-    """The SemDeDup paper's production rule C ∝ N / target_cluster_size,
-    coded instead of merely documented (round-8 verdict item): pick the
-    centroid count so the EXPECTED cluster size stays a bounded
+    """The SemDeDup paper's production rule C ∝ N / target_cluster_size:
+    pick the centroid count so the EXPECTED cluster size stays a bounded
     constant as the corpus grows, keeping the per-cluster pairwise
     stage's Σ(cluster size)² cost ~ N * target instead of drifting
     toward N² when C lags the corpus. Floored at the library default
     N_CENTROIDS so tiny corpora still get a non-degenerate fit."""
-    import math
-
     return max(N_CENTROIDS, math.ceil(max(int(n_rows), 1) / target_cluster_size))
 
 
@@ -283,7 +376,7 @@ def kmeans_centroids(
     every oracle fixture uses (so the SQL twins' `vec_id < k` seed
     CTEs still mirror exactly), but on a SPARSE id space — a corpus
     filtered by an upstream dedup, ids starting at an offset — the
-    old form silently found fewer (or zero) seeds than k, collapsing
+    filter form would silently find fewer (or zero) seeds than k, collapsing
     the fit and defeating auto_n_centroids' bounded-cluster rule.
     Raises on an empty corpus rather than fitting zero centroids.
 
@@ -449,9 +542,9 @@ def with_centroid_assignment(
 ) -> DataFrame:
     """(vec_id, embedding, centroid_id): row-local argmax-cosine
     assignment against broadcast literal centroids — a pure projection,
-    ZERO shuffle (the round-1 version scored corpus x centroids and
-    ran a row_number window, exchanging N*C rows; at real-IVF C in the
-    thousands that shuffles 1000x the corpus; asserted shuffle-free in
+    ZERO shuffle (scoring corpus x centroids under a row_number window
+    would exchange N*C rows; at real-IVF C in the thousands that
+    shuffles 1000x the corpus; asserted shuffle-free in
     tests/test_plans.py).
 
     Default implementation is the Arrow-batched numpy argmax
@@ -495,7 +588,6 @@ def semantic_dedup(
     threshold: float = 0.92,
     n_centroids: int | None = None,
     cents: list[list[float]] | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
     web-scale through semantic deduplication", 2023 — public arXiv):
@@ -546,24 +638,10 @@ def semantic_dedup(
         spread_for_kernel(emb.select("vec_id", "embedding"), "vec_id"),
         cents,
     ).localCheckpoint()
-    a = asg.select(
-        "centroid_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = asg.select(
-        "centroid_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("emb_b"),
-    )
     hits = (
-        a.join(b, "centroid_id")
+        _cell_pairs(asg, asg)
         .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "b_id",
-            "a_id",
-            _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias("cos"),
-        )
+        .select("b_id", "a_id", _score_cos(a="emb_a", b="emb_b").alias("cos"))
         .filter(F.col("cos") >= threshold)
         .groupBy("b_id")
         .agg(
@@ -584,13 +662,34 @@ def semantic_dedup(
     )
 
 
+def _ivf_probe(
+    emb: DataFrame, n_queries: int, cents: list[list[float]], nprobe: int
+) -> DataFrame:
+    """The IVF probe side: (query_id, q_emb, centroid_id), one row per
+    query and each of its `nprobe` nearest cells."""
+    if nprobe <= 1:
+        # assign the QUERY rows with the vec_id filter BELOW the
+        # kernel: the Arrow assignment UDF is opaque to predicate
+        # pushdown, so filtering the assigned corpus would run the
+        # whole corpus through the quantizer a second time just to
+        # keep n_queries rows. Assignment is row-local, so the rows
+        # are bit-identical either way.
+        return _queries(
+            emb,
+            n_queries,
+            "centroid_id",
+            prep=lambda rows: with_centroid_assignment(rows, cents),
+        )
+    cells = _top_cells_arrow(cents, nprobe)(F.col("embedding"))
+    return _queries(emb, n_queries, F.explode(cells).alias("centroid_id"))
+
+
 def ivf_topk(
     emb: DataFrame,
     n_queries: int = 8,
     k: int = 5,
     n_centroids: int = N_CENTROIDS,
     cents: list[list[float]] | None = None,
-    use_arrow: bool = True,
     nprobe: int = 1,
 ) -> DataFrame:
     """ANN via IVF: probe the query's `nprobe` nearest clusters
@@ -598,44 +697,15 @@ def ivf_topk(
     LSH: clusters adapt to data density, buckets don't. The fit runs
     once and both the corpus and query assignments reuse its literal
     centroids (assignment is a projection, so the probe is a broadcast
-    equi-join on centroid_id carrying n_queries*nprobe rows). Scorer
-    defaults to the Arrow path (same tradeoff as cosine_topk)."""
+    equi-join on centroid_id carrying n_queries*nprobe rows). Scored
+    on the Arrow path (same tradeoff as cosine_topk)."""
     if cents is None:
         cents = kmeans_centroids(emb, n_centroids)
-    with_c = with_centroid_assignment(emb, cents)
-    if nprobe <= 1:
-        # assign the QUERY rows separately, with the vec_id filter
-        # BELOW the kernel: the Arrow assignment UDF is opaque to
-        # predicate pushdown, so filtering with_c would run the
-        # whole corpus through the quantizer a second time just to
-        # keep n_queries rows (round 16, guide §4.1 column/row
-        # discipline). Assignment is row-local, so the rows are
-        # bit-identical either way.
-        q = with_centroid_assignment(
-            emb.filter(F.col("vec_id") < n_queries), cents
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-    else:
-        q = emb.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(
-                _top_cells_arrow(cents, nprobe)(F.col("embedding"))
-            ).alias("centroid_id"),
-        )
-    scored = (
-        with_c.join(F.broadcast(q), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
+    scored = _probe(
+        with_centroid_assignment(emb, cents),
+        _ivf_probe(emb, n_queries, cents, nprobe),
+        _score_cos(),
+        on="centroid_id",
     )
     return topk_per_group(scored, "query_id", "cos", "vec_id", k)
 
@@ -680,29 +750,13 @@ def lsh_buckets(emb: DataFrame) -> DataFrame:
     )
 
 
-def lsh_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, use_arrow: bool = True
-) -> DataFrame:
+def lsh_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     """ANN variant of cosine_topk: candidates restricted to the query's
-    hyperplane bucket, then exact cosine within it. Scorer defaults to
-    the Arrow path (same tradeoff as cosine_topk)."""
+    hyperplane bucket, then exact cosine within it. Scored on the
+    Arrow path (same tradeoff as cosine_topk)."""
     with_b = emb.withColumn("bucket", hyperplane_bucket(F.col("embedding")))
-    q = with_b.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        "bucket",
-    )
-    scored = (
-        with_b.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
-    )
+    q = _queries(with_b, n_queries, "bucket")
+    scored = _probe(with_b, q, _score_cos(), on="bucket")
     return topk_per_group(scored, "query_id", "cos", "vec_id", k)
 
 
@@ -740,10 +794,10 @@ def pq_codebooks(
     round regardless of corpus size."""
     sub_dim = DIM // m_sub
     # Seeds = the k SMALLEST vec_ids (TakeOrdered — k bounded rows to
-    # the driver), mirroring kmeans_centroids: identical to the old
+    # the driver), mirroring kmeans_centroids: identical to a
     # `vec_id < k` filter on the dense 0..N-1 ids the oracle fixtures
     # use, but on a SPARSE id space (post-dedup corpus, offset ids)
-    # the filter form silently found fewer — or zero — seeds than k,
+    # the filter form would find fewer — or zero — seeds than k,
     # collapsing the fit and every PQ/SQ index built on it.
     rows = (
         emb.select("vec_id", "embedding").orderBy("vec_id").limit(k).collect()
@@ -912,20 +966,15 @@ def pq_adc_topk(
     shuffles. Returns (query_id, vec_id, adc_dist, rank)."""
     if books is None:
         books = pq_codebooks(emb)
-    codes = pq_encode(emb, books)
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
+    scored = _probe(
+        pq_encode(emb, books),
+        _queries(emb, n_queries),
+        _adc_dist_expr(books),
+        "adc_dist",
+        cross=True,
     )
-    scored = (
-        codes.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            _adc_dist_expr(books).alias("adc_dist"),
-        )
-    )
+    # the per-query cut inline rather than _shortlist: the no-op int
+    # cast on the public rank column shapes the plan (Window + Project)
     w = Window.partitionBy("query_id").orderBy(
         F.asc("adc_dist"), F.asc("vec_id")
     )
@@ -940,7 +989,6 @@ def pq_refined_topk(
     k: int = 5,
     shortlist: int = 50,
     books: list[list[list[float]]] | None = None,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """The production PQ shape: ADC over compressed codes generates a
     `shortlist`-sized candidate set per query, then the candidates
@@ -956,22 +1004,7 @@ def pq_refined_topk(
     cand = pq_adc_topk(emb, n_queries, shortlist, books).select(
         "query_id", "vec_id"
     )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    rescored = (
-        cand.join(emb, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
-    )
-    return topk_per_group(rescored, "query_id", "cos", "vec_id", k)
+    return _rerank_cos(cand, emb, n_queries, k)
 
 
 def ivfpq_topk(
@@ -981,7 +1014,6 @@ def ivfpq_topk(
     shortlist: int = 20,
     cents: list[list[float]] | None = None,
     books: list[list[list[float]]] | None = None,
-    use_arrow: bool = True,
     nprobe: int = 1,
 ) -> DataFrame:
     """The full FAISS-style IVFPQ search: the IVF coarse quantizer
@@ -1008,61 +1040,22 @@ def ivfpq_topk(
         cents = kmeans_centroids(emb)
     if books is None:
         books = pq_codebooks(emb)
-    asg = with_centroid_assignment(emb, cents, use_arrow)
-    codes = asg.select(
+    codes = with_centroid_assignment(emb, cents).select(
         "vec_id",
         "centroid_id",
         _pq_encode_arrow(books)(F.col("embedding")).alias("codes"),
     )
-    if nprobe <= 1:
-        # filter BELOW the assignment kernel (see ivf_topk): the
-        # probe side otherwise re-runs the quantizer over the whole
-        # corpus to keep n_queries rows — at 100 TB, the difference
-        # between scanning n_queries rows and the corpus
-        probe = with_centroid_assignment(
-            emb.filter(F.col("vec_id") < n_queries), cents, use_arrow
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "centroid_id",
-        )
-    else:
-        probe = emb.filter(F.col("vec_id") < n_queries).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(
-                _top_cells_arrow(cents, nprobe)(F.col("embedding"))
-            ).alias("centroid_id"),
-        )
-    scored = (
-        codes.join(F.broadcast(probe), "centroid_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", _adc_dist_expr(books).alias("adc"))
+    scored = _probe(
+        codes,
+        _ivf_probe(emb, n_queries, cents, nprobe),
+        _adc_dist_expr(books),
+        "adc",
+        on="centroid_id",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("vec_id")
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= shortlist)
-        .select("query_id", "vec_id")
-    )
-    q_base = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    rescored = (
-        cand.join(emb, "vec_id")
-        .join(F.broadcast(q_base), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(F.col("q_emb"), F.col("embedding"), use_arrow).alias(
-                "cos"
-            ),
-        )
-    )
-    return topk_per_group(rescored, "query_id", "cos", "vec_id", k)
+    cand = _shortlist(
+        scored, "query_id", F.asc("adc"), "vec_id", shortlist
+    ).select("query_id", "vec_id")
+    return _rerank_cos(cand, emb, n_queries, k)
 
 
 def similarity_join(
@@ -1070,7 +1063,6 @@ def similarity_join(
     right: DataFrame,
     cents: list[list[float]],
     threshold: float = 0.92,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Cluster-bucketed embedding similarity JOIN between TWO corpora
     — the ANN-join complement of single-query search, and semantic
@@ -1096,25 +1088,13 @@ def similarity_join(
     Cites reference scope: the reference engine has no vector
     operators at all (SURVEY.md §2) — this is LLM-pipeline extension
     surface."""
-    a = with_centroid_assignment(left, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = with_centroid_assignment(right, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("emb_b"),
-    )
     return (
-        a.join(b, "centroid_id")
+        _cell_pairs(left, right, cents)
         .select(
             "a_id",
             "b_id",
             "centroid_id",
-            _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias(
-                "cos"
-            ),
+            _score_cos(a="emb_a", b="emb_b").alias("cos"),
         )
         .filter(F.col("cos") >= F.lit(float(threshold)))
     )
@@ -1125,7 +1105,6 @@ def similarity_join_topk(
     right: DataFrame,
     cents: list[list[float]],
     k: int = 3,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """Per-RIGHT-item top-k nearest LEFT neighbours within its cell —
     similarity_join's ranking variant: entity resolution / provenance
@@ -1135,22 +1114,8 @@ def similarity_join_topk(
     fit, within-cell pairs only — the documented recall trade), then
     WindowGroupLimit per b_id instead of a filter. Returns
     (b_id, a_id, cos, rank)."""
-    from .topk import topk_per_group
-
-    a = with_centroid_assignment(left, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = with_centroid_assignment(right, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("emb_b"),
-    )
-    scored = a.join(b, "centroid_id").select(
-        "b_id",
-        "a_id",
-        _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias("cos"),
+    scored = _cell_pairs(left, right, cents).select(
+        "b_id", "a_id", _score_cos(a="emb_a", b="emb_b").alias("cos")
     )
     return topk_per_group(scored, "b_id", "cos", "a_id", k)
 
@@ -1180,35 +1145,6 @@ def weighted_cosine(a: Column, b: Column, weights: list) -> Column:
         aa = aa + F.lit(float(w)) * x * x
         bb = bb + F.lit(float(w)) * y * y
     return num / (F.sqrt(aa) * F.sqrt(bb))
-
-
-def _wcos_arrow(weights: list):
-    """Arrow-batched weighted cosine, accumulating dimension-by-
-    dimension with the same (w*x)*y association as weighted_cosine
-    and the oracle SQL — bit-identical by construction (the same
-    discipline as _cos_arrow)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    ws = [float(w) for w in weights]
-
-    @pandas_udf("double")
-    def wcos_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.zeros(A.shape[0])
-        aa = np.zeros(A.shape[0])
-        bb = np.zeros(A.shape[0])
-        for d in range(A.shape[1]):
-            w, x, y = ws[d], A[:, d], B[:, d]
-            num = num + (w * x) * y
-            aa = aa + (w * x) * x
-            bb = bb + (w * y) * y
-        return pd.Series(num / (np.sqrt(aa) * np.sqrt(bb)))
-
-    return wcos_batch
 
 
 def similarity_join_reranked(
@@ -1243,31 +1179,16 @@ def similarity_join_reranked(
     rerank cost is |B| * shortlist row-local scores, independent of
     |A|."""
     ws = RERANK_WEIGHTS if weights is None else list(weights)
-    a = with_centroid_assignment(left, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("a_id"),
-        F.col("embedding").alias("emb_a"),
-    )
-    b = with_centroid_assignment(right, cents, use_arrow).select(
-        "centroid_id",
-        F.col("vec_id").alias("b_id"),
-        F.col("embedding").alias("emb_b"),
-    )
-    scored = a.join(b, "centroid_id").select(
+    scored = _cell_pairs(left, right, cents, use_arrow).select(
         "b_id",
         "a_id",
         "emb_a",
         "emb_b",
-        _score_cos(F.col("emb_a"), F.col("emb_b"), use_arrow).alias("cos"),
+        _score_cos(use_arrow, "emb_a", "emb_b").alias("cos"),
     )
-    w = Window.partitionBy("b_id").orderBy(F.desc("cos"), F.asc("a_id"))
-    short = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.lit(int(shortlist)))
-        .drop("__rn")
-    )
+    short = _shortlist(scored, "b_id", F.desc("cos"), "a_id", shortlist)
     wscore = (
-        _wcos_arrow(ws)(F.col("emb_a"), F.col("emb_b"))
+        _pair_kernel("wcos", ws)(F.col("emb_a"), F.col("emb_b"))
         if use_arrow
         else weighted_cosine(F.col("emb_a"), F.col("emb_b"), ws)
     )
@@ -1288,24 +1209,6 @@ def int8_dot(a: Column, b: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
     )
-
-
-def _int8_dot_arrow():
-    """Arrow-batched integer dot — same exact BIGINT result as
-    int8_dot (integer arithmetic commutes; no float-order care
-    needed), ~50x the throughput of the interpreted HOF."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def dot8(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="int64")
-        A = np.stack(a.to_numpy()).astype(np.int64)
-        B = np.stack(b.to_numpy()).astype(np.int64)
-        return pd.Series((A * B).sum(axis=1))
-
-    return dot8
 
 
 def sq_topk(
@@ -1329,47 +1232,16 @@ def sq_topk(
     shortlist cut compiles to WindowGroupLimit (partial top-k before
     the exchange); the re-rank joins full vectors for candidate rows
     ONLY — k·shortlist·|Q| lookups, independent of corpus size."""
-    from pyspark.sql import Window
-
     q8all = quantize_int8(emb)
-    qq = q8all.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("q_embedding").alias("q8"),
+    adc = (_pair_kernel("int8_dot") if use_arrow else int8_dot)(
+        F.col("q_embedding"), F.col("q8")
     )
-    adc = (
-        _int8_dot_arrow()(F.col("q_embedding"), F.col("q8"))
-        if use_arrow
-        else int8_dot(F.col("q_embedding"), F.col("q8"))
-    )
-    scored = (
-        q8all.join(F.broadcast(qq))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", adc.alias("adc"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("adc"), F.asc("vec_id")
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= F.lit(int(shortlist)))
-        .select("query_id", "vec_id")
-    )
-    q_base = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-    )
-    rescored = (
-        cand.join(emb, "vec_id")
-        .join(F.broadcast(q_base), "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            _score_cos(
-                F.col("q_emb"), F.col("embedding"), use_arrow
-            ).alias("cos"),
-        )
-    )
-    return topk_per_group(rescored, "query_id", "cos", "vec_id", k)
+    q8 = _queries(q8all, n_queries, vec="q_embedding", alias="q8")
+    scored = _probe(q8all, q8, adc, "adc")
+    cand = _shortlist(
+        scored, "query_id", F.desc("adc"), "vec_id", shortlist
+    ).select("query_id", "vec_id")
+    return _rerank_cos(cand, emb, n_queries, k, use_arrow)
 
 
 PI_QSCALE = 10_000      # embedding quantization (1e-4 resolution)
@@ -1415,13 +1287,13 @@ def embed_power_iteration(
 
     def _u_relation(v_now: list[int]) -> DataFrame:
         """One round's u_j = Σ_i q_ij·(q_i·v) as an Arrow kernel +
-        64-row final sum (round 15, guide §4.2): the per-partition
+        64-row final sum: the per-partition
         Qᵀ(Qv) product runs as ONE numpy int64 matmul pair per batch
         — every operation is int64 addition/multiplication, which is
         associative and exact under the SAME overflow budget the
-        docstring states, so the result is bit-identical to the
-        previous interpreted zip_with-fold + posexplode form (which
-        evaluated ~dim² interpreted lambda calls per row and exploded
+        docstring states, so the result is bit-identical to an
+        interpreted zip_with-fold + posexplode form (which would
+        evaluate ~dim² interpreted lambda calls per row and explode
         dim× the corpus into the aggregate)."""
         import numpy as np
 
@@ -1505,30 +1377,7 @@ def embed_power_iteration(
     )
 
 
-def _dot_arrow():
-    """Arrow-batched numpy inner product, dimension-sequential like
-    _cos_arrow so scores are bit-identical to the dot(...) expression
-    form and the DuckDB oracle."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def dot_batch(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype(np.float64)
-        B = np.stack(b.to_numpy()).astype(np.float64)
-        num = np.zeros(A.shape[0])
-        for d in range(A.shape[1]):
-            num = num + A[:, d] * B[:, d]
-        return pd.Series(num)
-
-    return dot_batch
-
-
-def mips_topk(
-    emb: DataFrame, n_queries: int = 8, k: int = 5, use_arrow: bool = True
-) -> DataFrame:
+def mips_topk(emb: DataFrame, n_queries: int = 8, k: int = 5) -> DataFrame:
     """Maximum-inner-product search: exact top-k by DOT PRODUCT (not
     cosine) for each query vector — the retrieval objective of
     recommendation / matrix-factorization scorers, where vector NORM
@@ -1541,19 +1390,8 @@ def mips_topk(
     (Shrivastava & Li 2014: append sqrt(M² − ‖x‖²) to data vectors,
     0 to queries) which reduces MIPS to the cosine machinery above —
     the exact scorer here is that ladder's verification tier."""
-    q = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    score = (
-        _dot_arrow()(F.col("q_emb"), F.col("embedding"))
-        if use_arrow
-        else dot(F.col("q_emb"), F.col("embedding"))
-    )
-    scored = (
-        emb.join(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score.alias("ip"))
-    )
+    score = _pair_kernel("dot")(F.col("q_emb"), F.col("embedding"))
+    scored = _probe(emb, _queries(emb, n_queries), score, "ip")
     return topk_per_group(scored, "query_id", "ip", "vec_id", k)
 
 
@@ -1743,6 +1581,9 @@ def centroid_drift(emb: DataFrame, side_col: Column | None = None) -> DataFrame:
 
 MMR_LAMBDA = 0.7
 MMR_SHORTLIST = 16
+# Bound on the pair relation (n_queries * shortlist**2 rows) that
+# mmr_topk collects to the driver.
+MMR_MAX_PAIRS = 1 << 20
 
 
 def mmr_topk(
@@ -1768,14 +1609,27 @@ def mmr_topk(
     constructor constants, never data-sized), so the greedy k-step
     selection runs on the driver over the two collected relations —
     at 100 TB the corpus cost is stage 1 and the selection is a
-    constant-size in-memory argmax. (Round 16, guide §1/§7.1: the
-    previous k−1 relational rounds — 3 joins + a window + a
-    localCheckpoint each over ≤64-row state — were pure AQE/job
-    orchestration, ~7 driver actions per call; this form runs 3.)
-    Scores are bit-identical: the driver applies the SAME IEEE-double
-    expression λ·cos − (1−λ)·maxsim to the Spark-computed cos/sim
-    values, with (1−λ) evaluated in Python exactly as the previous
-    F.lit(1.0 - lam) literal was."""
+    constant-size in-memory argmax (k−1 relational rounds — 3 joins +
+    a window + a localCheckpoint each over ≤64-row state — would be
+    pure AQE/job orchestration, ~7 driver actions per call; this form
+    runs 3). Scores are bit-identical: the driver applies the SAME
+    IEEE-double expression λ·cos − (1−λ)·maxsim to the Spark-computed
+    cos/sim values, with (1−λ) evaluated in Python exactly as the SQL
+    twin's literal is.
+
+    NULL semantics follow the SQL twin: a zero-norm vector has NULL
+    cos/sim; a NULL score sorts after every number (ties by vec_id);
+    a candidate whose pair rows all have NULL sim stays a candidate
+    with a NULL score (SQL max over NULLs); a candidate with no pair
+    row at all is dropped (the twin's inner join). Raises ValueError
+    when n_queries * shortlist**2 exceeds MMR_MAX_PAIRS."""
+    n_pairs = int(n_queries) * int(shortlist) ** 2
+    if n_pairs > MMR_MAX_PAIRS:
+        raise ValueError(
+            f"mmr_topk: n_queries * shortlist**2 = {n_pairs} pair rows "
+            f"exceeds MMR_MAX_PAIRS = {MMR_MAX_PAIRS}; the greedy "
+            "selection collects them to the driver"
+        )
     sl = cosine_topk(emb, n_queries=n_queries, k=shortlist).select(
         "query_id", "vec_id", "cos"
     ).localCheckpoint()
@@ -1804,7 +1658,7 @@ def mmr_topk(
         )
     )
     lam = float(lam)
-    one_minus = 1.0 - lam  # same literal the relational form used
+    one_minus = 1.0 - lam  # same double as the SQL twin's literal
     sl_rows = sl.collect()
     sim: dict = {}
     for r in pairs.collect():
@@ -1824,26 +1678,32 @@ def mmr_topk(
                 if vid in picked:
                     continue
                 if step == 1:
+                    ms = 0.0
+                else:
+                    sims = [
+                        sim[(qid, vid, p)]
+                        for p in picked
+                        if (qid, vid, p) in sim
+                    ]
+                    if not sims:
+                        continue  # no pair row: the twin's inner join drops it
+                    vals = [x for x in sims if x is not None]
+                    ms = max(vals) if vals else None  # SQL max skips NULL
+                if cos is None or ms is None:
+                    score = None
+                elif step == 1:
                     score = lam * cos
                 else:
-                    ms = None
-                    for p in picked:
-                        s = sim.get((qid, vid, p))
-                        if s is not None and (ms is None or s > ms):
-                            ms = s
-                    if ms is None:
-                        continue  # no pair row: drop, as the inner
-                        # join in the relational form did
                     score = lam * cos - one_minus * ms
-                # argmax with (mmr_score DESC, vec_id ASC) tie order
-                if best is None or score > best[0] or (
-                    score == best[0] and vid < best[1]
-                ):
-                    best = (score, vid, cos)
+                # argmax with (mmr_score DESC NULLS LAST, vec_id ASC)
+                key = (score is None, 0.0 if score is None else -score, vid)
+                if best is None or key < best[0]:
+                    best = (key, score, vid, cos)
             if best is None:
                 break
-            picked.append(best[1])
-            out_rows.append((qid, best[1], best[2], best[0], step))
+            _, score, vid, cos = best
+            picked.append(vid)
+            out_rows.append((qid, vid, cos, score, step))
 
     from pyspark.sql import types as T
 
@@ -1928,9 +1788,7 @@ def ndcg_at_k(
     q·k rows."""
     tk = cosine_topk(emb, n_queries=n_queries, k=k)
     labels = emb.select("vec_id", "label")
-    qlab = emb.filter(F.col("vec_id") < n_queries).select(
-        F.col("vec_id").alias("query_id"), F.col("label").alias("q_label")
-    )
+    qlab = _queries(emb, n_queries, vec="label", alias="q_label")
     rel = (F.col("label") == F.col("q_label")).cast("long")
     w = F.element_at(
         F.array(*[F.lit(x) for x in NDCG_W]), F.col("rank")

@@ -269,9 +269,10 @@ FROM embeddings
 
 
 def simsearch_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pandas_udf (Arrow/numpy) variant of brute-force cosine
-    top-k; same oracle as the Catalyst-expression version."""
-    return ss.cosine_topk_pandas(_emb(spark, sf_dir))
+    """Brute-force cosine top-k on the pandas_udf (Arrow/numpy)
+    scorer, kept as its own registry entry so that path stays
+    independently oracle-checked; same oracle as simsearch_topk."""
+    return ss.cosine_topk(_emb(spark, sf_dir))
 
 
 def multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,30 +10,16 @@ Split by domain:
 from __future__ import annotations
 
 from .registry_text import TEXT_QUERIES
+from .registry_relational import RELATIONAL_QUERIES
+from .registry_extensions import EXTENSION_QUERIES
+from .registry_analytics import ANALYTICS_QUERIES
 
-REGISTRY: dict = {}
-REGISTRY.update(TEXT_QUERIES)
-
-try:  # widened incrementally; keep entry importable while building
-    from .registry_relational import RELATIONAL_QUERIES
-
-    REGISTRY.update(RELATIONAL_QUERIES)
-except ImportError:
-    pass
-
-try:
-    from .registry_extensions import EXTENSION_QUERIES
-
-    REGISTRY.update(EXTENSION_QUERIES)
-except ImportError:
-    pass
-
-try:
-    from .registry_analytics import ANALYTICS_QUERIES
-
-    REGISTRY.update(ANALYTICS_QUERIES)
-except ImportError:
-    pass
+REGISTRY: dict = {
+    **TEXT_QUERIES,
+    **RELATIONAL_QUERIES,
+    **EXTENSION_QUERIES,
+    **ANALYTICS_QUERIES,
+}
 
 # Certification-window rotation: the driver's per-round correctness
 # sweep certifies the FIRST 50 entries of this dict in order, so each

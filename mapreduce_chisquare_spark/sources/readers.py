@@ -58,10 +58,6 @@ def scan_parquet(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
-    return {n: scan_parquet(spark, sf_dir, n) for n in names}
-
-
 def scan_json_reviews(spark: SparkSession, path: str) -> DataFrame:
     """S1/S2: NDJSON scan of the reference's native reviews input.
 

@@ -15,10 +15,11 @@ import math
 import sys
 import time
 from collections import Counter
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from mapreduce_chisquare_spark.constants import TABLES  # noqa: E402

@@ -3,14 +3,27 @@ matches DuckDB — the same gate the driver applies at sf0.01."""
 
 from __future__ import annotations
 
-import math
-from collections import Counter
+import importlib.util
+import pathlib
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entry_mod
 from mapreduce_chisquare_spark.constants import TABLES
+
+
+def _check_oracle():
+    """The oracle gate's own module, so the test canonicalizes rows
+    exactly as scripts/check_oracle.py does."""
+    path = pathlib.Path(__file__).parent.parent / "scripts" / "check_oracle.py"
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+row_multiset = _check_oracle().row_multiset
 
 
 @pytest.fixture(scope="module")
@@ -23,27 +36,6 @@ def duck(sf_dir):
     return con
 
 
-def _canon(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        if v == 0:
-            return 0.0
-        return round(v, 9 - 1 - int(math.floor(math.log10(abs(v)))))
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, bytes):
-        return v.hex()
-    if isinstance(v, list):
-        return tuple(_canon(x) for x in v)
-    return v
-
-
-def _multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return Counter(tuple(_canon(r[i]) for i in order) for r in rows)
-
-
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.collect()
@@ -51,10 +43,19 @@ def test_entry_smoke(spark):
     assert df.columns == ["category", "term", "chi2", "rank"]
 
 
-@pytest.mark.slow  # ~9 min: the full registry-vs-DuckDB sweep — the
-# driver's own oracle gate and scripts/check_oracle cover the same
-# ground; runs in the full tier (pytest -m "")
-@pytest.mark.parametrize("name", sorted(entry_mod.queries()))
+def _oracle_param(name):
+    """The similarity-search family (simsearch_*, similarity_join*)
+    runs in the default tier; the rest of the ~9 min registry sweep is
+    `slow` (full tier: pytest -m ""), as scripts/check_oracle covers
+    the same ground."""
+    if name.startswith(("simsearch_", "similarity_join")):
+        return name
+    return pytest.param(name, marks=pytest.mark.slow)
+
+
+@pytest.mark.parametrize(
+    "name", [_oracle_param(n) for n in sorted(entry_mod.queries())]
+)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
     fn = entry_mod.queries()[name]
     sdf = fn(spark, sf_dir)
@@ -68,7 +69,7 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     orows = res.fetchall()
     assert len(srows) == len(orows)
     assert sorted(sdf.columns) == sorted(ocols)
-    assert _multiset(sdf.columns, srows) == _multiset(ocols, orows)
+    assert row_multiset(sdf.columns, srows) == row_multiset(ocols, orows)
 
 
 def test_readme_query_count_in_sync():
@@ -76,7 +77,6 @@ def test_readme_query_count_in_sync():
     — this guard keeps every cited count (README, COVERAGE) from
     drifting from len(REGISTRY), via the script's own --check mode so
     new doc targets are covered automatically."""
-    import pathlib
     import subprocess
     import sys
 

@@ -526,7 +526,7 @@ def test_int8_dot_paths_agree(spark):
         "a array<int>, b array<int>",
     )
     expr = df.select(ss.int8_dot(F2.col("a"), F2.col("b")).alias("d"))
-    arrow = df.select(ss._int8_dot_arrow()(F2.col("a"), F2.col("b")).alias("d"))
+    arrow = df.select(ss._pair_kernel("int8_dot")(F2.col("a"), F2.col("b")).alias("d"))
     want = 1 * 2 + (-127) * 127 + 64 * (-3) + 0 * 9
     assert expr.collect()[0].d == want
     assert arrow.collect()[0].d == want

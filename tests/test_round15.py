@@ -202,6 +202,71 @@ def test_mmr_model_parity(spark):
         assert abs(a - b) < 1e-12
 
 
+def test_mmr_zero_norm_vectors_match_sql_twin(spark, tmp_path):
+    """Two all-zero vectors: cos/sim are NULL (no DIVIDE_BY_ZERO under
+    ANSI), and the driver-side greedy selection orders and keeps the
+    NULL-scored candidates exactly as the DuckDB twin does."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_chisquare_spark.operators.simsearch import mmr_topk
+    from mapreduce_chisquare_spark.plans.ext_round15 import _sql_mmr_topk
+
+    ids = [0, 1, 2, 3, 4]
+    head = [  # padded to the twin's 64 dims
+        [1.0, 0.0, 0.0],
+        [0.0, 0.0, 0.0],
+        [0.0, 0.0, 0.0],
+        [1.0, 1.0, 0.0],
+        [0.0, 1.0, 0.5],
+    ]
+    vecs = [h + [0.0] * 61 for h in head]
+    emb = spark.createDataFrame(
+        [(i, v, "a") for i, v in zip(ids, vecs)],
+        "vec_id long, embedding array<float>, label string",
+    )
+    cols = "query_id, vec_id, cos, mmr_score, step"
+    got = [
+        tuple(r)
+        for r in mmr_topk(emb, n_queries=2, shortlist=4, k=3)
+        .select(*cols.split(", "))
+        .collect()
+    ]
+
+    path = tmp_path / "embeddings.parquet"
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(ids, pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array(["a"] * len(ids)),
+            }
+        ),
+        path,
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}')"
+    )
+    want = con.execute(
+        f"SELECT {cols} FROM ({_sql_mmr_topk(nq=2, m=4, k=3)})"
+    ).fetchall()
+    by_step = lambda r: (r[0], r[4])  # noqa: E731
+    assert sorted(got, key=by_step) == sorted(want, key=by_step)
+    assert any(r[3] is None for r in got)  # the NULL path is exercised
+
+
+def test_mmr_pair_bound_fails_loudly(spark):
+    from mapreduce_chisquare_spark.operators.simsearch import (
+        MMR_MAX_PAIRS,
+        mmr_topk,
+    )
+
+    with pytest.raises(ValueError, match="MMR_MAX_PAIRS"):
+        mmr_topk(_toy_emb(spark), n_queries=2, shortlist=MMR_MAX_PAIRS)
+
+
 def test_centroid_drift_identical_slices(spark):
     """Slices with IDENTICAL vectors must read cos = 1, drift = 0
     exactly (integer sums make the two centroids equal)."""
