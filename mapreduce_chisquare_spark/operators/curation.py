@@ -512,23 +512,17 @@ def split_no_leakage(
     localCheckpoints its labels) WHEN THIS FUNCTION IS CALLED — the
     select_token_budget semantics; timing consumers must wrap the
     builder call plus the action (bench.py does). The iteration must
-    CONVERGE (it raises otherwise): a max_iter-truncated label is
-    non-minimal on pathological long-chain components, which would
-    silently split a cluster across the train/test boundary — the
-    exact leak this operator exists to prevent (and would diverge
-    from the exact transitive-closure oracle). Propagation finishes
+    CONVERGE (components_over_pairs raises otherwise): a
+    max_iter-truncated label is non-minimal on pathological
+    long-chain components, which would silently split a cluster
+    across the train/test boundary — the exact leak this operator
+    exists to prevent (and would diverge from the exact
+    transitive-closure oracle). Propagation finishes
     in graph-diameter rounds; the 100k-doc planted-skew stress
     converges in 10 of the default 20."""
     from .dedup import neardup_components
 
-    stats: dict = {}
-    comp = neardup_components(docs, text_col, stats=stats)
-    if not stats.get("converged", False):
-        raise RuntimeError(
-            "split_no_leakage: component labels did not converge in "
-            f"{stats.get('rounds')} rounds — raise max_iter rather "
-            "than risk splitting a near-dup cluster across splits"
-        )
+    comp = neardup_components(docs, text_col)
     gid = F.coalesce(F.col("component_id"), F.col("doc_id"))
     return (
         docs.select("doc_id")

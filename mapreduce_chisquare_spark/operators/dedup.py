@@ -738,10 +738,11 @@ def neardup_components(
     checkpoint dir on a real cluster), the classic Spark pattern for
     iterative algorithms; the driver only sees one scalar per round.
 
-    stats, when given, receives {"rounds": n, "converged": bool} —
-    the scale-stress suite uses it to assert the propagation stays
-    inside graph-diameter rounds on planted mega-clusters instead of
-    crawling to the max_iter cap.
+    stats, when given, receives {"rounds": n} — the scale-stress
+    suite uses it to assert the propagation stays inside
+    graph-diameter rounds on planted mega-clusters instead of
+    crawling to the max_iter cap. Raises RuntimeError when max_iter
+    rounds pass without a fixed point (see components_over_pairs).
     """
     pairs = minhash_candidate_pairs(docs, text_col).select("doc_a", "doc_b")
     return components_over_pairs(pairs, max_iter=max_iter, stats=stats)
@@ -753,9 +754,15 @@ def components_over_pairs(
     stats: dict | None = None,
 ) -> DataFrame:
     """The label-propagation core of neardup_components over ANY
-    (doc_a, doc_b) pair relation — round 9 extracts it so the image
-    near-dup tier (operators/imagehash.py pairs) runs the identical
-    iteration; semantics and plan unchanged for the MinHash caller."""
+    (doc_a, doc_b) pair relation, shared by the image near-dup tier
+    and entity-resolution clusters (linkage.match_clusters).
+
+    Non-convergence is an ERROR: a label cut off by max_iter is not
+    its component's minimum, so a long-chain component would come
+    back split into several wrong ids. If max_iter rounds pass and
+    the last one still changed a label, RuntimeError is raised
+    instead (the graph.connected_components_star policy). `stats`,
+    when given, receives {"rounds": n}."""
     pairs = pairs.select("doc_a", "doc_b")
     edges = (
         pairs.union(pairs.select(F.col("doc_b"), F.col("doc_a")))
@@ -768,10 +775,7 @@ def components_over_pairs(
         .distinct()
         .withColumn("label", F.col("id"))
     )
-    rounds = 0
-    converged = False
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, int(max_iter) + 1):
         neigh = (
             edges.join(
                 labels.select(
@@ -802,11 +806,15 @@ def components_over_pairs(
         changed = stepped.filter(F.col("changed")).count()
         labels = stepped.select("id", F.col("new_label").alias("label"))
         if changed == 0:
-            converged = True
             break
+    else:
+        raise RuntimeError(
+            "components_over_pairs: labels did not reach a fixed point "
+            f"within max_iter={max_iter} rounds — component ids would "
+            "be partial (wrong); raise max_iter"
+        )
     if stats is not None:
         stats["rounds"] = rounds
-        stats["converged"] = converged
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("component_id")
     )

@@ -1,51 +1,121 @@
-"""Graph analytics over relational edge lists: PageRank and triangle
-counting — the two graph questions a training-data pipeline actually
-asks of its corpus (link-based document importance for curation
-weighting; community density / clustering structure for sampling
-audits). The reference's surface has no graph tier
-(SURVEY.md §2 ends at joins/top-k); these extend the engine the way
-its mrjob lineage was historically extended (PageRank IS the original
-MapReduce showcase) — but expressed as DataFrame plans, not chained
-jobs.
+"""Graph analytics over relational edge lists, expressed as DataFrame
+plans (PageRank is the original chained-MapReduce showcase; the
+reference's surface ends at joins/top-k, SURVEY.md §2). Nine
+operators:
 
-Cross-engine exactness: PageRank runs in FIXED-POINT INTEGER
-arithmetic (ranks are BIGINT multiples of 1/SCALE) with a fixed
-iteration count, so both engines produce bit-identical ranks — no
-float-summation-order drift across 10^6 partial aggregates, which is
-exactly the failure mode a float PageRank has at cluster scale.
-Triangle counting is integer throughout.
+  pagerank, personalized_pagerank   fixed-point link importance
+  hits                               fixed-point hub/authority scores
+  triangle_counts                    degree-oriented triangle counting
+  basket_rules                       support/confidence/lift rules
+  label_propagation                  synchronous LPA communities
+  kcore_peel                         fixed-round k-core peeling
+  jaccard_link_prediction            hub-guarded common-neighbour Jaccard
+  connected_components_star          large-star/small-star components
+
+Cross-engine exactness: every iterative state (rank, label, degree,
+edge set) is integer. PageRank and HITS run in FIXED-POINT arithmetic
+(BIGINT multiples of 1/scale) for a fixed round count, so the Spark
+operator and its DuckDB twin produce bit-identical results under any
+partitioning — no float-summation-order drift across 10^6 partial
+aggregates, the failure mode a float PageRank has at cluster scale.
+The only doubles (rule confidence/lift, link Jaccard) are single
+shared quotients of integer counts.
+
+Checkpoint per round: every iterative operator materializes its state
+(localCheckpoint) once per round. That truncates lineage, and it is
+the only cadence that measured safe: checkpointing every second round
+made the next round's broadcast subtrees recompute the
+un-checkpointed step and ran slower (OPTIMIZATION_r15.md,
+OPTIMIZATION_r16.md).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 10**12  # ranks are integer multiples of 1e-12
 PR_ITERATIONS = 10
 PR_DAMP_NUM = 85  # d = 85/100
 PR_DAMP_DEN = 100
-# Checkpoint cadence history: round 15 measured K=1 (materialize the
-# mass relation every full iteration) as the only safe cadence — K=2
-# made the next round's broadcast subtrees recompute un-checkpointed
-# half-steps and was SLOWER. Round 16 moved hits() to per-HALF raw
-# checkpoints with driver-collected L1 totals (see hits docstring),
-# which removed the broadcast subtrees entirely, so the K knob is
-# gone; pagerank/personalized_pagerank keep their original
-# per-round-checkpoint bodies (the same collected-scalar restructure
-# measured parity-to-worse there — OPTIMIZATION_r16.md).
 
-# Diagnostic: iterations the last pagerank()/personalized_pagerank()
-# call actually executed (== `iterations` unless tol stopped it
-# early). Read by tests and ops tooling; never an input.
-LAST_PR_ITERATIONS = 0
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The symmetrized (a, b) relation of an undirected `lo`/`hi`
+    edge list: both directions, self-loops dropped, deduped,
+    materialized once for the rounds that re-join it."""
+    return (
+        edges.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
+        .union(
+            edges.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
+        )
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+        .localCheckpoint()
+    )
+
+
+def _node_set(e: DataFrame, *extra: DataFrame) -> DataFrame:
+    """The materialized `node` set of a directed `src`/`dst` edge
+    relation, united with any `extra` single-column node relations."""
+    nodes = e.select(F.col("src").alias("node")).union(
+        e.select(F.col("dst").alias("node"))
+    )
+    for x in extra:
+        nodes = nodes.union(x)
+    return nodes.distinct().localCheckpoint()
+
+
+def _pagerank_rounds(
+    e: DataFrame,
+    nodes: DataFrame,
+    r0: Column,
+    restart: int,
+    update: Column,
+    iterations: int,
+) -> DataFrame:
+    """The PageRank round shared by pagerank() and
+    personalized_pagerank(): starting from r0 over `nodes`, each round
+    joins r(u) div outdeg(u) onto the edges (contrib, keyed by src),
+    sums it per dst (`s`), broadcasts the 1-row dangling share
+    (sink mass div `restart`, `ds`) and evaluates `update` per node
+    over (node, s, ds). The rank state is checkpointed per round."""
+    outdeg = (
+        e.groupBy(F.col("src").alias("node"))
+        .agg(F.count("*").alias("deg"))
+        .localCheckpoint()
+    )
+    ranks = nodes.select("node", r0.cast("long").alias("r")).localCheckpoint()
+    for _ in range(int(iterations)):
+        contrib = ranks.join(outdeg, "node").select(
+            F.col("node").alias("src"),
+            F.expr("r div deg").alias("contrib"),
+        )
+        incoming = (
+            e.join(contrib, "src")
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum("contrib").cast("long").alias("s"))
+        )
+        dang = (
+            ranks.join(outdeg, "node", "left_anti")
+            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("sr"))
+            .select(
+                F.expr(f"sr div CAST({int(restart)} AS BIGINT)").alias("ds")
+            )
+        )
+        ranks = (
+            nodes.join(incoming, "node", "left")
+            .crossJoin(F.broadcast(dang))
+            .select("node", update.cast("long").alias("r"))
+            .localCheckpoint()
+        )
+    return ranks.select("node", F.col("r").alias("rank_fp"))
 
 
 def pagerank(
     edges: DataFrame,
     iterations: int = PR_ITERATIONS,
     scale: int = PR_SCALE,
-    tol: float | None = None,
 ) -> DataFrame:
     """Fixed-point integer PageRank over a directed edge list
     (columns `src`, `dst`; duplicates allowed — deduped here).
@@ -68,96 +138,25 @@ def pagerank(
     the canonical two exchanges (contrib join on src, incoming agg on
     dst) over |E|, plus one 1-row dangling aggregate broadcast back —
     never a driver-side rank table. Rank state is |V| rows,
-    checkpointed per round to truncate lineage (the
-    dedup_components discipline). Build-time freeze: N and the node
-    set reflect the edges at call time.
-
-    Early exit: with `tol` set, iteration stops once
-    max_v |r'(v) - r(v)| <= tol * scale — one extra 1-row max
-    aggregate per round over the rank relation both rounds already
-    materialized (the per-round checkpoint makes the comparison
-    cheap and lineage-safe). Default tol=None keeps the fixed
-    iteration count, which is the cross-engine contract the
-    registered oracle twins unroll — registered entries never pass
-    tol. LAST_PR_ITERATIONS records how many rounds actually ran.
+    checkpointed per round to truncate lineage. Build-time freeze: N
+    and the node set reflect the edges at call time.
     """
-    global LAST_PR_ITERATIONS
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _node_set(e)
     n = nodes.count()
     if n == 0:
         # empty edge relation: an empty rank table, not ZeroDivisionError
         return nodes.select(
             "node", F.lit(0).cast("long").alias("rank_fp")
         )
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
     base = (scale * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * n)
-    ranks = nodes.select(
-        "node", F.lit(scale // n).cast("long").alias("r")
-    ).localCheckpoint()
-    tol_fp = None if tol is None else int(tol * scale)
-    LAST_PR_ITERATIONS = 0
-    for _ in range(int(iterations)):
-        prev = ranks
-        contrib = (
-            ranks.join(outdeg, "node")
-            .select(
-                F.col("node").alias("src"),
-                F.expr("r div deg").alias("contrib"),
-            )
-        )
-        incoming = (
-            e.join(contrib, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("contrib").cast("long").alias("s"))
-        )
-        dang = (
-            ranks.join(outdeg, "node", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("sr"))
-            .select(F.expr(f"sr div CAST({int(n)} AS BIGINT)").alias("ds"))
-        )
-        ranks = (
-            nodes.join(incoming, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.lit(base)
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * (COALESCE(s, CAST(0 AS BIGINT))"
-                        f" + ds)) div {PR_DAMP_DEN}"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-        LAST_PR_ITERATIONS += 1
-        if tol_fp is not None:
-            delta = (
-                ranks.join(
-                    prev.select("node", F.col("r").alias("r_prev")),
-                    "node",
-                )
-                .agg(
-                    F.coalesce(
-                        F.max(F.abs(F.col("r") - F.col("r_prev"))),
-                        F.lit(0),
-                    ).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            if delta <= tol_fp:
-                break
-    return ranks.select("node", F.col("r").alias("rank_fp"))
+    update = F.lit(base) + F.expr(
+        f"({PR_DAMP_NUM} * (COALESCE(s, CAST(0 AS BIGINT))"
+        f" + ds)) div {PR_DAMP_DEN}"
+    )
+    return _pagerank_rounds(
+        e, nodes, F.lit(scale // n), n, update, iterations
+    )
 
 
 def triangle_counts(
@@ -266,7 +265,6 @@ def personalized_pagerank(
     seeds: list,
     iterations: int = PR_ITERATIONS,
     scale: int = PR_SCALE,
-    tol: float | None = None,
 ) -> DataFrame:
     """Personalized (topic-sensitive) PageRank — the relevance
     propagator behind 'more like these' corpus expansion: identical
@@ -282,96 +280,29 @@ def personalized_pagerank(
     the seed set; nodes unreachable from it stay at 0 — exactly the
     semantics seed-expansion curation wants. Seeds absent from the
     graph still receive restart mass (standard PPR: the restart
-    vector is over S, not over V ∩ S). Same scale shape,
-    bit-identical-BIGINT guarantees, and `tol` early-exit contract as
-    pagerank(); the DuckDB twin unrolls iterations with the seed set
-    as a literal relation (registered entries never pass tol)."""
-    global LAST_PR_ITERATIONS
+    vector is over S, not over V ∩ S). Same round, scale shape and
+    bit-identical-BIGINT guarantees as pagerank(); the DuckDB twin
+    unrolls the iterations with the seed set as a literal relation."""
     seeds = sorted(set(seeds))
     if not seeds:
         raise ValueError("personalized_pagerank needs >= 1 seed")
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    spark = edges.sparkSession
-    seed_df = spark.createDataFrame(
+    seed_df = edges.sparkSession.createDataFrame(
         [(s,) for s in seeds], "node string"
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .union(seed_df.select("node"))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _node_set(e, seed_df.select("node"))
     ns = len(seeds)
-    outdeg = (
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
     base = (scale * (PR_DAMP_DEN - PR_DAMP_NUM)) // (PR_DAMP_DEN * ns)
     is_seed = F.col("node").isin(seeds)
-    ranks = nodes.select(
-        "node",
-        F.when(is_seed, F.lit(scale // ns))
-        .otherwise(F.lit(0))
-        .cast("long")
-        .alias("r"),
-    ).localCheckpoint()
-    tol_fp = None if tol is None else int(tol * scale)
-    LAST_PR_ITERATIONS = 0
-    for _ in range(int(iterations)):
-        prev = ranks
-        contrib = ranks.join(outdeg, "node").select(
-            F.col("node").alias("src"),
-            F.expr("r div deg").alias("contrib"),
-        )
-        incoming = (
-            e.join(contrib, "src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.sum("contrib").cast("long").alias("s"))
-        )
-        dang = (
-            ranks.join(outdeg, "node", "left_anti")
-            .agg(F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("sr"))
-            .select(F.expr(f"sr div CAST({ns} AS BIGINT)").alias("ds"))
-        )
-        ranks = (
-            nodes.join(incoming, "node", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                (
-                    F.when(
-                        is_seed,
-                        F.lit(base)
-                        + F.expr(f"({PR_DAMP_NUM} * ds) div {PR_DAMP_DEN}"),
-                    ).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({PR_DAMP_NUM} * COALESCE(s, CAST(0 AS BIGINT)))"
-                        f" div {PR_DAMP_DEN}"
-                    )
-                ).cast("long").alias("r"),
-            )
-            .localCheckpoint()
-        )
-        LAST_PR_ITERATIONS += 1
-        if tol_fp is not None:
-            delta = (
-                ranks.join(
-                    prev.select("node", F.col("r").alias("r_prev")),
-                    "node",
-                )
-                .agg(
-                    F.coalesce(
-                        F.max(F.abs(F.col("r") - F.col("r_prev"))),
-                        F.lit(0),
-                    ).alias("d")
-                )
-                .collect()[0]["d"]
-            )
-            if delta <= tol_fp:
-                break
-    return ranks.select("node", F.col("r").alias("rank_fp"))
+    r0 = F.when(is_seed, F.lit(scale // ns)).otherwise(F.lit(0))
+    update = F.when(
+        is_seed,
+        F.lit(base) + F.expr(f"({PR_DAMP_NUM} * ds) div {PR_DAMP_DEN}"),
+    ).otherwise(F.lit(0)) + F.expr(
+        f"({PR_DAMP_NUM} * COALESCE(s, CAST(0 AS BIGINT)))"
+        f" div {PR_DAMP_DEN}"
+    )
+    return _pagerank_rounds(e, nodes, r0, ns, update, iterations)
 
 
 def basket_rules(
@@ -476,28 +407,18 @@ def label_propagation(
     round is the canonical pair — one join carrying (node, lbl) over
     |E|, one (node, lbl) count aggregate, one per-node window argmax
     on the SAME node partitioning. (A min(struct(-c, lbl)) aggregate
-    argmax was TRIED in round 15 and reverted: a struct-typed agg
-    buffer forces ObjectHashAggregate and measured slower than the
-    WindowGroupLimit-eligible row_number form.) Label state is |V|
+    argmax measured slower: a struct-typed agg buffer forces
+    ObjectHashAggregate, where the row_number form is
+    WindowGroupLimit-eligible.) Label state is |V|
     rows, checkpointed per round to truncate lineage. No driver
     state; the round count, not |V|, bounds the chain."""
-    sym = (
-        edges.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        .union(
-            edges.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected(edges)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
         .localCheckpoint()
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("node").orderBy(F.desc("c"), F.asc("lbl"))
     for _ in range(int(iterations)):
         nb = sym.join(
@@ -539,16 +460,7 @@ def kcore_peel(
     all on the node key; the edge relation is checkpointed per round
     (lineage discipline), state is |E| rows and shrinks
     monotonically. No driver state beyond the loop counter."""
-    sym = (
-        edges.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        .union(
-            edges.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
-    e = sym
+    e = _undirected(edges)
     for _ in range(int(rounds)):
         deg = e.groupBy("a").agg(F.count("*").alias("deg"))
         keep = deg.filter(F.col("deg") >= F.lit(int(k))).select("a")
@@ -592,15 +504,7 @@ def jaccard_link_prediction(
     aggregate; existing edges leave via one anti-join; the head is a
     TakeOrdered. Ties cannot drift: equal rationals compare equal as
     doubles, and (a, b) breaks the rest."""
-    sym = (
-        edges.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-        .union(
-            edges.select(F.col("hi").alias("a"), F.col("lo").alias("b"))
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint()
-    )
+    sym = _undirected(edges)
     deg = sym.groupBy("a").agg(F.count("*").alias("deg"))
     centers = deg.filter(F.col("deg") <= F.lit(int(max_deg))).select(
         F.col("a").alias("n")
@@ -676,34 +580,31 @@ def hits(
     Scale shape: the deduped edge relation is materialized ONCE and
     re-joined per half-step; each half-step is the canonical two
     exchanges (mass join on one endpoint, aggregate on the other).
-    Round-15 restructure (guide §2.4): zero-mass nodes stay IMPLICIT
-    through the loop — a node absent from the mass relation
+    Zero-mass nodes stay IMPLICIT through the loop — a node absent from the mass relation
     contributes nothing to the next push and nothing to the L1 total,
     exactly like an explicit 0 row — so the per-half |V|-row
     nodes⟕raw join (16 joins at 8 iterations) is gone; the full node
     set is re-attached ONCE at the end with COALESCE(·, 0).
 
-    Round-16 restructure (guide §1/§7.1, measured A/B in
-    OPTIMIZATION_r16.md): each half-step checkpoints the RAW
-    (pre-renorm) aggregate and computes its 1-row L1 total as a
-    driver-collected scalar off the checkpointed rows — control-plane
-    only, never data-sized (§5) — so the renorm becomes a NARROW
+    Each half-step checkpoints the RAW (pre-renorm) aggregate and
+    collects its 1-row L1 total as a driver-side scalar — control
+    plane only, never data-sized — so the renorm is a NARROW
     literal-divisor projection over the checkpoint instead of a
-    crossJoin against a broadcast 1-row subtree. The previous shape
-    stacked two half-steps and two broadcast-total subtrees into one
-    AQE job per round; materializing at the raw aggregate instead
-    measured 14.1 → 10.6 s at sf0.1 (bit-identical output asserted).
-    Nodes with no incoming (or outgoing) edges carry authority (hub)
-    0 — kept in the output, not dropped."""
+    crossJoin against a broadcast 1-row subtree (measured
+    14.1 → 10.6 s at sf0.1 against the broadcast-total shape,
+    OPTIMIZATION_r16.md). Nodes with no incoming (or outgoing) edges
+    carry authority (hub) 0 — kept in the output, not dropped.
+
+    Executor loss: the returned relation is NOT recomputable from
+    lineage. Each half-step's divisor is a driver-computed literal and
+    its input is a localCheckpoint block, so a block lost with its
+    executor fails the query instead of being recomputed; rerun the
+    call (or use a reliable checkpoint directory on a cluster that
+    loses executors)."""
     if int(iterations) < 1:
         raise ValueError("iterations must be >= 1")
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
+    nodes = _node_set(e)
     n = nodes.count()
     if n == 0:
         return nodes.select(
@@ -741,9 +642,7 @@ def hits(
             F.expr(f"raw div CAST({d} AS BIGINT)").cast("long").alias("m"),
         )
 
-    a = None
-    iters = int(iterations)
-    for _ in range(iters):
+    for _ in range(int(iterations)):
         a = _half(h, "src", "dst")
         h = _half(a, "dst", "src")
     return (
@@ -767,7 +666,6 @@ def connected_components_star(
     edges: DataFrame,
     max_iter: int = 20,
     stats: dict | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components by LARGE-STAR / SMALL-STAR alternation
     (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii — "Connected
@@ -787,9 +685,9 @@ def connected_components_star(
     (localCheckpoint); convergence = the round's edge set equals the
     previous one, checked with ONE +1/-1 tag-sum aggregate over the
     union of the two (distinct) edge sets — the symmetric difference
-    is exactly the keys whose tags don't cancel (round 15, guide
-    §2.4; star-contracted edge sets shrink toward one edge per
-    non-root node, so late rounds get cheaper). High-degree skew
+    is exactly the keys whose tags don't cancel (star-contracted edge
+    sets shrink toward one edge per non-root node, so late rounds get
+    cheaper). High-degree skew
     is the algorithm's own medicine: large-star re-hangs a heavy
     node's neighbors onto its min neighbor, splitting the star.
 
@@ -797,12 +695,11 @@ def connected_components_star(
     minimum node; any orderable node type works. Isolated nodes never
     appear in an edge relation and are (documented) absent.
 
-    Non-convergence is an ERROR by default: if max_iter rounds pass
-    without the edge set reaching a fixed point, the component ids
-    would be silently partial (wrong), so `strict=True` raises
-    RuntimeError instead of returning them. Pass `strict=False` (and
-    a `stats` dict, whose `converged` flag you must then check) only
-    for diagnostic runs.
+    Non-convergence is an ERROR (the dedup.components_over_pairs
+    policy): if max_iter rounds pass without the edge set reaching a
+    fixed point, the component ids would be partial (wrong), so
+    RuntimeError is raised instead of returning them. `stats`, when
+    given, receives {"rounds": n}.
     """
     e = (
         edges.select(F.col(edges.columns[0]).alias("src"),
@@ -811,8 +708,6 @@ def connected_components_star(
         .distinct()
         .localCheckpoint()
     )
-    rounds = 0
-    converged = False
 
     def _large_star(ed: DataFrame) -> DataFrame:
         sym = ed.union(ed.select("dst", "src").toDF("src", "dst"))
@@ -846,14 +741,12 @@ def connected_components_star(
             .distinct()
         )
 
-    for _ in range(max_iter):
-        rounds += 1
+    for rounds in range(1, int(max_iter) + 1):
         stepped = _small_star(_large_star(e)).localCheckpoint()
         # bounded convergence check: both relations are DISTINCT edge
         # sets, so the symmetric difference is exactly the keys whose
-        # +1/-1 tags don't cancel — ONE aggregate job instead of the
-        # two exceptAll counts this used per round (round-15, guide
-        # §2.4: the two relations are scanned once each, one exchange)
+        # +1/-1 tags don't cancel — ONE aggregate job (each relation
+        # scanned once, one exchange) instead of two exceptAll counts
         changed = (
             stepped.select("src", "dst", F.lit(1).alias("__t"))
             .unionAll(e.select("src", "dst", F.lit(-1).alias("__t")))
@@ -864,18 +757,15 @@ def connected_components_star(
         )
         e = stepped
         if changed == 0:
-            converged = True
             break
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if strict and not converged:
+    else:
         raise RuntimeError(
             "connected_components_star: edge set did not reach a fixed "
             f"point within max_iter={max_iter} rounds — component ids "
-            "would be partially contracted (wrong). Raise max_iter, or "
-            "pass strict=False with a stats dict for diagnostics."
+            "would be partially contracted (wrong); raise max_iter"
         )
+    if stats is not None:
+        stats["rounds"] = rounds
     sym = e.union(e.select("dst", "src").toDF("src", "dst"))
     return sym.groupBy(F.col("src").alias("node")).agg(
         F.least(F.min("dst"), F.col("src")).alias("component_id")

@@ -35,27 +35,24 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # PageRank over the customer -> supplier trade graph
 # =========================================================================
 
-def graph_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point integer PageRank (operators/graph.py) over the
-    customer->supplier trade graph: a directed edge C<custkey> ->
-    S<suppkey> for every distinct (customer, supplier) pair connected
-    through orders x lineitem. Suppliers are sinks — the dangling-mass
-    redistribution path is exercised on every iteration, not just in
-    tests."""
+def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer->supplier trade graph shared by PageRank, PPR and
+    HITS: a directed edge C<custkey> -> S<suppkey> per order line
+    (orders x lineitem); the operators dedupe it to one edge per
+    (customer, supplier) pair."""
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
+    return orders.join(li, orders.o_orderkey == li.l_orderkey).select(
+        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("src"),
+        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("dst"),
     )
-    return pagerank(edges)
+
+
+def graph_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fixed-point integer PageRank (operators/graph.py) over the
+    trade graph. Suppliers are sinks — the dangling-mass redistribution
+    path is exercised on every iteration, not just in tests."""
+    return pagerank(_trade_edges(spark, sf_dir))
 
 
 def _sql_pagerank(
@@ -123,17 +120,45 @@ _TRI_PLANT = [
 ]
 
 
+def _coorder_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o_key, p_key) order-part incidences from lineitem, plus the
+    planted K4 orders."""
+    li = _t(spark, sf_dir, "lineitem")
+    return li.select(
+        F.col("l_orderkey").alias("o_key"),
+        F.col("l_partkey").alias("p_key"),
+    ).union(spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long"))
+
+
+def _coorder_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The support-2 co-order part graph with the planted K4, as an
+    undirected (lo, hi) edge list (lo < hi): two parts are adjacent
+    when they co-occur in at least 2 distinct orders. Shared by LPA,
+    k-core and link prediction."""
+    op = _coorder_parts(spark, sf_dir).distinct()
+    a, b = op.alias("a"), op.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.o_key") == F.col("b.o_key"))
+            & (F.col("a.p_key") < F.col("b.p_key")),
+        )
+        .groupBy(
+            F.col("a.p_key").alias("lo"), F.col("b.p_key").alias("hi")
+        )
+        .agg(F.count("*").alias("supp"))
+        .filter(F.col("supp") >= 2)
+        .select("lo", "hi")
+    )
+
+
 def graph_triangles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-oriented triangle counting (operators/graph.py) over
     the support-2 co-order part graph, plus a planted K4 so the gate
     always certifies real triangles."""
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
+    return triangle_counts(
+        _coorder_parts(spark, sf_dir), min_support=2, top=20
     )
-    plant = spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    return triangle_counts(op.union(plant), min_support=2, top=20)
 
 
 def _sql_triangles(min_support: int = 2, top: int = 20) -> str:
@@ -741,13 +766,9 @@ def graph_ppr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer->supplier edges."""
     from ..operators.graph import personalized_pagerank
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    edges = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("src"),
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("dst"),
+    return personalized_pagerank(
+        _trade_edges(spark, sf_dir), list(_PPR_SEEDS)
     )
-    return personalized_pagerank(edges, list(_PPR_SEEDS))
 
 
 def _sql_ppr(
@@ -935,13 +956,7 @@ def basket_rules_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest SF)."""
     from ..operators.graph import basket_rules
 
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
-    )
-    plant = spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    return basket_rules(op.union(plant), min_support=2, k=50)
+    return basket_rules(_coorder_parts(spark, sf_dir), min_support=2, k=50)
 
 
 def _sql_basket_rules(min_support: int = 2, k: int = 50) -> str:
@@ -1405,28 +1420,7 @@ def graph_label_propagation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense subsets."""
     from ..operators.graph import label_propagation
 
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
-    ).union(
-        spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    ).distinct()
-    a, b = op.alias("a"), op.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o_key") == F.col("b.o_key"))
-            & (F.col("a.p_key") < F.col("b.p_key")),
-        )
-        .groupBy(
-            F.col("a.p_key").alias("lo"), F.col("b.p_key").alias("hi")
-        )
-        .agg(F.count("*").alias("supp"))
-        .filter(F.col("supp") >= 2)
-        .select("lo", "hi")
-    )
-    return label_propagation(edges)
+    return label_propagation(_coorder_edges(spark, sf_dir))
 
 
 def _sql_label_propagation(iterations: int = 3) -> str:
@@ -1731,28 +1725,7 @@ def graph_kcore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     guarantees a non-empty 3-core, organic hairs peel away."""
     from ..operators.graph import kcore_peel
 
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
-    ).union(
-        spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    ).distinct()
-    a, b = op.alias("a"), op.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o_key") == F.col("b.o_key"))
-            & (F.col("a.p_key") < F.col("b.p_key")),
-        )
-        .groupBy(
-            F.col("a.p_key").alias("lo"), F.col("b.p_key").alias("hi")
-        )
-        .agg(F.count("*").alias("supp"))
-        .filter(F.col("supp") >= 2)
-        .select("lo", "hi")
-    )
-    return kcore_peel(edges, k=3)
+    return kcore_peel(_coorder_edges(spark, sf_dir), k=3)
 
 
 def _sql_kcore(k: int = 3, rounds: int = 4) -> str:
@@ -1864,28 +1837,7 @@ def graph_linkpred_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs by common-neighbor Jaccard."""
     from ..operators.graph import jaccard_link_prediction
 
-    li = _t(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
-    ).union(
-        spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    ).distinct()
-    a, b = op.alias("a"), op.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.o_key") == F.col("b.o_key"))
-            & (F.col("a.p_key") < F.col("b.p_key")),
-        )
-        .groupBy(
-            F.col("a.p_key").alias("lo"), F.col("b.p_key").alias("hi")
-        )
-        .agg(F.count("*").alias("supp"))
-        .filter(F.col("supp") >= 2)
-        .select("lo", "hi")
-    )
-    return jaccard_link_prediction(edges)
+    return jaccard_link_prediction(_coorder_edges(spark, sf_dir))
 
 
 def _sql_linkpred(k: int = 50, max_deg: int = 200) -> str:
@@ -1953,20 +1905,7 @@ def graph_hits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     round, not just in unit tests."""
     from ..operators.graph import hits
 
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    edges = (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .select(
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-    )
-    return hits(edges)
+    return hits(_trade_edges(spark, sf_dir))
 
 
 def _sql_hits(iterations: int | None = None, scale: int | None = None) -> str:

@@ -67,42 +67,6 @@ def test_pagerank_uniform_cycle_is_uniform(spark):
     assert ranks == _py_pagerank(edges)
 
 
-@pytest.mark.slow  # ~29s multi-variant convergence sweep; full tier
-def test_pagerank_tol_early_exit_on_converged_graph(spark):
-    """Round-11 option (round-10 verdict #7): tol stops iteration when
-    max |delta r| <= tol*scale. A directed cycle is at its fixed point
-    after one round (every node recomputes to the identical value), so
-    tol must exit at iteration 1 with EXACTLY the fixed-iteration
-    result; a hub graph with a tiny tol must run all rounds. Default
-    tol=None keeps the oracle-parity fixed count."""
-    from mapreduce_chisquare_spark.operators import graph as g
-
-    cyc = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
-        "src string, dst string",
-    )
-    fixed = {r.node: r.rank_fp for r in pagerank(cyc).collect()}
-    early = {
-        r.node: r.rank_fp for r in pagerank(cyc, tol=1e-9).collect()
-    }
-    assert g.LAST_PR_ITERATIONS == 1
-    assert early == fixed
-    hub = spark.createDataFrame(
-        [("C1", "S1"), ("C2", "S1"), ("C3", "S1"),
-         ("C1", "S2"), ("S2", "C1")],
-        "src string, dst string",
-    )
-    full = {r.node: r.rank_fp for r in pagerank(hub, tol=0.0).collect()}
-    assert g.LAST_PR_ITERATIONS == 10
-    assert full == _py_pagerank(
-        [("C1", "S1"), ("C2", "S1"), ("C3", "S1"),
-         ("C1", "S2"), ("S2", "C1")]
-    )
-    ppr = g.personalized_pagerank(cyc, ["a"], tol=1e-15)
-    n_rows = ppr.count()
-    assert n_rows == 4 and 1 <= g.LAST_PR_ITERATIONS <= 10
-
-
 def _op_df(spark, rows):
     return spark.createDataFrame(rows, "o_key long, p_key long")
 

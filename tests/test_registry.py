@@ -45,10 +45,12 @@ def test_entry_smoke(spark):
 
 def _oracle_param(name):
     """The similarity-search family (simsearch_*, similarity_join*)
-    runs in the default tier; the rest of the ~9 min registry sweep is
-    `slow` (full tier: pytest -m ""), as scripts/check_oracle covers
-    the same ground."""
-    if name.startswith(("simsearch_", "similarity_join")):
+    and the graph family (graph_*, basket_rules) run in the default
+    tier; the rest of the ~9 min registry sweep is `slow` (full tier:
+    pytest -m ""), as scripts/check_oracle covers the same ground."""
+    if name.startswith(
+        ("simsearch_", "similarity_join", "graph_", "basket_rules")
+    ):
         return name
     return pytest.param(name, marks=pytest.mark.slow)
 
