@@ -1,19 +1,13 @@
-"""Data-layout operators: Z-order (Morton) clustering keys.
+"""Data-layout operators: Z-order (Morton) keys and hash-bucketed
+tables.
 
-Multi-dimensional clustering for min/max (zone-map) pruning: sorting
-by a bit-interleaved key keeps BOTH dimensions locally dense in every
-file, so a predicate on either column prunes row groups — a linear
-sort order can only serve one. OSS Spark has no OPTIMIZE ZORDER;
-the key is plain integer arithmetic, and `repartitionByRange` +
-`sortWithinPartitions` on it is the whole layout pass.
-
-Interleaving raw key bits only works when the dimensions span similar
-bit-widths — a 13-bit key interleaved with an 8-bit key leaves the
-top Morton bits single-dimension and range-splitting degenerates to a
-linear sort on the wider key. The layout pass therefore quantizes
-each dimension to an equal `bits` budget from its own min/max first
-(the same pre-stats an OPTIMIZE command gathers), as one broadcast
-1-row bounds join — no driver round-trip, works at any scale.
+A Z-order key interleaves the bits of two integer columns, so sorting
+by it keeps BOTH dimensions locally dense in every file and a
+predicate on either column prunes row groups — a linear sort order can
+only serve one. OSS Spark has no OPTIMIZE ZORDER; the key is plain
+integer arithmetic. Interleaving raw bits only works when the
+dimensions span similar bit-widths: a 13-bit key interleaved with an
+8-bit key leaves the top Morton bits single-dimension.
 
 The bit expression is generated ONCE as SQL text shared verbatim by
 the Spark plan and the DuckDB oracle — identical semantics by
@@ -43,42 +37,6 @@ def zorder_sql(a: str, b: str, bits: int = ZORDER_BITS) -> str:
 
 def zorder_col(a: str, b: str, bits: int = ZORDER_BITS) -> Column:
     return F.expr(zorder_sql(a, b, bits))
-
-
-def quantize_sql(col: str, lo: str, hi: str, bits: int) -> str:
-    """Map col from [lo, hi] onto 0..2^bits-1 with integer arithmetic
-    (engine-portable; greatest() guards the constant-column case)."""
-    levels = (1 << bits) - 1
-    return (
-        f"(({col} - {lo}) * {levels}) // greatest({hi} - {lo}, 1)"
-    )
-
-
-def cluster_by_zorder(
-    df: DataFrame, a: str, b: str, n_files: int = 8, bits: int = 8
-) -> DataFrame:
-    """The layout pass: quantize both dimensions to `bits` levels from
-    their own min/max (one aggregate + broadcast 1-row join), Morton-
-    interleave, then range-partition + sort by the key so every output
-    file covers a compact Z-curve segment — tight min/max on BOTH a
-    and b per file. One stats pass + one range shuffle; write the
-    result with `.write.parquet` to materialize the clustering."""
-    bounds = df.agg(
-        F.min(a).alias("__a0"),
-        F.max(a).alias("__a1"),
-        F.min(b).alias("__b0"),
-        F.max(b).alias("__b1"),
-    )
-    qa = quantize_sql(a, "__a0", "__a1", bits).replace("//", "div")
-    qb = quantize_sql(b, "__b0", "__b1", bits).replace("//", "div")
-    z = F.expr(zorder_sql(f"({qa})", f"({qb})", bits))
-    return (
-        df.crossJoin(F.broadcast(bounds))
-        .withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", "__a0", "__a1", "__b0", "__b1")
-    )
 
 
 N_BUCKETS = 8

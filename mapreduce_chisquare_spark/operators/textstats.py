@@ -1,14 +1,36 @@
-"""Text-analysis operators for corpus curation: language ID, quality
-scoring, token counting, document fingerprinting.
+"""Text-analysis operators for corpus curation, all built-in Catalyst
+expressions (no UDFs). The families:
 
-All built-in Catalyst expressions (no UDFs). Ratios are single IEEE
-divisions of exact integer counts, and composite scores are sums of
-those — deterministic across engines when written in the same order.
+- language ID and quality: lang_id, quality_score/quality_gate,
+  quality_gopher_rules, char_entropy, sentence_stats, html_strip,
+  normalize_text/dedup_normalized;
+- token statistics and retrieval: token_count, corpus_composition,
+  tfidf/tfidf_topk_terms, bm25/bm25_topk, vocab_*, tokens_to_ids,
+  inverted_index, skipgram_cooc, bpe_*;
+- fingerprinting: doc_fingerprint, winnowing_fingerprint;
+- the n-gram family: the LM ladder (lm_unigram_score,
+  lm_bigram_score, lm_heldout_score, lm_kn_bigram_score,
+  lm_stupid_backoff_score, lm_jm_bigram_score),
+  quality_perplexity_buckets, the collocation rankers
+  (collocations_pmi, collocations_g2) and the string n-grams
+  (ngram_counts, ngram_novelty).
+
+The n-gram family is built from one counting core (_ngram_structs,
+_gram_tf, _per_doc, _mean, _collocations, _ngram_strings) with one
+contract: the corpus is tokenized once; one exchange keyed on the gram
+columns serves both the per-document tf aggregate and every corpus
+count rolled up from it (ReusedExchange); corpus-wide scalars (totals,
+vocabulary sizes) attach as 1-row broadcasts; the held-out scorers
+train on doc_id % 10 == 0. Each scorer keeps its own smoothing formula.
+
+Ratios are single IEEE divisions of exact integer counts, and composite
+scores are sums of those — deterministic across engines when written in
+the same order.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..constants import DELIM_REGEX, STOPWORDS
@@ -30,6 +52,146 @@ BPE_REGEX = "[a-z]+|[0-9]|[^a-z0-9\\s]"
 def _words(text_col: str = "text"):
     return F.filter(
         F.split(F.lower(F.col(text_col)), "\\s+"), lambda t: t != ""
+    )
+
+
+def _ngram_structs(arr: str, n: int) -> Column:
+    """struct(w1, .., wn) per start position of the token-array column
+    `arr` (by name), for n = 2 or 3. Empty-safe: the slice has length
+    max(size - (n-1), 0), where sequence(0, size - n) would turn into a
+    DESCENDING range on short documents and fabricate null grams. The
+    lambda variables are collision-proof names: a lambda parameter
+    shadows any same-named column inside the body."""
+    rest = ", ".join(f"{arr}[__bg_i + {j}] AS w{j + 1}" for j in range(1, n))
+    return F.expr(
+        f"transform(slice({arr}, 1, greatest(size({arr}) - {n - 1}, 0)), "
+        f"(__bg_w, __bg_i) -> struct(__bg_w AS w1, {rest}))"
+    )
+
+
+def _train_flag() -> Column:
+    """The held-out scorers' training split (the DuckDB twins hard-code
+    the same % 10 = 0)."""
+    return F.col("doc_id") % F.lit(10) == F.lit(0)
+
+
+def _gram_tf(
+    docs: DataFrame, text_col: str, n: int, train: bool = False
+) -> DataFrame:
+    """(doc_id[, __train], gram..., tf): the per-document n-gram counts.
+    Grams are `term` for n = 1, else (w1, .., wn). The one corpus-sized
+    exchange is the repartition on the gram columns: it satisfies the
+    (doc, gram) aggregate here AND every gram-keyed roll-up of it, so
+    corpus counts reuse it instead of re-scanning."""
+    flag = [_train_flag().alias("__train")] if train else []
+    keys = ["doc_id", "__train"][: 1 + int(train)]
+    if n == 1:
+        grams = ["term"]
+        toks = docs.select(
+            "doc_id", *flag, F.explode(_words(text_col)).alias("term")
+        )
+    else:
+        grams = ["w1", "w2", "w3"][:n]
+        toks = (
+            docs.select("doc_id", *flag, _words(text_col).alias("__arr"))
+            .select(*keys, F.explode(_ngram_structs("__arr", n)).alias("g"))
+            .select(*keys, *(f"g.{w}" for w in grams))
+        )
+    return (
+        toks.repartition(*grams)
+        .groupBy(*keys, *grams)
+        .agg(F.count("*").cast("long").alias("tf"))
+    )
+
+
+def _sum(col: str, name: str) -> Column:
+    return F.sum(col).cast("long").alias(name)
+
+
+def _dbl(col: str) -> Column:
+    return F.col(col).cast("double")
+
+
+def _micro(x: Column) -> Column:
+    """floor(x · 1e6) as BIGINT: a log quantized to micro-nats."""
+    return F.floor(x * F.lit(1e6)).cast("long")
+
+
+def _tf_where(cond: Column, name: str) -> Column:
+    """The tf mass of the grams that satisfy cond (an integer count)."""
+    return F.sum(F.when(cond, F.col("tf")).otherwise(F.lit(0))).cast(
+        "long"
+    ).alias(name)
+
+
+def _per_doc(
+    scored: DataFrame, n_col: str, lp: Column, *extra: Column
+) -> DataFrame:
+    """(doc_id, n_col, *extra, __s): gram count, extra counts and the
+    tf-weighted log-probability sum — sum(tf·lp)/sum(tf) is the
+    per-position mean without carrying the raw gram stream."""
+    return scored.groupBy("doc_id").agg(
+        _sum("tf", n_col),
+        *extra,
+        F.sum(_dbl("tf") * lp).alias("__s"),
+    )
+
+
+def _mean(n_col: str, minus: Column | None = None) -> Column:
+    """avg_logprob: the per-position mean, less a corpus log-normalizer
+    attached once after the per-doc aggregate when one is given."""
+    mean = F.col("__s") / _dbl(n_col)
+    return (mean if minus is None else mean - minus).alias("avg_logprob")
+
+
+def _collocations(
+    docs: DataFrame,
+    text_col: str,
+    min_count: int,
+    k: int,
+    name: str,
+    score: Column,
+) -> DataFrame:
+    """Top-k adjacent bigrams (w1, w2, pair_cnt, <name>) by score, over
+    bigram POSITIONS: pair_cnt = c(w1,w2), lc = c_left(w1), rc =
+    c_right(w2), nbi = total bigrams, so the marginals and the joint
+    share one sample space. The pair-count relation has four consumers
+    (two marginals, the total, scoring), so it is materialized once:
+    unmaterialized, the corpus scan and explode ran once per consumer.
+    Pairs below min_count are pruned before scoring; the top-k is
+    TakeOrdered on (score DESC, w1, w2)."""
+    bigrams = (
+        docs.select(_words(text_col).alias("__w"))
+        .select(F.explode(_ngram_structs("__w", 2)).alias("bg"))
+        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    )
+    bc = bigrams.groupBy("w1", "w2").agg(
+        F.count("*").cast("long").alias("pair_cnt")
+    ).localCheckpoint()
+    left = bc.groupBy("w1").agg(_sum("pair_cnt", "lc"))
+    right = bc.groupBy("w2").agg(_sum("pair_cnt", "rc"))
+    total = bc.agg(_sum("pair_cnt", "nbi"))
+    scored = (
+        bc.filter(F.col("pair_cnt") >= F.lit(int(min_count)))
+        .join(F.broadcast(left), "w1")
+        .join(F.broadcast(right), "w2")
+        .crossJoin(F.broadcast(total))
+        .select("w1", "w2", "pair_cnt", score.alias(name))
+    )
+    return scored.orderBy(F.desc(name), F.asc("w1"), F.asc("w2")).limit(
+        int(k)
+    )
+
+
+def _ngram_strings(n: int) -> Column:
+    """The space-joined word n-grams of the token-array column __w;
+    empty below n tokens."""
+    parts = ", ".join(f"element_at(__w, i + {j})" for j in range(n))
+    return F.expr(
+        f"CASE WHEN size(__w) >= {n} THEN "
+        f"transform(sequence(1, size(__w) - {n - 1}), "
+        f"i -> concat_ws(' ', {parts})) "
+        f"ELSE array() END"
     )
 
 
@@ -168,15 +330,8 @@ def ngram_counts(
     is projected once first — HOFs are interpreted, no CSE), then one
     hash count and a TakeOrderedAndProject top-k (no full sort). Ties
     break on the gram text for determinism."""
-    parts = ", ".join(f"element_at(__w, i + {j})" for j in range(n))
-    grams = (
-        f"CASE WHEN size(__w) >= {n} THEN "
-        f"transform(sequence(1, size(__w) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) "
-        f"ELSE array() END"
-    )
     base = docs.select(_words(text_col).alias("__w")).select(
-        F.explode(F.expr(grams)).alias("ngram")
+        F.explode(_ngram_strings(n)).alias("ngram")
     )
     return (
         base.groupBy("ngram")
@@ -269,34 +424,14 @@ def lm_unigram_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     relation, never a separate corpus-scanning .count() action.
     Weighted form sum(tf·ln c)/sum(tf) == the per-token mean, without
     carrying the corpus-sized raw token stream into the join."""
-    toks = docs.select("doc_id", F.explode(_words(text_col)).alias("term"))
-    # hashpartitioning(term) satisfies BOTH grouping levels below, so
-    # this is the only corpus-sized exchange
-    tf = (
-        toks.repartition("term")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    tc = tf.groupBy("term").agg(F.sum("tf").alias("c"))
-    tot = tc.agg(F.sum("c").alias("t_total"))
-    per_doc = (
-        tf.join(tc, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_tokens"),
-            F.sum(
-                F.col("tf").cast("double")
-                * F.log(F.col("c").cast("double"))
-            ).alias("__s"),
-        )
-    )
+    tf = _gram_tf(docs, text_col, 1)
+    tc = tf.groupBy("term").agg(_sum("tf", "c"))
+    tot = tc.agg(_sum("c", "t_total"))
+    per_doc = _per_doc(tf.join(tc, "term"), "n_tokens", F.log(_dbl("c")))
     return per_doc.join(F.broadcast(tot)).select(
         "doc_id",
         "n_tokens",
-        (
-            F.col("__s") / F.col("n_tokens").cast("double")
-            - F.log(F.col("t_total").cast("double"))
-        ).alias("avg_logprob"),
+        _mean("n_tokens", F.log(_dbl("t_total"))),
     )
 
 
@@ -558,22 +693,9 @@ def lm_bigram_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     serves the per-doc tf aggregate AND the corpus bigram counts
     (ReusedExchange); the context roll-up and V are vocabulary-sized;
     V attaches as a 1-row broadcast (J3)."""
-    base = docs.select(
-        "doc_id", _words(text_col).alias("__arr")
-    )
-    # shared empty-safe extractor (bigram_structs) — identical pairs
-    # to the previous guarded sequence/element_at form, one audited
-    # owner for end-of-array handling
-    pairs = base.select(
-        "doc_id", F.explode(bigram_structs("__arr")).alias("g")
-    ).select("doc_id", "g.w1", "g.w2")
-    tfb = (
-        pairs.repartition("w1", "w2")
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count("*").alias("tf"))
-    )
-    c12 = tfb.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
-    c1 = c12.groupBy("w1").agg(F.sum("c12").alias("c1"))
+    tfb = _gram_tf(docs, text_col, 2)
+    c12 = tfb.groupBy("w1", "w2").agg(_sum("tf", "c12"))
+    c1 = c12.groupBy("w1").agg(_sum("c12", "c1"))
     v = c1.agg(F.count("*").alias("v"))
     scored = (
         tfb.join(c12, ["w1", "w2"])
@@ -581,20 +703,10 @@ def lm_bigram_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
         .join(F.broadcast(v))
     )
     lp = F.log(
-        (F.col("c12").cast("double") + F.lit(1.0))
-        / (F.col("c1").cast("double") + F.col("v").cast("double"))
+        (_dbl("c12") + F.lit(1.0)) / (_dbl("c1") + _dbl("v"))
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_bigrams"),
-        F.sum(F.col("tf").cast("double") * lp).alias("__s"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_bigrams",
-        (F.col("__s") / F.col("n_bigrams").cast("double")).alias(
-            "avg_logprob"
-        ),
-    )
+    per_doc = _per_doc(scored, "n_bigrams", lp)
+    return per_doc.select("doc_id", "n_bigrams", _mean("n_bigrams"))
 
 
 WINNOW_BASE = 257
@@ -1154,24 +1266,6 @@ def quality_gopher_rules(
     )
 
 
-def bigram_structs(arr_name: str) -> "F.Column":
-    """THE one adjacent-bigram extractor over a materialized token
-    array column (by name): struct(w1, w2) per position, empty-safe
-    (slice of length max(n-1, 0) — unlike sequence(0, n-2), which
-    Spark turns into a DESCENDING range when n < 2 and fabricates
-    bogus null pairs). Shared by lm_bigram_score and
-    collocations_pmi so end-of-array and empty-doc handling has a
-    single audited owner."""
-    a = arr_name
-    # collision-proof lambda variable names: a lambda parameter
-    # shadows any same-named column inside the body
-    return F.expr(
-        f"transform(slice({a}, 1, greatest(size({a}) - 1, 0)), "
-        f"(__bg_w, __bg_i) -> "
-        f"struct(__bg_w AS w1, {a}[__bg_i + 1] AS w2))"
-    )
-
-
 def collocations_pmi(
     docs: DataFrame,
     text_col: str = "text",
@@ -1201,42 +1295,10 @@ def collocations_pmi(
     the marginal relations aggregate FROM it (vocab-sized) and
     broadcast back. At 100 TB: scan, one shuffle, two vocab-sized
     broadcasts. Build-time freeze semantics apply."""
-    words = _words(text_col)
-    # materialize the token array once (no-CSE rule), then the shared
-    # empty-safe bigram extractor
-    bigrams = (
-        docs.select(words.alias("__w"))
-        .select(F.explode(bigram_structs("__w")).alias("bg"))
-        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
+    pmi = F.log(
+        _dbl("nbi") * _dbl("pair_cnt") / (_dbl("lc") * _dbl("rc"))
     )
-    # 4 consumers (marginals x2, total, scoring) — materialize the
-    # vocab-sized pair-count relation ONCE so the corpus-scan+explode
-    # subtree is never recomputed (plan-audit finding)
-    bc = bigrams.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("pair_cnt")
-    ).localCheckpoint()
-    left = bc.groupBy("w1").agg(F.sum("pair_cnt").cast("long").alias("lc"))
-    right = bc.groupBy("w2").agg(F.sum("pair_cnt").cast("long").alias("rc"))
-    total = bc.agg(F.sum("pair_cnt").cast("long").alias("nbi"))
-    scored = (
-        bc.filter(F.col("pair_cnt") >= F.lit(int(min_count)))
-        .join(F.broadcast(left), "w1")
-        .join(F.broadcast(right), "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "w1",
-            "w2",
-            "pair_cnt",
-            F.log(
-                F.col("nbi").cast("double")
-                * F.col("pair_cnt").cast("double")
-                / (F.col("lc").cast("double") * F.col("rc").cast("double"))
-            ).alias("pmi"),
-        )
-    )
-    return scored.orderBy(
-        F.desc("pmi"), F.asc("w1"), F.asc("w2")
-    ).limit(int(k))
+    return _collocations(docs, text_col, min_count, k, "pmi", pmi)
 
 
 def skipgram_cooc(
@@ -1344,16 +1406,11 @@ def inverted_index(
     return agg.orderBy(F.desc("df"), F.asc("term")).limit(int(k))
 
 
-def lm_heldout_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    train_mod: int = 10,
-    train_rem: int = 0,
-) -> DataFrame:
+def lm_heldout_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Held-out-trained unigram LM scoring with OOV smoothing — the
     CCNet-shaped quality filter lm_unigram_score cannot express: the
-    model is fit on a DESIGNATED split (doc_id % train_mod ==
-    train_rem — in production: the trusted target-domain corpus) and
+    model is fit on a DESIGNATED split (doc_id % 10 == 0 — in
+    production: the trusted target-domain corpus) and
     applied to EVERY document, so scoring-set tokens can be unseen.
     Add-one smoothing over the train counts handles them:
     p(w) = (c_train(w) + 1) / (T + V + 1), where T = train token
@@ -1369,44 +1426,23 @@ def lm_heldout_score(
     split is not re-scanned), the count left-join, and the (T, V)
     scalar all sit on that exchange; then one doc-level exchange for
     the mean. (T, V) is a 1-row broadcast."""
-    toks = docs.select(
-        "doc_id", F.explode(_words(text_col)).alias("term")
-    )
-    tf = (
-        toks.repartition("term")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    train_c = (
-        tf.filter(
-            F.col("doc_id") % F.lit(int(train_mod))
-            == F.lit(int(train_rem))
-        )
-        .groupBy("term")
-        .agg(F.sum("tf").alias("c"))
-    )
+    tf = _gram_tf(docs, text_col, 1)
+    train_c = tf.filter(_train_flag()).groupBy("term").agg(_sum("tf", "c"))
     tv = train_c.agg(
         (F.sum("c") + F.count("*") + F.lit(1)).alias("tv1")
     )
-    scored = tf.join(train_c, "term", "left")
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_tokens"),
-        F.sum(F.when(F.col("c").isNull(), F.col("tf")).otherwise(0))
-        .cast("long")
-        .alias("n_oov"),
-        F.sum(
-            F.col("tf")
-            * F.log(F.coalesce(F.col("c"), F.lit(0)) + F.lit(1))
-        ).alias("__s"),
+    lp = F.log(F.coalesce(F.col("c"), F.lit(0)) + F.lit(1))
+    per_doc = _per_doc(
+        tf.join(train_c, "term", "left"),
+        "n_tokens",
+        lp,
+        _tf_where(F.col("c").isNull(), "n_oov"),
     )
     return per_doc.crossJoin(F.broadcast(tv)).select(
         "doc_id",
         "n_tokens",
         "n_oov",
-        (
-            F.col("__s") / F.col("n_tokens")
-            - F.log(F.col("tv1").cast("double"))
-        ).alias("avg_logprob"),
+        _mean("n_tokens", F.log(_dbl("tv1"))),
     )
 
 
@@ -1451,9 +1487,7 @@ def html_strip(
 KN_DISCOUNT = 0.75
 
 
-def lm_kn_bigram_score(
-    docs: DataFrame, text_col: str = "text", d: float = KN_DISCOUNT
-) -> DataFrame:
+def lm_kn_bigram_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Kneser-Ney smoothed bigram scoring — the state-of-the-art
     count-based LM (Kneser & Ney 1995, public) above the add-one
     lm_bigram_score: absolute discounting with the CONTINUATION
@@ -1463,6 +1497,7 @@ def lm_kn_bigram_score(
       p(w2|w1) = max(c(w1 w2) - d, 0)/c(w1)
                + d·N1+(w1·)/c(w1) · (N1+(·w2)/|bigram types|)
 
+    with d = KN_DISCOUNT (0.75, the DuckDB twin's constant too).
     Returns (doc_id, n_bigrams, avg_logprob) for documents with >= 2
     tokens; every count is an exact integer and the float expression
     is pinned left-to-right identically in the DuckDB twin.
@@ -1474,19 +1509,10 @@ def lm_kn_bigram_score(
     w2, |types| as a 1-row broadcast) are all vocabulary-sized.
     Self-trained: every scored bigram is observed, so c12 >= 1 and
     the discounted term never needs an unseen branch."""
-    base = docs.select("doc_id", _words(text_col).alias("__arr"))
-    pairs = base.select(
-        "doc_id", F.explode(bigram_structs("__arr")).alias("g")
-    ).select("doc_id", "g.w1", "g.w2")
-    tfb = (
-        pairs.repartition("w1", "w2")
-        .groupBy("doc_id", "w1", "w2")
-        .agg(F.count("*").alias("tf"))
-    )
-    c12 = tfb.groupBy("w1", "w2").agg(F.sum("tf").alias("c12"))
+    tfb = _gram_tf(docs, text_col, 2)
+    c12 = tfb.groupBy("w1", "w2").agg(_sum("tf", "c12"))
     ctx = c12.groupBy("w1").agg(
-        F.sum("c12").alias("c1"),
-        F.count("*").cast("long").alias("n1p_fwd"),
+        _sum("c12", "c1"), F.count("*").cast("long").alias("n1p_fwd")
     )
     cont = c12.groupBy("w2").agg(
         F.count("*").cast("long").alias("n1p_bwd")
@@ -1498,31 +1524,14 @@ def lm_kn_bigram_score(
         .join(cont, "w2")
         .join(F.broadcast(types))
     )
-    dd = float(d)
+    dd = F.lit(KN_DISCOUNT)
     lp = F.log(
-        F.greatest(
-            F.col("c12").cast("double") - F.lit(dd), F.lit(0.0)
-        )
-        / F.col("c1").cast("double")
-        + F.lit(dd)
-        * F.col("n1p_fwd").cast("double")
-        / F.col("c1").cast("double")
-        * (
-            F.col("n1p_bwd").cast("double")
-            / F.col("n_types").cast("double")
-        )
+        F.greatest(_dbl("c12") - dd, F.lit(0.0)) / _dbl("c1")
+        + dd * _dbl("n1p_fwd") / _dbl("c1")
+        * (_dbl("n1p_bwd") / _dbl("n_types"))
     )
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_bigrams"),
-        F.sum(F.col("tf").cast("double") * lp).alias("__s"),
-    )
-    return per_doc.select(
-        "doc_id",
-        "n_bigrams",
-        (F.col("__s") / F.col("n_bigrams").cast("double")).alias(
-            "avg_logprob"
-        ),
-    )
+    per_doc = _per_doc(scored, "n_bigrams", lp)
+    return per_doc.select("doc_id", "n_bigrams", _mean("n_bigrams"))
 
 
 SB_ALPHA_NUM = 4  # stupid-backoff alpha = 0.4 = 4/10
@@ -1530,18 +1539,15 @@ SB_ALPHA_DEN = 10
 
 
 def lm_stupid_backoff_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    train_mod: int = 10,
-    train_rem: int = 0,
+    docs: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Trigram stupid-backoff scoring (Brants et al., EMNLP 2007,
     public — "Large Language Models in Machine Translation"): the
     web-scale count-based LM that skips normalized discounting
     entirely; relative frequencies with a fixed backoff penalty
     alpha = 0.4 beat Kneser-Ney at large counts for a fraction of
-    the compute. Trained on the designated split (doc_id %
-    train_mod == train_rem), scored over EVERY document:
+    the compute. Trained on the designated split (doc_id % 10 == 0),
+    scored over EVERY document:
 
       S(w3|w1,w2) = c123/c12                     if c123 > 0
                   = 0.4 * c23/c2                 elif c23 > 0
@@ -1565,41 +1571,14 @@ def lm_stupid_backoff_score(
     the per-doc tf aggregate AND the train counts; the roll-up
     chain is vocabulary-sized; (T, V) attach as a 1-row broadcast
     (J3); one doc-keyed aggregate closes."""
-    base = docs.select(
-        "doc_id",
-        (F.col("doc_id") % F.lit(int(train_mod)) == F.lit(int(train_rem)))
-        .alias("__train"),
-        _words(text_col).alias("__arr"),
+    tfb = _gram_tf(docs, text_col, 3, train=True)
+    c123 = tfb.filter("__train").groupBy("w1", "w2", "w3").agg(
+        _sum("tf", "c123")
     )
-    tris = base.select(
-        "doc_id",
-        "__train",
-        F.explode(
-            F.expr(
-                "transform(slice(__arr, 1, greatest(size(__arr) - 2, 0)), "
-                "(__sb_w, __sb_i) -> struct(__sb_w AS w1, "
-                "__arr[__sb_i + 1] AS w2, __arr[__sb_i + 2] AS w3))"
-            )
-        ).alias("g"),
-    ).select("doc_id", "__train", "g.w1", "g.w2", "g.w3")
-    tfb = (
-        tris.repartition("w1", "w2", "w3")
-        .groupBy("doc_id", "__train", "w1", "w2", "w3")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    c123 = (
-        tfb.filter("__train")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.sum("tf").cast("long").alias("c123"))
-    )
-    c12 = c123.groupBy("w1", "w2").agg(
-        F.sum("c123").cast("long").alias("c12")
-    )
-    c23 = c123.groupBy("w2", "w3").agg(
-        F.sum("c123").cast("long").alias("c23")
-    )
-    c2 = c23.groupBy("w2").agg(F.sum("c23").cast("long").alias("c2"))
-    c3 = c23.groupBy("w3").agg(F.sum("c23").cast("long").alias("c3"))
+    c12 = c123.groupBy("w1", "w2").agg(_sum("c123", "c12"))
+    c23 = c123.groupBy("w2", "w3").agg(_sum("c123", "c23"))
+    c2 = c23.groupBy("w2").agg(_sum("c23", "c2"))
+    c3 = c23.groupBy("w3").agg(_sum("c23", "c3"))
     tv = c123.agg(
         F.coalesce(F.sum("c123"), F.lit(0)).cast("long").alias("t"),
         F.count_distinct("w3").cast("long").alias("v"),
@@ -1615,42 +1594,25 @@ def lm_stupid_backoff_score(
     alpha = F.lit(SB_ALPHA_NUM).cast("double") / F.lit(
         SB_ALPHA_DEN
     ).cast("double")
-    s1 = F.col("c123").cast("double") / F.col("c12").cast("double")
-    s2 = alpha * (F.col("c23").cast("double") / F.col("c2").cast("double"))
-    s3 = (
-        alpha
-        * alpha
-        * (
-            (F.coalesce(F.col("c3"), F.lit(0)).cast("double") + F.lit(1.0))
-            / (
-                F.col("t").cast("double")
-                + F.col("v").cast("double")
-                + F.lit(1.0)
-            )
-        )
+    s1 = _dbl("c123") / _dbl("c12")
+    s2 = alpha * (_dbl("c23") / _dbl("c2"))
+    s3 = alpha * alpha * (
+        (F.coalesce(F.col("c3"), F.lit(0)).cast("double") + F.lit(1.0))
+        / (_dbl("t") + _dbl("v") + F.lit(1.0))
     )
     lvl = F.when(F.col("c123").isNotNull(), F.lit(0)).otherwise(
         F.when(F.col("c23").isNotNull(), F.lit(1)).otherwise(F.lit(2))
     )
     s = F.when(lvl == 0, s1).otherwise(F.when(lvl == 1, s2).otherwise(s3))
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_trigrams"),
-        F.sum(F.when(lvl == 1, F.col("tf")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_bo1"),
-        F.sum(F.when(lvl == 2, F.col("tf")).otherwise(F.lit(0)))
-        .cast("long")
-        .alias("n_bo2"),
-        F.sum(F.col("tf").cast("double") * F.log(s)).alias("__s"),
+    per_doc = _per_doc(
+        scored,
+        "n_trigrams",
+        F.log(s),
+        _tf_where(lvl == 1, "n_bo1"),
+        _tf_where(lvl == 2, "n_bo2"),
     )
     return per_doc.select(
-        "doc_id",
-        "n_trigrams",
-        "n_bo1",
-        "n_bo2",
-        (F.col("__s") / F.col("n_trigrams").cast("double")).alias(
-            "avg_logprob"
-        ),
+        "doc_id", "n_trigrams", "n_bo1", "n_bo2", _mean("n_trigrams")
     )
 
 
@@ -1703,12 +1665,7 @@ def sentence_stats(
 JM_LAMBDA = 0.7  # interpolation weight on the bigram ML term
 
 
-def lm_jm_bigram_score(
-    docs: DataFrame,
-    text_col: str = "text",
-    train_mod: int = 10,
-    train_rem: int = 0,
-) -> DataFrame:
+def lm_jm_bigram_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Jelinek-Mercer interpolated bigram scoring (Jelinek & Mercer
     1980; the smoothing baseline of Chen & Goodman 1996's study,
     public) — the LINEAR-interpolation rung of the smoothing ladder
@@ -1717,8 +1674,8 @@ def lm_jm_bigram_score(
 
       S(w2|w1) = λ · c12/c1  +  (1-λ) · (c2 + 1)/(T + V + 1)
 
-    with λ = 0.7, trained on the designated split (doc_id %
-    train_mod == train_rem) and scored over EVERY document; an
+    with λ = 0.7, trained on the designated split (doc_id % 10 == 0)
+    and scored over EVERY document; an
     unseen bigram contributes only the smoothed unigram term (the
     ML term is 0, not undefined), so S > 0 always and the log is
     safe. Counts are roll-ups of the train BIGRAM relation (c2 =
@@ -1732,27 +1689,10 @@ def lm_jm_bigram_score(
     Scale shape: the lm_bigram skeleton — one corpus-sized (w1, w2)
     exchange serves the per-doc tf aggregate and the train counts;
     roll-ups are vocabulary-sized; (T, V) is a 1-row broadcast."""
-    base = docs.select(
-        "doc_id",
-        (F.col("doc_id") % F.lit(int(train_mod)) == F.lit(int(train_rem)))
-        .alias("__train"),
-        _words(text_col).alias("__arr"),
-    )
-    pairs = base.select(
-        "doc_id", "__train", F.explode(bigram_structs("__arr")).alias("g")
-    ).select("doc_id", "__train", "g.w1", "g.w2")
-    tfb = (
-        pairs.repartition("w1", "w2")
-        .groupBy("doc_id", "__train", "w1", "w2")
-        .agg(F.count("*").cast("long").alias("tf"))
-    )
-    c12 = (
-        tfb.filter("__train")
-        .groupBy("w1", "w2")
-        .agg(F.sum("tf").cast("long").alias("c12"))
-    )
-    c1 = c12.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
-    c2 = c12.groupBy("w2").agg(F.sum("c12").cast("long").alias("c2"))
+    tfb = _gram_tf(docs, text_col, 2, train=True)
+    c12 = tfb.filter("__train").groupBy("w1", "w2").agg(_sum("tf", "c12"))
+    c1 = c12.groupBy("w1").agg(_sum("c12", "c1"))
+    c2 = c12.groupBy("w2").agg(_sum("c12", "c2"))
     tv = c12.agg(
         F.coalesce(F.sum("c12"), F.lit(0)).cast("long").alias("t"),
         F.count_distinct("w2").cast("long").alias("v"),
@@ -1765,33 +1705,19 @@ def lm_jm_bigram_score(
     )
     ml = F.when(
         F.col("c12").isNotNull(),
-        F.lit(float(JM_LAMBDA))
-        * (F.col("c12").cast("double") / F.col("c1").cast("double")),
+        F.lit(float(JM_LAMBDA)) * (_dbl("c12") / _dbl("c1")),
     ).otherwise(F.lit(0.0))
     uni = F.lit(1.0 - JM_LAMBDA) * (
         (F.coalesce(F.col("c2"), F.lit(0)).cast("double") + F.lit(1.0))
-        / (
-            F.col("t").cast("double")
-            + F.col("v").cast("double")
-            + F.lit(1.0)
-        )
+        / (_dbl("t") + _dbl("v") + F.lit(1.0))
     )
-    s = ml + uni
-    per_doc = scored.groupBy("doc_id").agg(
-        F.sum("tf").cast("long").alias("n_bigrams"),
-        F.sum(
-            F.when(F.col("c12").isNull(), F.col("tf")).otherwise(F.lit(0))
-        ).cast("long").alias("n_unseen"),
-        F.sum(F.col("tf").cast("double") * F.log(s)).alias("__s"),
-    )
-    return per_doc.select(
-        "doc_id",
+    per_doc = _per_doc(
+        scored,
         "n_bigrams",
-        "n_unseen",
-        (F.col("__s") / F.col("n_bigrams").cast("double")).alias(
-            "avg_logprob"
-        ),
+        F.log(ml + uni),
+        _tf_where(F.col("c12").isNull(), "n_unseen"),
     )
+    return per_doc.select("doc_id", "n_bigrams", "n_unseen", _mean("n_bigrams"))
 
 
 PPL_BUCKET_K = 256  # rank-sketch sample size per language
@@ -1815,7 +1741,7 @@ def quality_perplexity_buckets(
     Determinism: every per-term contribution floor(ln(c) * 1e6) is
     an exact BIGINT of the term's corpus count c, so the per-doc sum
     is ORDER-INDEPENDENT — summing raw doubles and flooring at the
-    end (the previous form) drifts with partition/accumulation order
+    end drifts with partition/accumulation order
     and can flip score_fp (and a doc's tier) at a floor boundary
     cross-engine. Residual risk (not eliminated, only shrunk): ln()
     of a fixed integer is evaluated once per DISTINCT count on each
@@ -1843,65 +1769,32 @@ def quality_perplexity_buckets(
 
     # lm_unigram_score's shuffle skeleton, with the per-term log
     # quantized to BIGINT micro-nats BEFORE the per-doc sum (see
-    # determinism note above); hashpartitioning(term) serves both
-    # grouping levels, so the corpus shuffles once
-    toks = docs.select(
-        "doc_id", F.explode(_words(text_col)).alias("term")
+    # determinism note above)
+    tf = _gram_tf(docs, text_col, 1)
+    tc = tf.groupBy("term").agg(_sum("tf", "c"))
+    lc = tc.select("term", _micro(F.log(_dbl("c"))).alias("lc"))
+    tot = tc.agg(_micro(F.log(F.sum("c").cast("double"))).alias("lt"))
+    per_doc = tf.join(lc, "term").groupBy("doc_id").agg(
+        _sum("tf", "n_tokens"),
+        F.sum(F.col("tf") * F.col("lc")).cast("long").alias("s_fp"),
     )
-    tf = (
-        toks.repartition("term")
-        .groupBy("doc_id", "term")
-        .agg(F.count("*").alias("tf"))
-    )
-    tc = tf.groupBy("term").agg(F.sum("tf").cast("long").alias("c"))
-    lc = tc.select(
-        "term",
-        F.floor(F.log(F.col("c").cast("double")) * F.lit(1e6))
-        .cast("long")
-        .alias("lc"),
-    )
-    tot = tc.agg(
-        F.floor(F.log(F.sum("c").cast("double")) * F.lit(1e6))
-        .cast("long")
-        .alias("lt")
-    )
-    per_doc = (
-        tf.join(lc, "term")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("tf").cast("long").alias("n_tokens"),
-            F.sum(F.col("tf") * F.col("lc")).cast("long").alias("s_fp"),
-        )
-    )
-    scored = per_doc.join(F.broadcast(tot))
-    langs = docs.select(
-        "doc_id", F.col(lang_col).alias("lang")
-    )
-    s = scored.join(langs, "doc_id").select(
-        "doc_id",
-        "lang",
-        # s_fp >= 0 and n_tokens > 0, so truncating div == floor ==
-        # DuckDB's //
-        (F.expr("s_fp div n_tokens") - F.col("lt"))
-        .cast("long")
-        .alias("score_fp"),
+    langs = docs.select("doc_id", F.col(lang_col).alias("lang"))
+    # s_fp >= 0 and n_tokens > 0, so truncating div == floor == DuckDB's //
+    score = (F.expr("s_fp div n_tokens") - F.col("lt")).cast("long")
+    s = per_doc.join(F.broadcast(tot)).join(langs, "doc_id").select(
+        "doc_id", "lang", score.alias("score_fp")
     )
     kept = rank_sketch_kept(
-        s, id_col="doc_id", value_col="score_fp",
-        group_cols=["lang"], k=k,
+        s, id_col="doc_id", value_col="score_fp", group_cols=["lang"], k=k
     )
     thr = rank_sketch_quantiles(kept, ["lang"], percentiles=(33, 66))
-    out = s.join(
-        F.broadcast(thr.select("lang", "q33", "q66")), "lang"
-    )
+    out = s.join(F.broadcast(thr.select("lang", "q33", "q66")), "lang")
     bucket = (
         F.when(F.col("score_fp") > F.col("q66"), F.lit("head"))
         .when(F.col("score_fp") > F.col("q33"), F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
-    return out.select(
-        "doc_id", "lang", "score_fp", bucket.alias("bucket")
-    )
+    return out.select("doc_id", "lang", "score_fp", bucket.alias("bucket"))
 
 
 TFIDF_TOPK = 5
@@ -2007,35 +1900,12 @@ def collocations_g2(
     (one ln per cell of the o·n/(row·col) ratio)."""
     from ..functions.stats import g2_expr
 
-    words = _words(text_col)
-    bigrams = (
-        docs.select(words.alias("__w"))
-        .select(F.explode(bigram_structs("__w")).alias("bg"))
-        .select(F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    )
-    bc = bigrams.groupBy("w1", "w2").agg(
-        F.count("*").cast("long").alias("pair_cnt")
-    ).localCheckpoint()
-    left = bc.groupBy("w1").agg(F.sum("pair_cnt").cast("long").alias("lc"))
-    right = bc.groupBy("w2").agg(F.sum("pair_cnt").cast("long").alias("rc"))
-    total = bc.agg(F.sum("pair_cnt").cast("long").alias("nbi"))
     a = F.col("pair_cnt")
     b = F.col("lc") - a
     c = F.col("rc") - a
     d = F.col("nbi") - a - b - c
-    scored = (
-        bc.filter(F.col("pair_cnt") >= F.lit(int(min_count)))
-        .join(F.broadcast(left), "w1")
-        .join(F.broadcast(right), "w2")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "w1", "w2", "pair_cnt",
-            g2_expr(a, b, c, d, F.col("nbi")).alias("g2"),
-        )
-    )
-    return scored.orderBy(
-        F.desc("g2"), F.asc("w1"), F.asc("w2")
-    ).limit(int(k))
+    g2 = g2_expr(a, b, c, d, F.col("nbi"))
+    return _collocations(docs, text_col, min_count, k, "g2", g2)
 
 
 ENTROPY_LOW_FP = 1_500_000   # 1.5 nats: repeated-char / template junk
@@ -2077,16 +1947,12 @@ def char_entropy(docs: DataFrame, text_col: str = "text") -> DataFrame:
     per = chars.groupBy("doc_id", "ch").agg(
         F.count("*").cast("long").alias("c")
     )
-    lc = F.floor(
-        F.log(F.col("c").cast("double")) * F.lit(1e6)
-    ).cast("long")
+    lc = _micro(F.log(_dbl("c")))
     doc = per.groupBy("doc_id").agg(
         F.sum("c").cast("long").alias("n_chars"),
         F.sum(F.col("c") * lc).cast("long").alias("__s_fp"),
     )
-    ln_n = F.floor(
-        F.log(F.col("n_chars").cast("double")) * F.lit(1e6)
-    ).cast("long")
+    ln_n = _micro(F.log(_dbl("n_chars")))
     ent_fp = (ln_n - F.expr("__s_fp div n_chars")).cast("long")
     return doc.select(
         "doc_id",
@@ -2122,36 +1988,18 @@ def ngram_novelty(
     per-doc aggregate. Every post-explode relation is
     distinct-gram-sized, not corpus-token-sized; nothing quadratic,
     no windows."""
-    parts = ", ".join(f"element_at(__w, i + {j})" for j in range(n))
-    grams = (
-        f"CASE WHEN size(__w) >= {n} THEN "
-        f"transform(sequence(1, size(__w) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts})) "
-        f"ELSE array() END"
-    )
     dg = (
         docs.select("doc_id", _words(text_col).alias("__w"))
-        .select("doc_id", F.explode(F.expr(grams)).alias("ngram"))
+        .select("doc_id", F.explode(_ngram_strings(n)).alias("ngram"))
         .distinct()
     )
     first = dg.groupBy("ngram").agg(F.min("doc_id").alias("__first"))
-    novel = F.sum(
-        F.when(F.col("__first") == F.col("doc_id"), 1).otherwise(0)
-    ).cast("long")
-    return (
-        dg.join(first, "ngram")
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("long").alias("n_grams"),
-            novel.alias("n_novel"),
-        )
-        .select(
-            "doc_id",
-            "n_grams",
-            "n_novel",
-            (
-                F.col("n_novel").cast("double")
-                / F.col("n_grams").cast("double")
-            ).alias("novelty"),
-        )
+    novel = F.when(F.col("__first") == F.col("doc_id"), 1).otherwise(0)
+    per_doc = dg.join(first, "ngram").groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_grams"),
+        F.sum(novel).cast("long").alias("n_novel"),
+    )
+    novelty = _dbl("n_novel") / _dbl("n_grams")
+    return per_doc.select(
+        "doc_id", "n_grams", "n_novel", novelty.alias("novelty")
     )

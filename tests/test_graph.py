@@ -1,7 +1,7 @@
 """Graph-family contracts that span operators: every iterative integer
-operator is bit-identical under any partitioning, and component
-propagation that runs out of rounds fails loudly instead of returning
-partial labels."""
+operator (components_over_pairs included) is bit-identical under any
+partitioning, and component propagation that runs out of rounds fails
+loudly instead of returning partial labels."""
 
 from __future__ import annotations
 
@@ -41,6 +41,7 @@ def _run_all(spark, parts):
         "lpa": label_propagation(u),
         "kcore": kcore_peel(u, k=3),
         "cc_star": connected_components_star(u.toDF("src", "dst")),
+        "components": components_over_pairs(u.toDF("doc_a", "doc_b")),
     }
     return {k: sorted(tuple(r) for r in df.collect()) for k, df in ops.items()}
 

@@ -43,14 +43,21 @@ def test_entry_smoke(spark):
     assert df.columns == ["category", "term", "chi2", "rank"]
 
 
+_DEFAULT_TIER = (
+    "simsearch_", "similarity_join", "graph_", "basket_rules",
+    "lm_", "collocations_", "ngram_counts", "ngram_novelty",
+    "quality_perplexity_buckets",
+)
+
+
 def _oracle_param(name):
-    """The similarity-search family (simsearch_*, similarity_join*)
-    and the graph family (graph_*, basket_rules) run in the default
-    tier; the rest of the ~9 min registry sweep is `slow` (full tier:
-    pytest -m ""), as scripts/check_oracle covers the same ground."""
-    if name.startswith(
-        ("simsearch_", "similarity_join", "graph_", "basket_rules")
-    ):
+    """The similarity-search family (simsearch_*, similarity_join*),
+    the graph family (graph_*, basket_rules) and the text n-gram
+    family (lm_*, collocations_*, ngram_counts, ngram_novelty,
+    quality_perplexity_buckets) run in the default tier; the rest of
+    the ~9 min registry sweep is `slow` (full tier: pytest -m ""), as
+    scripts/check_oracle covers the same ground."""
+    if name.startswith(_DEFAULT_TIER):
         return name
     return pytest.param(name, marks=pytest.mark.slow)
 

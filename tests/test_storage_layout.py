@@ -140,61 +140,6 @@ def test_partitioned_write_prunes_partitions(spark, warehouse):
     assert rd.count() == ev.filter(F.col("day") == F.lit(one)).count()
 
 
-def test_zorder_clustering_bounds_both_dimensions(spark, warehouse):
-    """Z-order layout: every written file covers a compact Morton
-    segment, so per-file min/max zone maps are selective on BOTH
-    interleaved columns. A linear sort on l_orderkey leaves l_partkey
-    unclustered — a narrow partkey probe overlaps (almost) every
-    file; the Z-ordered layout must overlap strictly fewer."""
-    import glob
-
-    import pyarrow.parquet as pqt
-
-    from mapreduce_chisquare_spark.operators.layout import cluster_by_zorder
-
-    li = scan_parquet(spark, SF, "lineitem").select(
-        "l_orderkey", "l_partkey"
-    )
-
-    zpath = f"{warehouse}/li_z"
-    cluster_by_zorder(li, "l_orderkey", "l_partkey", n_files=8).write.mode(
-        "overwrite"
-    ).parquet(zpath)
-    lpath = f"{warehouse}/li_lin"
-    li.repartitionByRange(8, "l_orderkey").sortWithinPartitions(
-        "l_orderkey"
-    ).write.mode("overwrite").parquet(lpath)
-
-    def file_ranges(path, col):
-        out = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pqt.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                for ci in range(md.num_columns):
-                    c = md.row_group(rg).column(ci)
-                    if c.path_in_schema == col and c.statistics:
-                        mins.append(c.statistics.min)
-                        maxs.append(c.statistics.max)
-            if mins:
-                out.append((min(mins), max(maxs)))
-        return out
-
-    # narrow probe band on the SECOND dimension
-    lo, hi = 10, 30
-    z_hit = sum(
-        1 for a, b in file_ranges(zpath, "l_partkey") if a <= hi and b >= lo
-    )
-    lin_hit = sum(
-        1 for a, b in file_ranges(lpath, "l_partkey") if a <= hi and b >= lo
-    )
-    assert z_hit < lin_hit, (z_hit, lin_hit)
-    # and the z files must cover disjoint-ish Morton ranges: the
-    # first dimension stays prunable too
-    z_ok = file_ranges(zpath, "l_orderkey")
-    assert all(b - a < 6001 for a, b in z_ok), z_ok  # sf0.001 keyspace
-
-
 def test_bucketed_table_reuse_is_content_fingerprinted(spark):
     """Rebinding a bucketed-table name to DIFFERENT data of the same
     schema and row count must trigger a rebuild — the fingerprint
