@@ -395,14 +395,15 @@ SQL_MERGED_DICT = with_text_ctes(TOPK_CTES) + (
 def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4 end to end: write the report with the value-only text sink,
     read the files back, return the lines — oracle parity proves the
-    sink preserves content byte-for-byte."""
-    import uuid
+    sink preserves content byte-for-byte. The sink overwrites one
+    directory per SF, so a frame returned by an earlier call reads
+    files the next call replaces."""
     from pathlib import Path
 
     from ..sources.fixtures import _CACHE
     from ..sources.sinks import write_text
 
-    out = str(Path(_CACHE) / ("sink_" + uuid.uuid4().hex[:8]))
+    out = str(_CACHE / f"sink_report_{Path(sf_dir).name}")
     write_text(q_format_report(spark, sf_dir), out)
     return spark.read.text(out).select(F.col("value").alias("line"))
 

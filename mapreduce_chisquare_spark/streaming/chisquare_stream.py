@@ -15,7 +15,7 @@ the background; here it is an append-mode parquet directory per run.
 
 from __future__ import annotations
 
-import uuid
+import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,14 +55,19 @@ def incremental_chi_square(
     `in_dir`/`run_dir` override the stream source and checkpoint+store
     location — passing the SAME run_dir across calls resumes from the
     checkpoint and processes only files not yet committed (exactly-once
-    accumulation across restarts; tests/test_streaming_late.py)."""
+    accumulation across restarts; tests/test_streaming_late.py).
+    Without `run_dir`, each call starts from an empty `chi_run_<sf>`
+    directory under the fixture cache, so a frame returned by an
+    earlier call reads files the next call deletes."""
     if in_dir is None:
         in_dir = docs_multifile_dir(sf_dir, parts)
-    run = (
-        Path(run_dir)
-        if run_dir is not None
-        else Path(_CACHE) / ("chi_run_" + uuid.uuid4().hex[:8])
-    )
+    if run_dir is not None:
+        run = Path(run_dir)
+    else:
+        # one run directory per SF, emptied first: a reused checkpoint
+        # would resume (skip every committed file) instead of computing
+        run = _CACHE / f"chi_run_{Path(sf_dir).name}"
+        shutil.rmtree(run, ignore_errors=True)
     store = str(run / "partials")
 
     stream = (

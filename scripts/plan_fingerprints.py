@@ -8,8 +8,8 @@ show their in-loop plans, not the `Scan ExistingRDD` stub left after
 the checkpoint. Plans are normalized so that two runs of unchanged
 code give the same text: expression ids (`#12`), `[id=12]`,
 `plan_id=12`, lambda-variable counters (`x_12`), AQE query-stage ids
-(`ShuffleQueryStage 3`), whole-stage-codegen ids (`*(5)`), the
-checkout path and per-run uuid suffixes of cache directories.
+(`ShuffleQueryStage 3`), whole-stage-codegen ids (`*(5)`) and the
+checkout path.
 
 Usage:
   python scripts/plan_fingerprints.py [NAME ...]
@@ -52,9 +52,6 @@ _NORMALIZE = [
     (re.compile(r"\bx_\d+"), "x_"),
     (re.compile(r"QueryStage \d+"), "QueryStage"),
     (re.compile(r"\*\(\d+\)"), "*()"),
-    # per-run uuid suffixes of cache directories (sink_roundtrip,
-    # stream_chi_square)
-    (re.compile(r"(/\.cache/\w+?_)[0-9a-f]{8}\b"), r"\1*"),
 ]
 _HOOKED = ("localCheckpoint", "count", "collect")
 
