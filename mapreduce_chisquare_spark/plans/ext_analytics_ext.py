@@ -444,12 +444,6 @@ LIMIT 50
 """
 
 
-def stream_quality_filter_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.curation import quality_filter_stream
-
-    return quality_filter_stream(spark, sf_dir)
-
-
 SQL_STREAM_QUALITY = f"""
 WITH t AS (
   SELECT doc_id, lang,
@@ -609,18 +603,6 @@ SELECT part, bin_id, CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(n_tokens) AS BIGINT) AS sum_tokens
 FROM b GROUP BY part, bin_id
 """
-
-
-def stream_doc_chunk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.curation import chunk_stream
-
-    return chunk_stream(spark, sf_dir)
-
-
-def stream_static_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.joins import enrich_stream_static
-
-    return enrich_stream_static(spark, sf_dir)
 
 
 SQL_STREAM_STATIC_JOIN = """
@@ -2109,15 +2091,6 @@ WHERE n_ref > 0
 SQL_DQ_DRIFT_PSI = _sql_dq_drift_psi()
 
 
-def stream_anomaly_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming anomaly screen against a batch-trained profile —
-    same exact flag decision as ts_anomaly_zscore, so it shares its
-    oracle (streaming/diagnostics.py anomaly_screen_stream)."""
-    from ..streaming.diagnostics import anomaly_screen_stream
-
-    return anomaly_screen_stream(spark, sf_dir)
-
-
 def ts_seasonality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-series hour-of-day seasonality strength and peak hour
     (operators/timeseries.py ts_seasonality)."""
@@ -2225,15 +2198,6 @@ SQL_DEDUP_NORMALIZED = (
     "CAST(count(*) AS BIGINT) AS n_variants, min(doc_id) AS keep_doc_id "
     "FROM n WHERE norm_text <> '' GROUP BY 1 HAVING count(*) >= 2"
 )
-
-
-def stream_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateless streaming near-dup ingest screen: row-local band keys
-    probed against the existing corpus's static band index
-    (streaming/dedup.py neardup_screen_stream)."""
-    from ..streaming.dedup import neardup_screen_stream
-
-    return neardup_screen_stream(spark, sf_dir)
 
 
 SQL_STREAM_NEARDUP = (

@@ -20,7 +20,6 @@ from ..operators.multimodal import (
     sample_frames,
 )
 from ..sources.readers import scan_parquet
-from ..streaming.windows import tumbling_counts_stream
 from .oracle_common import CHI2_CTES, SQL_DELIM, SQL_STOPWORDS, with_text_ctes
 
 

@@ -177,12 +177,6 @@ SQL_SCAN_CSV = (
 )
 
 
-def stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.joins import attribution_to_completion
-
-    return attribution_to_completion(spark, sf_dir)
-
-
 SQL_STREAM_INTERVAL_JOIN = """
 SELECT c.event_id AS click_id, v.event_id AS view_id,
        c.user_id AS user_id,

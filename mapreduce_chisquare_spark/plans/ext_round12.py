@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import textstats as tx
+from ..streaming.urls import url_screen_stream
 from .ext_common import _docs
 
 
@@ -292,17 +293,6 @@ EXT_ROUND12_QUERIES.update(
 )
 
 
-def stream_url_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming crawl-frontier URL screen
-    (streaming/urls.py url_screen_stream): arriving pages
-    canonicalize row-locally and classify against the stored
-    corpus's static canonical index. availableNow drains the
-    backlog, so the batch SQL below is the exact oracle."""
-    from ..streaming.urls import url_screen_stream
-
-    return url_screen_stream(spark, sf_dir)
-
-
 SQL_STREAM_URL_SCREEN = """
 WITH c AS (
   SELECT doc_id,
@@ -342,7 +332,7 @@ FROM per
 
 EXT_ROUND12_QUERIES.update(
     {
-        "stream_url_screen": (stream_url_screen_q, SQL_STREAM_URL_SCREEN),
+        "stream_url_screen": (url_screen_stream, SQL_STREAM_URL_SCREEN),
         "dq_freshness": (dq_freshness_q, SQL_DQ_FRESHNESS),
     }
 )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..operators import imagehash as ih
 from ..operators import multimodal as mm
 from ..operators import sketches as sk
+from ..streaming.bloom import bloom_screen_stream
 from .ext_common import _docs
 from .oracle_common import sql_md5_hash32
 from .registry_analytics import SQL_QUANTILE_BUCKETIZE
@@ -296,16 +297,6 @@ def dedup_bloom_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sk.bloom_screen_merged(corpus, queries, "shard")
 
 
-def stream_bloom_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateless streaming Bloom screen (streaming/bloom.py): every
-    arriving document tests its k bit probes row-locally against the
-    literal bitset of the even-doc corpus filter. availableNow drains
-    the backlog, so the batch bit-math replay is the oracle."""
-    from ..streaming.bloom import bloom_screen_stream
-
-    return bloom_screen_stream(spark, sf_dir)
-
-
 SQL_STREAM_BLOOM_SCREEN = f"""
 WITH corpus AS (
   SELECT text AS key FROM documents
@@ -475,7 +466,7 @@ EXT_ROUND13_QUERIES: dict = {
     # merged build shares the one-shot oracle — decisions identical
     "dedup_bloom_merge": (dedup_bloom_merge_q, SQL_DEDUP_BLOOM_SCREEN),
     "stream_bloom_screen": (
-        stream_bloom_screen_q,
+        bloom_screen_stream,
         SQL_STREAM_BLOOM_SCREEN,
     ),
     "simsearch_hard_negatives": (

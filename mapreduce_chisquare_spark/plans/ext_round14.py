@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup as dd
 from ..sources.readers import scan_parquet
+from ..streaming.curation import blocklist_screen_stream
 from .ext_common import _docs, _events
 from .ext_retrieval import _BASE32_SQL, _SH_CTES
 
@@ -424,15 +425,6 @@ FROM v
 """
 
 
-def stream_toxicity_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming blocklist screen — identical code path to the batch
-    operator (streaming/curation.py blocklist_screen_stream),
-    certified by the batch oracle."""
-    from ..streaming.curation import blocklist_screen_stream
-
-    return blocklist_screen_stream(spark, sf_dir)
-
-
 EXT_ROUND14_QUERIES.update(
     {
         "g2_feature_scores": (g2_feature_scores_q, _sql_g2()),
@@ -443,7 +435,7 @@ EXT_ROUND14_QUERIES.update(
         ),
         "embed_dim_variance": (embed_dim_variance_q, _sql_dim_variance()),
         "stream_toxicity_screen": (
-            stream_toxicity_screen_q,
+            blocklist_screen_stream,
             _sql_toxicity_screen(),
         ),
     }

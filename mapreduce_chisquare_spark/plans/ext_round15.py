@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..operators import curation as cu
 from ..sources.readers import scan_parquet
+from ..streaming.curation import pii_screen_stream
 from .ext_common import _docs, _events
 
 EXT_ROUND15_QUERIES: dict = {}
@@ -89,15 +90,6 @@ FROM c
 """
 
 
-def stream_pii_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PII census — identical operator function and fixture
-    expression as the batch entry (streaming/curation.py
-    pii_screen_stream), certified by the batch oracle."""
-    from ..streaming.curation import pii_screen_stream
-
-    return pii_screen_stream(spark, sf_dir)
-
-
 # =========================================================================
 # Character-entropy gibberish screen (operators/textstats.py
 # char_entropy)
@@ -140,7 +132,7 @@ FROM e
 EXT_ROUND15_QUERIES.update(
     {
         "pii_screen": (pii_screen_q, _sql_pii_screen()),
-        "stream_pii_screen": (stream_pii_screen_q, _sql_pii_screen()),
+        "stream_pii_screen": (pii_screen_stream, _sql_pii_screen()),
         "char_entropy_screen": (char_entropy_q, _sql_char_entropy()),
     }
 )

@@ -1,4 +1,5 @@
-"""Event-time window, as-of/range join, and streaming-twin builders + oracle SQL.
+"""Event-time window and as-of/range join builders + oracle SQL, and the
+oracle SQL of their streaming twins.
 
 Split from registry_extensions.py (round 12) — pure mechanical move;
 registration order is unchanged (registry_extensions.py registers).
@@ -14,7 +15,6 @@ from .ext_common import (
     _events,
     asof_from_tagged,
     asof_join,
-    tumbling_counts_stream,
     with_text_ctes,
 )
 
@@ -309,41 +309,9 @@ GROUP BY p.event_id, p.user_id
 """
 
 
-def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_counts_stream(spark, sf_dir)
-
-
-def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact dedup (dropDuplicatesWithinWatermark); emits
-    the distinct (user_id, event_type) key set — batch DISTINCT is
-    the oracle."""
-    from ..streaming.windows import dedup_stream
-
-    return dedup_stream(spark, sf_dir)
-
-
 SQL_STREAM_DEDUP = "SELECT DISTINCT user_id, event_type FROM events"
-
-
-def stream_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental χ²: per-micro-batch partial counts merged via
-    foreachBatch — exact parity with the one-shot batch oracle."""
-    from ..streaming.chisquare_stream import incremental_chi_square
-
-    return incremental_chi_square(spark, sf_dir)
 
 
 SQL_STREAM_CHI = with_text_ctes(CHI2_CTES) + (
     " SELECT category, term, chi2 FROM chi"
 )
-
-
-def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful operator (applyInPandasWithState) run to
-    completion; per-user end-of-stream sentinels make it exactly equal
-    to the batch session-window oracle."""
-    from ..streaming.sessionize import sessionize_to_completion
-
-    return sessionize_to_completion(spark, sf_dir)
-
-

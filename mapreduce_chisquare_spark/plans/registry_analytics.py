@@ -25,6 +25,7 @@ from ..operators.graph import (
 )
 from ..operators.sketches import KMV_HASH_SPACE, kmv_distinct
 from ..sources.readers import scan_parquet
+from ..streaming.curation import gopher_screen_stream
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -734,19 +735,10 @@ ANALYTICS_QUERIES.update(
 )
 
 
-def stream_gopher_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Gopher screen — identical code path to the batch
-    operator (streaming/curation.py gopher_screen_stream), certified
-    by the batch oracle."""
-    from ..streaming.curation import gopher_screen_stream
-
-    return gopher_screen_stream(spark, sf_dir)
-
-
 ANALYTICS_QUERIES.update(
     {
         "stream_gopher_screen": (
-            stream_gopher_screen_q,
+            gopher_screen_stream,
             SQL_QUALITY_GOPHER_RULES,
         ),
     }

@@ -11,6 +11,19 @@ so both engines express byte-identical semantics.
 
 from __future__ import annotations
 
+from ..streaming.cdc import cdc_screen_stream
+from ..streaming.chisquare_stream import incremental_chi_square
+from ..streaming.curation import (
+    chunk_stream,
+    quality_filter_stream,
+    quality_model_stream,
+)
+from ..streaming.dedup import neardup_screen_stream
+from ..streaming.diagnostics import anomaly_screen_stream
+from ..streaming.joins import attribution_to_completion, enrich_stream_static
+from ..streaming.linkage import er_screen_stream
+from ..streaming.sessionize import sessionize_to_completion
+from ..streaming.windows import dedup_stream, tumbling_counts_stream
 from .ext_common import (
     DataFrame,
     F,
@@ -83,10 +96,6 @@ from .ext_temporal import (
     asof_purchase_click,
     asof_tolerance,
     join_range,
-    stream_chi_square,
-    stream_dedup,
-    stream_sessionize,
-    stream_tumbling,
     window_session,
     window_sliding,
     window_tumbling,
@@ -126,7 +135,6 @@ from .ext_curation import (
     repetition_q,
     sample_per_source_q,
     scan_csv_q,
-    stream_interval_join,
     winsorize_q,
 )
 from .ext_analytics_ext import (
@@ -250,11 +258,6 @@ from .ext_analytics_ext import (
     skew_profile_q,
     source_temperature_q,
     split_no_leakage_q,
-    stream_anomaly_screen_q,
-    stream_doc_chunk_q,
-    stream_neardup_q,
-    stream_quality_filter_q,
-    stream_static_join_q,
     tokens_to_ids_q,
     ts_anomaly_zscore_q,
     ts_changepoint_q,
@@ -283,7 +286,10 @@ EXTENSION_QUERIES = {
     "sample_per_source": (sample_per_source_q, SQL_SAMPLE_PER_SOURCE),
     "winsorize": (winsorize_q, SQL_WINSORIZE),
     "scan_csv": (scan_csv_q, SQL_SCAN_CSV),
-    "stream_interval_join": (stream_interval_join, SQL_STREAM_INTERVAL_JOIN),
+    "stream_interval_join": (
+        attribution_to_completion,
+        SQL_STREAM_INTERVAL_JOIN,
+    ),
     "resample_ffill": (resample_ffill_q, SQL_RESAMPLE_FFILL),
     "dq_profile": (dq_profile_q, SQL_DQ_PROFILE),
     "scd2_merge": (scd2_merge_q, SQL_SCD2_MERGE),
@@ -294,7 +300,7 @@ EXTENSION_QUERIES = {
     ),
     "zorder_values": (zorder_values_q, SQL_ZORDER_VALUES),
     "sink_partitioned": (sink_partitioned_q, SQL_SINK_PARTITIONED),
-    "stream_static_join": (stream_static_join_q, SQL_STREAM_STATIC_JOIN),
+    "stream_static_join": (enrich_stream_static, SQL_STREAM_STATIC_JOIN),
     "dedup_exact": (dedup_exact, SQL_DEDUP_EXACT),
     "dedup_minhash_lsh": (dedup_minhash_lsh, SQL_DEDUP_MINHASH),
     "dedup_minhash_lsh_k128": (dedup_minhash_lsh_k128, SQL_DEDUP_MINHASH_K128),
@@ -323,10 +329,10 @@ EXTENSION_QUERIES = {
     "asof_join": (asof_purchase_click, SQL_ASOF),
     "asof_tolerance": (asof_tolerance, SQL_ASOF_TOLERANCE),
     "join_range": (join_range, SQL_JOIN_RANGE),
-    "stream_tumbling": (stream_tumbling, SQL_WINDOW_TUMBLING),
-    "stream_dedup": (stream_dedup, SQL_STREAM_DEDUP),
-    "stream_sessionize": (stream_sessionize, SQL_WINDOW_SESSION),
-    "stream_chi_square": (stream_chi_square, SQL_STREAM_CHI),
+    "stream_tumbling": (tumbling_counts_stream, SQL_WINDOW_TUMBLING),
+    "stream_dedup": (dedup_stream, SQL_STREAM_DEDUP),
+    "stream_sessionize": (sessionize_to_completion, SQL_WINDOW_SESSION),
+    "stream_chi_square": (incremental_chi_square, SQL_STREAM_CHI),
     "pipeline_curation": (pipeline_curation, SQL_PIPELINE_CURATION),
     "multimodal_meta": (multimodal_meta, SQL_MULTIMODAL_META),
     "multimodal_decode": (multimodal_decode, SQL_MULTIMODAL_DECODE),
@@ -335,12 +341,12 @@ EXTENSION_QUERIES = {
     "join_bucketed": (join_bucketed_q, SQL_JOIN_BUCKETED),
     "ngram_counts": (ngram_counts_q, SQL_NGRAM_COUNTS),
     "join_bloom_prefilter": (join_bloom_prefilter_q, SQL_JOIN_BLOOM),
-    "stream_quality_filter": (stream_quality_filter_q, SQL_STREAM_QUALITY),
+    "stream_quality_filter": (quality_filter_stream, SQL_STREAM_QUALITY),
     "doc_chunk": (doc_chunk_q, SQL_DOC_CHUNK),
     "pack_sequences": (pack_sequences_q, SQL_PACK_SEQUENCES),
     "sink_orc_roundtrip": (sink_orc_roundtrip_q, SQL_SINK_ORC),
     "rollup_multigrain": (rollup_multigrain_q, SQL_ROLLUP_MULTIGRAIN),
-    "stream_doc_chunk": (stream_doc_chunk_q, SQL_DOC_CHUNK),
+    "stream_doc_chunk": (chunk_stream, SQL_DOC_CHUNK),
     "explode_outer_keywords": (explode_outer_keywords_q, SQL_EXPLODE_OUTER),
     # round-4 tail additions — queued for the round-5 certification
     # window per the registry rotation protocol (plans/registry.py)
@@ -393,7 +399,7 @@ EXTENSION_QUERIES = {
     "winnowing_fingerprint": (winnowing_fingerprint_q, SQL_WINNOWING),
     "bm25_topk": (bm25_topk_q, SQL_BM25_TOPK),
     "winnowing_pairs": (winnowing_pairs_q, SQL_WINNOWING_PAIRS),
-    "stream_neardup": (stream_neardup_q, SQL_STREAM_NEARDUP),
+    "stream_neardup": (neardup_screen_stream, SQL_STREAM_NEARDUP),
     "normalize_text": (normalize_text_q, SQL_NORMALIZE_TEXT),
     "dedup_normalized": (dedup_normalized_q, SQL_DEDUP_NORMALIZED),
     "skew_profile": (skew_profile_q, SQL_SKEW_PROFILE),
@@ -427,7 +433,7 @@ EXTENSION_QUERIES = {
     "ts_anomaly_zscore": (ts_anomaly_zscore_q, SQL_TS_ANOMALY_ZSCORE),
     "ts_seasonality": (ts_seasonality_q, SQL_TS_SEASONALITY),
     "stream_anomaly_screen": (
-        stream_anomaly_screen_q,
+        anomaly_screen_stream,
         SQL_TS_ANOMALY_ZSCORE,
     ),
     "ts_corr_topk": (ts_corr_topk_q, SQL_TS_CORR_TOPK),
@@ -831,18 +837,6 @@ SQL_SIMILARITY_JOIN_TOPK = (
 )
 
 
-def stream_quality_model_q(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Streaming learned quality filter — the row-local scorer
-    (streaming/curation.py quality_model_stream) whose output is
-    bit-identical to the batch broadcast-join scorer, so it shares
-    SQL_QUALITY_MODEL_SCORE as its oracle."""
-    from ..streaming.curation import quality_model_stream
-
-    return quality_model_stream(spark, sf_dir)
-
-
 EXTENSION_QUERIES.update(
     {
         # round-9 second batch — promoted into the round-9 window tail
@@ -856,7 +850,7 @@ EXTENSION_QUERIES.update(
             SQL_SIMILARITY_JOIN_TOPK,
         ),
         "stream_quality_model": (
-            stream_quality_model_q,
+            quality_model_stream,
             SQL_QUALITY_MODEL_SCORE,
         ),
     }
@@ -1288,16 +1282,6 @@ def _sql_hybrid_rrf() -> str:
 SQL_HYBRID_SEARCH_RRF = _sql_hybrid_rrf()
 
 
-def stream_er_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ER ingest screen (streaming/linkage.py
-    er_screen_stream): arriving typo'd records block-probe the static
-    customer dimension row-locally — stateless, append mode, the
-    batch new x static block join is the oracle."""
-    from ..streaming.linkage import er_screen_stream
-
-    return er_screen_stream(spark, sf_dir)
-
-
 SQL_STREAM_ER_SCREEN = (
     "WITH n AS (SELECT c_custkey + 10000000 AS new_id, "
     "lower(trim(substring(c_name, 1, 17))) AS nm, "
@@ -1322,7 +1306,7 @@ EXTENSION_QUERIES.update(
             hybrid_search_rrf_q,
             SQL_HYBRID_SEARCH_RRF,
         ),
-        "stream_er_screen": (stream_er_screen_q, SQL_STREAM_ER_SCREEN),
+        "stream_er_screen": (er_screen_stream, SQL_STREAM_ER_SCREEN),
     }
 )
 
@@ -2322,16 +2306,6 @@ EXTENSION_QUERIES.update(
 )
 
 
-def stream_cdc_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CDC ingest screen (streaming/cdc.py
-    cdc_screen_stream): arriving change rows classify themselves
-    against the static snapshot — stateless, append mode, the batch
-    classification join is the oracle."""
-    from ..streaming.cdc import cdc_screen_stream
-
-    return cdc_screen_stream(spark, sf_dir)
-
-
 SQL_STREAM_CDC_SCREEN = """
 WITH base AS (
   SELECT o_orderkey AS k,
@@ -2359,7 +2333,7 @@ EXTENSION_QUERIES.update(
     {
         # round-11 fifth batch (continued) — registry tail, queued
         # for the round-12 certification window
-        "stream_cdc_screen": (stream_cdc_screen_q, SQL_STREAM_CDC_SCREEN),
+        "stream_cdc_screen": (cdc_screen_stream, SQL_STREAM_CDC_SCREEN),
     }
 )
 

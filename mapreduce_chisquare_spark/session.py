@@ -18,6 +18,13 @@ cap over 4 LRU segments, so 4096 leaves each segment ~1,024 slots for
 ~690 expected entries. The price is JVM metaspace: holding all 2,755
 classes took it from 77 MB to 203 MB. Only compiled classes are kept;
 every run still reads its input and computes its result.
+
+The cache is keyed on the generated source, and by default the class
+name carries the codegen stage id (`GeneratedIteratorForCodegenStage<N>`).
+Under AQE the ids follow the order in which query stages are planned,
+which changes from run to run, so an unchanged query could miss the
+cache. `spark.sql.codegen.useIdInClassName=false` drops the id from the
+class name; plans keep their `*(N)` ids.
 """
 
 from __future__ import annotations
@@ -42,6 +49,7 @@ def get_spark(app_name: str = "mapreduce_chisquare_spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

@@ -25,6 +25,8 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 
+from .readers import ts_unit
+
 _REPO_ROOT = Path(__file__).resolve().parents[2]
 _CACHE = _REPO_ROOT / ".cache"
 
@@ -153,16 +155,6 @@ def docs_multifile_dir(sf_dir: str, parts: int = 4) -> str:
 _STREAM_FIXTURE_FMT = "v2"
 
 
-def _ts_unit_of(ts_type) -> str:
-    """Unit of an arrow ts type; a plain (unitless) INT64 ts is by
-    convention raw epoch NANOS — mirror of windows._dir_ts_unit."""
-    import pyarrow as pa
-
-    if pa.types.is_timestamp(ts_type):
-        return ts_type.unit
-    return "ns"
-
-
 def events_stream_dir(sf_dir: str) -> str:
     """Build <cache>/stream_events_<sf>/ = events.parquet (hardlinked or
     copied) + a sentinel parquet with one event per user at
@@ -174,11 +166,8 @@ def events_stream_dir(sf_dir: str) -> str:
     d = _CACHE / f"stream_events_{tag}"
     done = d / "_FIXTURE_READY"
     src = Path(sf_dir) / "events.parquet"
-    stamp = (
-        _STREAM_FIXTURE_FMT
-        + ":"
-        + _ts_unit_of(pq.read_schema(src).field("ts").type)
-    )
+    unit = ts_unit(str(src))
+    stamp = f"{_STREAM_FIXTURE_FMT}:{unit}"
     if done.exists() and done.read_text() == stamp:
         return str(d)
     _CACHE.mkdir(exist_ok=True)
@@ -200,7 +189,6 @@ def events_stream_dir(sf_dir: str) -> str:
 
     tbl = pq.read_table(src, columns=["ts", "user_id"])
     src_ts_type = tbl.schema.field("ts").type
-    unit = _ts_unit_of(src_ts_type)
     per_sec = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}[unit]
     ts_raw = tbl.column("ts").cast(pa.int64())
     max_raw = pa.compute.max(ts_raw).as_py()

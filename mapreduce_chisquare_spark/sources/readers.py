@@ -17,12 +17,14 @@ from .. import schemas
 from ..constants import STOPWORDS
 
 
-def _events_ts_unit(path: str) -> str:
-    """Physical unit of events.ts, read from the parquet footer (a
-    driver-side metadata read, no data scanned). The test generator has
-    shipped both timestamp[ns] and timestamp[us] variants, so the scan
-    must adapt instead of assuming one. A plain (non-timestamp) INT64
-    ts is by convention raw epoch NANOS → "ns"."""
+def ts_unit(path: str) -> str:
+    """Physical unit of the `ts` column of the parquet file at `path`,
+    read from its footer (a driver-side metadata read, no data
+    scanned). The test generator has shipped both timestamp[ns] and
+    timestamp[us] events, so scans must adapt instead of assuming one.
+    A plain (non-timestamp) INT64 ts is by convention raw epoch NANOS
+    → "ns". Local-filesystem paths only: the footer read goes through
+    pyarrow, not the Hadoop FS layer."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -32,30 +34,34 @@ def _events_ts_unit(path: str) -> str:
     return "ns"
 
 
-def scan_parquet(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """S6: schema-pinned parquet scan of a driver table.
+# events with ts read as its raw int64 epoch nanos: Spark's
+# TimestampType (micros) reader rejects parquet timestamp[ns]
+RAW_EVENTS = T.StructType(
+    [
+        T.StructField("ts", T.LongType()) if f.name == "ts" else f
+        for f in schemas.EVENTS.fields
+    ]
+)
 
-    events.ts may be parquet timestamp[ns], which Spark's TimestampType
-    (micros) reader rejects; in that case read it as int64 nanos and
-    convert with INTEGER division (`div`) — a double division would
-    lose precision at ~1.7e18 ns. Truncation toward zero matches
-    DuckDB's ns→micros cast for post-epoch data. timestamp[us] (Spark's
-    native unit) is read directly.
+
+def ts_from_nanos(df: DataFrame) -> DataFrame:
+    """Raw int64 nanos ts → Spark micros timestamp by INTEGER division
+    (`div`): a double division would lose precision at ~1.7e18 ns.
+    Truncation toward zero matches DuckDB's ns→micros cast for
+    post-epoch data."""
+    return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+
+
+def scan_parquet(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """S6: schema-pinned parquet scan of a driver table. events.ts in
+    parquet timestamp[ns] is read as raw nanos (RAW_EVENTS) and
+    converted by ts_from_nanos; timestamp[us] (Spark's native unit) is
+    read directly.
     """
-    schema = schemas.TABLE_SCHEMAS[table]
     path = f"{sf_dir}/{table}.parquet"
-    if table == "events" and _events_ts_unit(path) == "ns":
-        raw = T.StructType(
-            [
-                T.StructField("ts", T.LongType())
-                if f.name == "ts"
-                else f
-                for f in schema.fields
-            ]
-        )
-        df = spark.read.schema(raw).parquet(path)
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.schema(schema).parquet(path)
+    if table == "events" and ts_unit(path) == "ns":
+        return ts_from_nanos(spark.read.schema(RAW_EVENTS).parquet(path))
+    return spark.read.schema(schemas.TABLE_SCHEMAS[table]).parquet(path)
 
 
 def scan_json_reviews(spark: SparkSession, path: str) -> DataFrame:

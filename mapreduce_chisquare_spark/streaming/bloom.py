@@ -18,15 +18,11 @@ streaming or membership-sketch surface; extension over SURVEY.md §2.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.sketches import BLOOM_K, BLOOM_M, bloom_bits
-from ..schemas import DOCUMENTS
-from ..sources.fixtures import table_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 
 def _bit_expr(key: F.Column, j: int, m: int) -> F.Column:
@@ -75,12 +71,7 @@ def bloom_screen_stream(
     words = [w - (1 << 64) if w >= (1 << 63) else w for w in words]
     bitmap = F.array(*[F.lit(w).cast("long") for w in words])
 
-    in_dir = table_multifile_dir(sf_dir, "documents", parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     probes = stream.filter(F.col("text").isNotNull()).select(
         "doc_id",
         bitmap.alias("__bm"),
@@ -104,14 +95,4 @@ def bloom_screen_stream(
     for hcol in hit[1:]:
         allhit = allhit & hcol
     screened = probes.select("doc_id", allhit.alias("maybe_dup"))
-    name = "stream_bloom_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_bloom")

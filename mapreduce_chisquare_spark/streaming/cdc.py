@@ -17,14 +17,10 @@ streaming or CDC surface; this is extension surface over SURVEY.md §2.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import ORDERS
-from ..sources.fixtures import table_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 
 def cdc_screen_stream(
@@ -52,12 +48,7 @@ def cdc_screen_stream(
             .alias("base_v"),
         )
     )
-    in_dir = table_multifile_dir(sf_dir, "orders", parts)
-    stream = (
-        spark.readStream.schema(ORDERS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "orders", parts)
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
     changes = stream.select(
         F.col("o_orderkey").alias("k"),
@@ -80,14 +71,4 @@ def cdc_screen_stream(
     screened = changes.join(F.broadcast(base), "k", "left").select(
         "k", "op", "v", klass.alias("klass")
     )
-    name = "stream_cdc_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_cdc")

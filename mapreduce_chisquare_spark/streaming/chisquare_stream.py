@@ -28,9 +28,8 @@ from ..operators.contingency import (
     chi_square_from_counts,
     term_cat_counts,
 )
-from ..schemas import DOCUMENTS
-from ..sources.fixtures import _CACHE, docs_multifile_dir
-from .tuning import state_partitions
+from ..sources.fixtures import _CACHE
+from .run import file_source, state_partitions
 
 
 def incremental_chi_square(
@@ -59,8 +58,6 @@ def incremental_chi_square(
     Without `run_dir`, each call starts from an empty `chi_run_<sf>`
     directory under the fixture cache, so a frame returned by an
     earlier call reads files the next call deletes."""
-    if in_dir is None:
-        in_dir = docs_multifile_dir(sf_dir, parts)
     if run_dir is not None:
         run = Path(run_dir)
     else:
@@ -70,11 +67,7 @@ def incremental_chi_square(
         shutil.rmtree(run, ignore_errors=True)
     store = str(run / "partials")
 
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts, in_dir)
 
     # Both partial relations go to ONE tagged store (term IS NULL =
     # per-category doc count) so each micro-batch submits a single

@@ -13,15 +13,11 @@ equals the batch plan and the batch SQL is the oracle.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import STOPWORDS
-from ..schemas import DOCUMENTS
-from ..sources.fixtures import docs_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 MIN_TOKENS = 20
 MAX_STOP_RATIO = 0.10
@@ -37,12 +33,7 @@ def quality_filter_stream(
     Expressions mirror operators/textstats.quality_score exactly
     (same single-division ratios), so values hash-match the batch
     oracle."""
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     words = F.filter(
         F.split(F.lower(F.col("text")), "\\s+"), lambda t: t != ""
     )
@@ -70,17 +61,7 @@ def quality_filter_stream(
             "stop_ratio",
         )
     )
-    name = "stream_quality_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            gated.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(gated, "stream_quality")
 
 
 def chunk_stream(
@@ -94,24 +75,9 @@ def chunk_stream(
     rows without a second batch pass over the corpus."""
     from ..operators.packing import chunk_documents
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     chunks = chunk_documents(stream, chunk_tokens=CHUNK_TOKENS)
-    name = "stream_chunk_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            chunks.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(chunks, "stream_chunk")
 
 
 def gopher_screen_stream(
@@ -126,24 +92,9 @@ def gopher_screen_stream(
     expressions, the identical code path."""
     from ..operators.textstats import quality_gopher_rules
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     screened = quality_gopher_rules(stream)
-    name = "stream_gopher_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_gopher")
 
 
 def quality_model_stream(
@@ -160,24 +111,9 @@ def quality_model_stream(
     at scan speed as they arrive."""
     from ..operators.curation import quality_model_score_rowlocal
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     scored = quality_model_score_rowlocal(stream)
-    name = "stream_qmodel_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            scored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(scored, "stream_qmodel")
 
 
 def blocklist_screen_stream(
@@ -189,28 +125,11 @@ def blocklist_screen_stream(
     legal in append mode unchanged, so every micro-batch is screened
     at scan speed and the batch oracle certifies the stream output
     verbatim (the stream_gopher_screen discipline)."""
-    import uuid
-
     from ..operators.curation import blocklist_screen
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     screened = blocklist_screen(stream)
-    name = "stream_blocklist_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_blocklist")
 
 
 def pii_screen_stream(
@@ -225,23 +144,8 @@ def pii_screen_stream(
     stream_gopher_screen discipline)."""
     from ..operators.curation import pii_inject_expr, pii_screen
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     screened = pii_screen(
         stream.select("doc_id", pii_inject_expr().alias("text"))
     )
-    name = "stream_pii_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_pii")

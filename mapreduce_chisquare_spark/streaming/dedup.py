@@ -23,8 +23,6 @@ extension the build brief adds over SURVEY.md §2.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,9 +31,7 @@ from ..operators.dedup import (
     shingles,
     with_row_local_band_keys,
 )
-from ..schemas import DOCUMENTS
-from ..sources.fixtures import docs_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 
 def neardup_screen_stream(
@@ -54,12 +50,7 @@ def neardup_screen_stream(
         .select(F.col("doc_id").alias("dup_of"), "band", "key")
     )
 
-    in_dir = docs_multifile_dir(sf_dir, parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     new = stream.filter(F.col("doc_id") % 10 == 0)
     # sub-shingle docs emit an EMPTY band array (no rows on explode),
     # mirroring the aggregate form — no extra length guard needed
@@ -70,14 +61,4 @@ def neardup_screen_stream(
         F.broadcast(index), ["band", "key"]
     ).select("doc_id", "band", "dup_of")
 
-    name = "stream_neardup_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            flagged.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(flagged, "stream_neardup")

@@ -17,12 +17,11 @@ runs; the stream side is embarrassingly parallel.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.timeseries import zscore_flag_exprs
+from .run import to_completion
 from .windows import read_events_stream
 
 
@@ -59,13 +58,4 @@ def anomaly_screen_stream(
         .filter(cond)
         .select("user_id", "event_id", z.alias("z"))
     )
-    name = "stream_anomaly_" + uuid.uuid4().hex[:8]
-    q = (
-        flagged.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_completion(flagged, "stream_anomaly")

@@ -16,12 +16,10 @@ interval-seconds' worth of views per user — the same plan shape a
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .tuning import state_partitions
+from .run import to_completion
 from .windows import read_events_stream
 
 ATTRIBUTION_SECONDS = 600
@@ -93,16 +91,7 @@ def enrich_stream_static(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = purchases.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "n_name", "value"
     )
-    name = "stream_enrich_" + uuid.uuid4().hex[:8]
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return to_completion(enriched, "stream_enrich")
 
 
 def attribution_to_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,15 +106,4 @@ def attribution_to_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_c = read_events_stream(spark, sf_dir).filter(
         F.col("event_type") == "click"
     )
-    name = "stream_attrib_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            interval_join_stream(ev_v, ev_c)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(interval_join_stream(ev_v, ev_c), "stream_attrib")

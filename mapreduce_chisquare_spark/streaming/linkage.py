@@ -23,14 +23,10 @@ SURVEY.md §2.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import CUSTOMER
-from ..sources.fixtures import table_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 
 def er_screen_stream(
@@ -62,12 +58,7 @@ def er_screen_stream(
             F.substring("c_name", 10, 8).alias("blk"),
         )
     )
-    in_dir = table_multifile_dir(sf_dir, "customer", parts)
-    stream = (
-        spark.readStream.schema(CUSTOMER)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "customer", parts)
     arrivals = stream.filter(F.col("c_custkey") % 7 == 0).select(
         (F.col("c_custkey") + F.lit(10_000_000)).alias("new_id"),
         F.lower(F.trim(F.substring("c_name", 1, 17))).alias("nm"),
@@ -84,14 +75,4 @@ def er_screen_stream(
             dist.cast("long").alias("dist"),
         )
     )
-    name = "stream_er_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            matched.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(matched, "stream_er")

@@ -116,29 +116,18 @@ def sessionize_to_completion(spark, sf_dir: str) -> DataFrame:
     every real session (the sentinel's own session stays in state,
     unemitted), so the result is exactly the batch session-window
     relation (user_id, sess_start epoch-sec, n_events)."""
-    import uuid
-
     from pyspark.sql import functions as F
 
     from ..sources.fixtures import events_stream_dir
-    from .tuning import state_partitions
+    from .run import to_completion
     from .windows import read_events_stream
 
     ev = read_events_stream(
         spark, events_stream_dir(sf_dir), glob="*.parquet"
     )
-    name = "stream_sessionize_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            sessionize_stream(ev, idle_timeout_ms=None)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).select(
+    return to_completion(
+        sessionize_stream(ev, idle_timeout_ms=None), "stream_sessionize"
+    ).select(
         "user_id",
         F.expr("session_start_us div 1000000").alias("sess_start"),
         "n_events",

@@ -19,15 +19,11 @@ streaming or URL surface; this is extension surface over SURVEY.md §2.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.curation import canonicalize_url
-from ..schemas import DOCUMENTS
-from ..sources.fixtures import table_multifile_dir
-from .tuning import state_partitions
+from .run import file_source, to_completion
 
 
 def _messy_url(doc_id_col: str = "doc_id") -> F.Column:
@@ -102,12 +98,7 @@ def url_screen_stream(
         .distinct()
         .withColumn("__known", F.lit(1))
     )
-    in_dir = table_multifile_dir(sf_dir, "documents", parts)
-    stream = (
-        spark.readStream.schema(DOCUMENTS)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in_dir)
-    )
+    stream = file_source(spark, sf_dir, "documents", parts)
     pages = stream.select(
         "doc_id",
         canonicalize_url(_messy_url("doc_id")).alias("canon_url"),
@@ -117,14 +108,4 @@ def url_screen_stream(
         "canon_url",
         F.col("__known").isNotNull().alias("is_known"),
     )
-    name = "stream_url_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            screened.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(screened, "stream_url")

@@ -13,46 +13,15 @@ sessionize.py.
 
 from __future__ import annotations
 
-import uuid
+import fnmatch
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import schemas
-from .tuning import state_partitions
-
-_RAW_EVENTS = T.StructType(
-    [
-        T.StructField("ts", T.LongType()) if f.name == "ts" else f
-        for f in schemas.EVENTS.fields
-    ]
-)
-
-
-def _dir_ts_unit(sf_dir: str, glob: str) -> str:
-    """Physical unit of ts across the parquet files the stream will
-    read — probed from one footer (driver-side, no data scan). The
-    fixture builder keeps every file in a directory in one unit.
-
-    A plain (non-timestamp-annotated) INT64 ts is by convention raw
-    epoch NANOS, so it maps to "ns" — only an arrow timestamp type
-    carries a trustworthy unit. Local-filesystem paths only: the
-    footer probe goes through os.listdir, not the Hadoop FS layer
-    (the pure-Spark batch readers have no such restriction)."""
-    import fnmatch
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    for name in sorted(os.listdir(sf_dir)):
-        if fnmatch.fnmatch(name, glob):
-            field = pq.read_schema(os.path.join(sf_dir, name)).field("ts")
-            if pa.types.is_timestamp(field.type):
-                return field.type.unit
-            return "ns"
-    return "us"
+from ..sources.readers import RAW_EVENTS, ts_from_nanos, ts_unit
+from .run import to_completion
 
 
 def read_events_stream(
@@ -62,23 +31,26 @@ def read_events_stream(
     options: dict[str, str] | None = None,
 ) -> DataFrame:
     """File-source stream over the events parquet. ts lands as Spark's
-    micros TimestampType whatever the file's physical unit: ns files
-    are read as raw int64 and integer-divided (same as the batch
-    reader); µs files are read natively. `options` go to the source
-    (e.g. maxFilesPerTrigger to split the backlog into several
-    micro-batches)."""
-    is_ns = _dir_ts_unit(sf_dir, glob) == "ns"
+    micros TimestampType whatever the file's physical unit, probed from
+    the first matching file's footer (the fixture builder keeps every
+    file in a directory in one unit): ns files are read as raw int64
+    and integer-divided (same as the batch reader); µs files are read
+    natively. `options` go to the source (e.g. maxFilesPerTrigger to
+    split the backlog into several micro-batches)."""
+    first = next(
+        (n for n in sorted(os.listdir(sf_dir)) if fnmatch.fnmatch(n, glob)),
+        None,
+    )
+    is_ns = first is not None and ts_unit(os.path.join(sf_dir, first)) == "ns"
     reader = (
-        spark.readStream.schema(_RAW_EVENTS if is_ns else schemas.EVENTS)
+        spark.readStream.schema(RAW_EVENTS if is_ns else schemas.EVENTS)
         .format("parquet")
         .option("pathGlobFilter", glob)
     )
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load(sf_dir)
-    if is_ns:
-        raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw
+    return ts_from_nanos(raw) if is_ns else raw
 
 
 def tumbling_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -102,17 +74,7 @@ def tumbling_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_cents",
         )
     )
-    name = "stream_tumbling_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(agg, "stream_tumbling", mode="complete")
 
 
 def dedup_stream(
@@ -136,14 +98,4 @@ def dedup_stream(
     deduped = ev.dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     ).select("user_id", "event_type")
-    name = "stream_dedup_" + uuid.uuid4().hex[:8]
-    with state_partitions(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return to_completion(deduped, "stream_dedup")

@@ -5,11 +5,16 @@ core count, records the executed plan at every eager action the
 builder runs (`localCheckpoint`, `count`, `collect`), then collects the
 result and records the AQE-final plan. Checkpointed operators thus
 show their in-loop plans, not the `Scan ExistingRDD` stub left after
-the checkpoint. Plans are normalized so that two runs of unchanged
-code give the same text: expression ids (`#12`), `[id=12]`,
-`plan_id=12`, lambda-variable counters (`x_12`), AQE query-stage ids
-(`ShuffleQueryStage 3`), whole-stage-codegen ids (`*(5)`) and the
-checkout path.
+the checkpoint. A streaming query's last micro-batch plan is recorded
+when the builder awaits its termination (`stream`): a memory-sink
+entry's final plan is only a `LocalTableScan` of the sink. Plans are
+normalized so that two runs of unchanged code give the same text:
+expression ids (`#12`), `[id=12]`, `plan_id=12`, lambda-variable
+counters (`x_12`), AQE query-stage ids (`ShuffleQueryStage 3`),
+whole-stage-codegen ids (`*(5)`), the checkout path, and the per-run
+tokens of a streaming plan (sink object hashes, temporary checkpoint
+directories, run ids, watermark node ids and the batch timestamp of a
+stateful operator).
 
 Usage:
   python scripts/plan_fingerprints.py [NAME ...]
@@ -52,6 +57,12 @@ _NORMALIZE = [
     (re.compile(r"\bx_\d+"), "x_"),
     (re.compile(r"QueryStage \d+"), "QueryStage"),
     (re.compile(r"\*\(\d+\)"), "*()"),
+    (re.compile(r"MemoryStreamingWrite@[0-9a-f]+"), "MemoryStreamingWrite@"),
+    (re.compile(r"file:/tmp/temporary-[0-9a-f-]+"), "file:/tmp/temporary-"),
+    (re.compile(r"runId = [0-9a-f-]+"), "runId = "),
+    (re.compile(r"EventTimeWatermark [0-9a-f-]+"), "EventTimeWatermark "),
+    (re.compile(r"(NoTimeout|ProcessingTimeTimeout|EventTimeTimeout), \d+,"),
+     r"\1, ,"),
 ]
 _HOOKED = ("localCheckpoint", "count", "collect")
 
@@ -70,6 +81,7 @@ def record(names: list[str], root: Path) -> dict[str, list[list[str]]]:
     os.chdir(root)
     sys.path.insert(0, str(root))
     from pyspark.sql.classic.dataframe import DataFrame
+    from pyspark.sql.streaming.query import StreamingQuery
 
     from mapreduce_chisquare_spark.constants import DEFAULT_SF_DIR
     from mapreduce_chisquare_spark.plans.registry import REGISTRY
@@ -85,6 +97,10 @@ def record(names: list[str], root: Path) -> dict[str, list[list[str]]]:
         text = df._jdf.queryExecution().executedPlan().toString()
         return normalize(text, str(root))
 
+    def stream_plan_of(query) -> str:
+        last = query._jsq.streamingQuery().lastExecution()
+        return normalize(last.executedPlan().toString(), str(root))
+
     actions: list[list[str]] = []
     originals = {m: getattr(DataFrame, m) for m in _HOOKED}
 
@@ -97,11 +113,19 @@ def record(names: list[str], root: Path) -> dict[str, list[list[str]]]:
 
         return run
 
+    await_termination = StreamingQuery.awaitTermination
+
+    def awaited(self, *args, **kwargs):
+        result = await_termination(self, *args, **kwargs)
+        actions.append(["stream", stream_plan_of(self)])
+        return result
+
     out = {}
     for name in names or list(REGISTRY):
         actions = []
         for m in _HOOKED:
             setattr(DataFrame, m, hooked(m))
+        StreamingQuery.awaitTermination = awaited
         try:
             df = REGISTRY[name][0](spark, sf_dir)
         except Exception as exc:  # noqa: BLE001 — record, keep going
@@ -110,6 +134,7 @@ def record(names: list[str], root: Path) -> dict[str, list[list[str]]]:
         finally:
             for m, orig in originals.items():
                 setattr(DataFrame, m, orig)
+            StreamingQuery.awaitTermination = await_termination
         if df is not None:
             try:
                 df.collect()

@@ -47,16 +47,22 @@ _DEFAULT_TIER = (
     "simsearch_", "similarity_join", "graph_", "basket_rules",
     "lm_", "collocations_", "ngram_counts", "ngram_novelty",
     "quality_perplexity_buckets",
+    "stream_tumbling", "stream_dedup", "stream_sessionize",
+    "stream_chi_square", "stream_static_join", "stream_anomaly_screen",
+    "stream_gopher_screen", "stream_toxicity_screen", "stream_cdc_screen",
+    "stream_er_screen", "stream_bloom_screen",
 )
 
 
 def _oracle_param(name):
     """The similarity-search family (simsearch_*, similarity_join*),
-    the graph family (graph_*, basket_rules) and the text n-gram
-    family (lm_*, collocations_*, ngram_counts, ngram_novelty,
-    quality_perplexity_buckets) run in the default tier; the rest of
-    the ~9 min registry sweep is `slow` (full tier: pytest -m ""), as
-    scripts/check_oracle covers the same ground."""
+    the graph family (graph_*, basket_rules), the text n-gram family
+    (lm_*, collocations_*, ngram_counts, ngram_novelty,
+    quality_perplexity_buckets) and one streaming entry per
+    run-to-completion shape (complete mode, stateful, foreachBatch,
+    stream-static joins, stateless screens) run in the default tier;
+    the rest of the ~9 min registry sweep is `slow` (full tier:
+    pytest -m ""), as scripts/check_oracle covers the same ground."""
     if name.startswith(_DEFAULT_TIER):
         return name
     return pytest.param(name, marks=pytest.mark.slow)

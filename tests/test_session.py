@@ -1,5 +1,6 @@
 """The session factory's working-set settings, and the registry entries
-that write under the fixture cache."""
+that leave state behind: files under the fixture cache and tables in
+the session catalog."""
 
 from __future__ import annotations
 
@@ -88,3 +89,18 @@ def test_cache_writing_entries_reuse_one_directory(spark, sf_dir):
     # one file per micro-batch, written anew by the second call
     assert len(stores[0]) == len(stores[1]) == 2
     assert not stores[0] & stores[1]
+
+
+def test_stream_entries_replace_their_sink_table(spark, sf_dir):
+    """A second call of a memory-sink entry replaces that entry's table
+    in the session catalog instead of adding one, and a frame returned
+    by the first call still reads its own rows."""
+    names = ("stream_gopher_screen", "stream_tumbling")
+    first = {name: REGISTRY[name][0](spark, sf_dir) for name in names}
+    rows = {name: sorted(map(tuple, df.collect())) for name, df in first.items()}
+    tables = {t.name for t in spark.catalog.listTables()}
+    for name in names:
+        REGISTRY[name][0](spark, sf_dir).collect()
+    assert {t.name for t in spark.catalog.listTables()} <= tables
+    for name, df in first.items():
+        assert rows[name] and sorted(map(tuple, df.collect())) == rows[name], name
