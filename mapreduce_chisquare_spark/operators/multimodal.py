@@ -17,6 +17,18 @@ At scale: binary columns stay columnar in parquet, mapInPandas
 processes Arrow batches (no per-row Python), and decode parallelism is
 partition parallelism — repartition by size buckets before decoding to
 even out skew from large blobs.
+
+Media fixtures: every synthesized corpus is `synth_media(ids, encode)`
+(or `_synth_batch(encode)` mapped directly), a (doc_id, payload)
+relation of MEDIA_SCHEMA. `encode` maps an int doc id to the bytes of
+one real container (synth_png, synth_png_palette, synth_gif,
+synth_jpeg, synth_wav_pcm, synth_avi_frames, synth_av) and the kernel
+is named after it, so a plan says which format it synthesizes. Ids
+>= PHASH_CLONE_OFFSET are clones (clone_ids adds one per 20th doc):
+the clone encoders synth_png_clone / synth_avi_clone re-encode the
+base id's pixels with one grid-sample pixel perturbed. Each encoder's
+pixels or samples are integer formulas of the doc id that the DuckDB
+twins state on their own.
 """
 
 from __future__ import annotations
@@ -38,6 +50,43 @@ DECODED_SCHEMA = T.StructType(
         T.StructField("n_frames", T.IntegerType()),
     ]
 )
+
+
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("payload", T.BinaryType()),
+    ]
+)
+
+
+def _synth_batch(encode):
+    """Arrow-batched fixture synthesis (doc_id -> payload =
+    encode(doc_id)), named `<encoder>_batch` for the plan."""
+
+    def run(batches: Iterator) -> Iterator:
+        import pandas as pd  # local import: executors only
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"],
+                    "payload": [encode(int(d)) for d in pdf["doc_id"]],
+                }
+            )
+
+    run.__name__ = f"{encode.__name__}_batch"
+    return run
+
+
+def synth_media(ids: DataFrame, encode) -> DataFrame:
+    """(doc_id, payload binary) of `encode`'s real container bytes per
+    id — narrow mapInPandas over the spread doc_id relation
+    (parallelism floor, operators/spread.py); the binary column stays
+    columnar exactly as a parquet-stored media column would."""
+    return spread_for_kernel(ids.select("doc_id"), "doc_id").mapInPandas(
+        _synth_batch(encode), MEDIA_SCHEMA
+    )
 
 
 def binarize_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -592,28 +641,11 @@ def _av_synth_params(doc_id: int):
     )
 
 
-def av_synth_batch(batches):
-    """Synthesize real WAV/AVI payloads from doc ids (deterministic
-    closed forms — _av_synth_params)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        payloads = []
-        for doc_id in pdf["doc_id"]:
-            p = _av_synth_params(int(doc_id))
-            if p[0] == "audio":
-                payloads.append(synth_wav(p[1], p[2], p[3]))
-            else:
-                payloads.append(synth_avi(p[1], p[2], p[3]))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-
-AV_MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
+def synth_av(doc_id: int) -> bytes:
+    """Real WAV (even ids) or AVI (odd ids) container with the
+    closed-form parameters of _av_synth_params."""
+    kind, a, b, c = _av_synth_params(doc_id)
+    return (synth_wav if kind == "audio" else synth_avi)(a, b, c)
 
 
 def av_probe_documents(docs: DataFrame) -> DataFrame:
@@ -631,7 +663,7 @@ def av_probe_documents(docs: DataFrame) -> DataFrame:
     # cheap — the whole pipeline is ~0.25 s single-core, below the
     # exchange overhead a spread would add.
     media = docs.select("doc_id").mapInPandas(
-        av_synth_batch, AV_MEDIA_SCHEMA
+        _synth_batch(synth_av), MEDIA_SCHEMA
     )
     return media.mapInPandas(av_probe_batch, AV_PROBE_SCHEMA)
 
@@ -973,37 +1005,6 @@ def synth_png(doc_id: int) -> bytes:
     )
 
 
-PNG_MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-    ]
-)
-
-
-def synth_png_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched PNG fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [synth_png(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synth_png_documents(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) of real PNG bytes per document id —
-    narrow mapInPandas over the spread doc_id relation (parallelism
-    floor, operators/spread.py); the binary column stays columnar
-    exactly as a parquet-stored media column would."""
-    return spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_png_batch, PNG_MEDIA_SCHEMA
-    )
-
-
 # Palette (color type 3) fixture: entry i of the 256-entry PLTE is
 # ((i*37)%256, (i*59)%256, (i*83)%256) — full-period affine maps (the
 # multipliers are odd), so the palette is a nontrivial permutation of
@@ -1040,28 +1041,6 @@ def synth_png_palette(doc_id: int) -> bytes:
     _w, _h, palette, rows = synth_png_palette_pixels(doc_id)
     return encode_png(
         rows, 3, row_filter=lambda y: (doc_id + y) % 5, palette=palette
-    )
-
-
-def synth_png_palette_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched palette-PNG fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    synth_png_palette(int(d)) for d in pdf["doc_id"]
-                ],
-            }
-        )
-
-
-def synth_png_palette_documents(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) of real palette-PNG bytes per doc id."""
-    return spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_png_palette_batch, PNG_MEDIA_SCHEMA
     )
 
 
@@ -1320,27 +1299,6 @@ def synth_gif(doc_id: int) -> bytes:
     _w, _h, rows = synth_gif_pixels(doc_id)
     return encode_gif(
         rows, GIF_GRAY_PALETTE, interlace=bool(doc_id % 2)
-    )
-
-
-def synth_gif_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched GIF fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [synth_gif(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synth_gif_documents(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) of real GIF bytes per document id —
-    same narrow spread-kernel shape as synth_png_documents."""
-    return spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_gif_batch, PNG_MEDIA_SCHEMA
     )
 
 
@@ -1769,35 +1727,32 @@ def synth_jpeg(doc_id: int) -> bytes:
     return encode_jpeg_gray(rows)
 
 
-def synth_jpeg_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched JPEG fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [synth_jpeg(int(d)) for d in pdf["doc_id"]],
-            }
-        )
-
-
-def synth_jpeg_documents(docs: DataFrame) -> DataFrame:
-    """(doc_id, payload binary) of real JPEG bytes per document id —
-    same narrow spread-kernel shape as synth_png_documents."""
-    return spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_jpeg_batch, PNG_MEDIA_SCHEMA
-    )
-
-
-# Decoded near-dup fixture: clone ids sit PHASH_CLONE_OFFSET above
-# their base and render as a GRAYSCALE re-encode of the base image's
-# decoded luma — the real-world near-dup shape (same content,
-# different container/color type) — with exactly ONE sampled grid
-# pixel pushed far away (<= 2 dHash bits, inside the banded join's
-# pigeonhole-exact d<=3 recall guarantee).
+# Near-dup clone corpora: every 20th doc gains a clone id
+# PHASH_CLONE_OFFSET above it whose media re-encodes the base's pixels
+# with exactly ONE sampled grid pixel pushed far away (<= 2 dHash
+# bits, inside the banded join's pigeonhole-exact d<=3 recall
+# guarantee).
 PHASH_CLONE_OFFSET = 1_000_000
 PERTURB_SAMPLE_R, PERTURB_SAMPLE_C = 2, 2  # grid sample index 20
+
+
+def clone_ids(docs: DataFrame) -> DataFrame:
+    """The doc ids plus one clone id (doc_id + PHASH_CLONE_OFFSET)
+    per doc_id % 20 == 0."""
+    d = docs.select("doc_id")
+    clones = d.filter(F.col("doc_id") % 20 == 0).select(
+        (F.col("doc_id") + F.lit(PHASH_CLONE_OFFSET)).alias("doc_id")
+    )
+    return d.unionByName(clones)
+
+
+def _perturb(grid, w: int, h: int) -> None:
+    """Push grid sample (PERTURB_SAMPLE_R, PERTURB_SAMPLE_C) of a
+    w x h gray grid far away in place: > 60 -> 1, else 120 (the same
+    rule as the text-payload clone corpus)."""
+    pr = PERTURB_SAMPLE_R * (h - 1) // 7
+    pc = PERTURB_SAMPLE_C * (w - 1) // 8
+    grid[pr][pc] = 1 if grid[pr][pc] > 60 else 120
 
 
 def synth_png_gray_of(doc_id: int):
@@ -1810,33 +1765,17 @@ def synth_png_gray_of(doc_id: int):
     return w, h, [[_luma(px[0], px[1], px[2]) for px in r] for r in rows]
 
 
-def synth_png_clone_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched fixture synthesis for the decoded near-dup pair
-    query: base ids -> standard synth_png; ids >= PHASH_CLONE_OFFSET
-    -> grayscale PNG of the base's decoded luma with the grid sample
-    (2, 2) pixel replaced by a far-away value (>60 -> 1, else 120 —
-    the same rule as the text-payload clone corpus)."""
-    import pandas as pd  # local import: executors only
-
-    def blob_of(doc_id: int) -> bytes:
-        if doc_id < PHASH_CLONE_OFFSET:
-            return synth_png(doc_id)
-        base = doc_id - PHASH_CLONE_OFFSET
-        w, h, gray = synth_png_gray_of(base)
-        pr = PERTURB_SAMPLE_R * (h - 1) // 7
-        pc = PERTURB_SAMPLE_C * (w - 1) // 8
-        gray[pr][pc] = 1 if gray[pr][pc] > 60 else 120
-        return encode_png(
-            gray, 0, row_filter=lambda y: (base + y + 3) % 5
-        )
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [blob_of(int(d)) for d in pdf["doc_id"]],
-            }
-        )
+def synth_png_clone(doc_id: int) -> bytes:
+    """Decoded near-dup fixture: base ids -> synth_png; clone ids ->
+    a GRAYSCALE PNG of the base's decoded luma (same content,
+    different container/color type and scanline filters) with one
+    perturbed grid sample."""
+    if doc_id < PHASH_CLONE_OFFSET:
+        return synth_png(doc_id)
+    base = doc_id - PHASH_CLONE_OFFSET
+    w, h, gray = synth_png_gray_of(base)
+    _perturb(gray, w, h)
+    return encode_png(gray, 0, row_filter=lambda y: (base + y + 3) % 5)
 
 
 # ---------------------------------------------------------------------------
@@ -2027,21 +1966,6 @@ AUDIO_MEANS_SCHEMA = T.StructType(
 )
 
 
-def synth_wav_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched WAV fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    synth_wav_pcm(int(d)) for d in pdf["doc_id"]
-                ],
-            }
-        )
-
-
 def audio_fingerprint(docs: DataFrame) -> DataFrame:
     """(doc_id, frame_idx, energy, zcr): the classic integer audio
     fingerprint — per 20 ms frame, total absolute amplitude and the
@@ -2056,9 +1980,7 @@ def audio_fingerprint(docs: DataFrame) -> DataFrame:
     parallelism floor on the doc_id relation (inert at scale —
     operators/spread.py); at 100 TB the cost model is the per-blob
     PCM decode, partitioned like any other binary column."""
-    media = spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_wav_batch, PNG_MEDIA_SCHEMA
-    )
+    media = synth_media(docs, synth_wav_pcm)
     return media.mapInPandas(wav_features_batch, AUDIO_FEATURES_SCHEMA)
 
 
@@ -2230,49 +2152,18 @@ def decode_avi_frames(blob: bytes):
     return dims[0], dims[1], frames
 
 
-def synth_avi_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched AVI fixture synthesis (doc_id -> payload)."""
-    import pandas as pd  # local import: executors only
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [
-                    synth_avi_frames(int(d)) for d in pdf["doc_id"]
-                ],
-            }
-        )
-
-
-def synth_avi_clone_batch(batches: Iterator) -> Iterator:
-    """Arrow-batched fixture synthesis for the video near-dup query:
-    base ids -> standard synth_avi_frames; ids >= PHASH_CLONE_OFFSET
-    -> the base video re-rendered with ONE pixel of FRAME 0 pushed
-    far away (the grid-sample (2, 2) position), so the clone shares
-    n_frames - 1 bit-identical frame hashes with its base and one
-    near frame — the re-encoded-with-a-watermark shape frame-level
-    video dedup exists to catch."""
-    import pandas as pd  # local import: executors only
-
-    def blob_of(doc_id: int) -> bytes:
-        if doc_id < PHASH_CLONE_OFFSET:
-            return synth_avi_frames(doc_id)
-        base = doc_id - PHASH_CLONE_OFFSET
-        w, h, frames = synth_avi_frames_pixels(base)
-        pr = PERTURB_SAMPLE_R * (h - 1) // 7
-        pc = PERTURB_SAMPLE_C * (w - 1) // 8
-        g = frames[0][pr][pc]
-        frames[0][pr][pc] = 1 if g > 60 else 120
-        return encode_avi_frames(w, h, frames)
-
-    for pdf in batches:
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "payload": [blob_of(int(d)) for d in pdf["doc_id"]],
-            }
-        )
+def synth_avi_clone(doc_id: int) -> bytes:
+    """Video near-dup fixture: base ids -> synth_avi_frames; clone
+    ids -> the base video re-rendered with one perturbed grid sample
+    in FRAME 0, so the clone shares n_frames - 1 bit-identical frame
+    hashes with its base and one near frame — the
+    re-encoded-with-a-watermark shape frame-level video dedup exists
+    to catch."""
+    if doc_id < PHASH_CLONE_OFFSET:
+        return synth_avi_frames(doc_id)
+    w, h, frames = synth_avi_frames_pixels(doc_id - PHASH_CLONE_OFFSET)
+    _perturb(frames[0], w, h)
+    return encode_avi_frames(w, h, frames)
 
 
 AUDIO_ACTIVE_ENERGY = 160_000  # ≈ frame mean |s|·160; synth spread 109k-211k
@@ -2433,10 +2324,7 @@ def audio_downsample(docs: DataFrame, k: int = AUDIO_DS_FACTOR) -> DataFrame:
     One exchange: the small-input parallelism floor
     (operators/spread.py)."""
     assert AUDIO_FRAME % k == 0, "blocks must tile the frame"
-    media = spread_for_kernel(docs.select("doc_id"), "doc_id").mapInPandas(
-        synth_wav_batch, PNG_MEDIA_SCHEMA
-    )
-    frames = media.mapInPandas(
+    frames = synth_media(docs, synth_wav_pcm).mapInPandas(
         wav_block_means_batch(int(k)), AUDIO_MEANS_SCHEMA
     )
     blocks_per_frame = AUDIO_FRAME // int(k)

@@ -1402,7 +1402,10 @@ def inverted_index(
             ).alias("postings")
         )
     )
-    agg = stats.join(posts, "term")
+    # merge hint: both sides are already hash-partitioned on term, so
+    # the sort-merge join adds no exchange, and the plan no longer
+    # flips between broadcasting either side from run to run
+    agg = stats.join(posts.hint("merge"), "term")
     return agg.orderBy(F.desc("df"), F.asc("term")).limit(int(k))
 
 

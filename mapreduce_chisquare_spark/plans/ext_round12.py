@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import textstats as tx
-from ..streaming.urls import url_screen_stream
+from ..streaming.urls import _messy_url, url_screen_stream
 from .ext_common import _docs
 
 
@@ -131,44 +131,9 @@ def dedup_url_canonical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash equality certifies every normalization rule at once."""
     from ..operators.curation import dedup_url_groups
 
-    d = _docs(spark, sf_dir).select("doc_id")
-    base = F.concat(
-        F.lit("/docs/p"), F.expr("doc_id div 3").cast("string")
+    pages = _docs(spark, sf_dir).select(
+        "doc_id", _messy_url("doc_id").alias("url")
     )
-    m = F.col("doc_id") % 6
-    url = (
-        F.when(m == 0, F.concat(F.lit("https://example.com"), base))
-        .when(
-            m == 1,
-            F.concat(F.lit("HTTPS://WWW.EXAMPLE.COM"), base, F.lit("/")),
-        )
-        .when(
-            m == 2,
-            F.concat(
-                F.lit("https://example.com:443"), base, F.lit("#sec2")
-            ),
-        )
-        .when(
-            m == 3,
-            F.concat(
-                F.lit("https://www.example.com"),
-                base,
-                F.lit("?utm_source=feed"),
-            ),
-        )
-        .when(
-            m == 4,
-            F.concat(F.lit("https://example.com"), base, F.lit("?b=2&a=1")),
-        )
-        .otherwise(
-            F.concat(
-                F.lit("https://example.com"),
-                base,
-                F.lit("?a=1&b=2&utm_campaign=x"),
-            )
-        )
-    )
-    pages = d.select("doc_id", url.alias("url"))
     return dedup_url_groups(pages)
 
 
@@ -207,7 +172,7 @@ def image_thumbnail_decoded_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the PNG bytes — so equality certifies decoder AND resize."""
     from ..operators import multimodal as mm
 
-    media = mm.synth_png_documents(_docs(spark, sf_dir))
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_png)
     return mm.image_thumbnail_decoded(media)
 
 

@@ -16,7 +16,12 @@ from ..operators import multimodal as mm
 from ..operators import sketches as sk
 from ..streaming.bloom import bloom_screen_stream
 from .ext_common import _docs
-from .oracle_common import sql_md5_hash32
+from .oracle_common import (
+    sql_band_cols,
+    sql_grid_px_cols,
+    sql_md5_hash32,
+    sql_phash_hex,
+)
 from .registry_analytics import SQL_QUANTILE_BUCKETIZE
 
 
@@ -205,48 +210,19 @@ def image_phash_palette_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     palette formulas directly — it never sees the PNG bytes — so
     hash equality certifies the palette decode end to end (a decoder
     that misreads PLTE or skips the indirection cannot agree)."""
-    media = mm.synth_png_palette_documents(_docs(spark, sf_dir))
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_png_palette)
     return ih.image_phash_decoded(media)
 
 
-def _sql_band_cols() -> str:
-    """DuckDB twin of imagehash.band_exprs (identical bit lattice;
-    local copy of registry_extensions._sql_band_cols — importing it
-    would be circular)."""
-    outs = []
-    for j in range(ih.N_BANDS):
-        terms = []
-        for s in range(ih.BAND_BITS):
-            b = j * ih.BAND_BITS + s
-            r, c = divmod(b, ih.GRID_C)
-            a_i = r * (ih.GRID_C + 1) + c
-            terms.append(
-                f"CASE WHEN px{a_i} < px{a_i + 1} THEN {1 << s} ELSE 0 END"
-            )
-        outs.append(
-            "CAST(" + " + ".join(terms) + f" AS BIGINT) AS b{j}"
-        )
-    return ", ".join(outs)
-
-
-def _sql_palette_px_cols() -> str:
-    """Ground-truth grayscale of the palette fixture at the dHash
-    sample lattice: idx = (doc_id*11 + r*5 + c*7) % 256, gray =
-    integer BT.601 luma of palette entry idx with channels
-    (idx*37 % 256, idx*59 % 256, idx*83 % 256)."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        idx = f"((doc_id*11 + {pr}*5 + {pc}*7) % 256)"
-        gray = (
-            f"(299*(({idx}*{mm.PLT_R_MUL}) % 256) "
-            f"+ 587*(({idx}*{mm.PLT_G_MUL}) % 256) "
-            f"+ 114*(({idx}*{mm.PLT_B_MUL}) % 256)) // 1000"
-        )
-        outs.append(f"CAST({gray} AS INTEGER) AS px{i}")
-    return ", ".join(outs)
+# Ground-truth gray of the palette fixture: idx = (id*11 + r*5 + c*7)
+# % 256, gray = integer BT.601 luma of palette entry idx with channels
+# (idx*37 % 256, idx*59 % 256, idx*83 % 256).
+_PALETTE_IDX = "(({id}*11 + {pr}*5 + {pc}*7) % 256)"
+_SQL_PALETTE_GRAY = (
+    f"(299*(({_PALETTE_IDX}*{mm.PLT_R_MUL}) % 256) "
+    f"+ 587*(({_PALETTE_IDX}*{mm.PLT_G_MUL}) % 256) "
+    f"+ 114*(({_PALETTE_IDX}*{mm.PLT_B_MUL}) % 256)) // 1000"
+)
 
 
 def _sql_image_phash_palette() -> str:
@@ -255,11 +231,10 @@ WITH dims AS (SELECT doc_id,
                      {mm.PNG_W_BASE} + doc_id % {mm.PNG_W_MOD} AS w,
                      {mm.PNG_H_BASE} + doc_id % {mm.PNG_H_MOD} AS h
               FROM documents),
-px AS (SELECT doc_id, {_sql_palette_px_cols()} FROM dims),
-hh AS (SELECT doc_id, {_sql_band_cols()} FROM px)
+px AS (SELECT doc_id, {sql_grid_px_cols(_SQL_PALETTE_GRAY)} FROM dims),
+hh AS (SELECT doc_id, {sql_band_cols()} FROM px)
 SELECT doc_id, b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM hh
 """
 

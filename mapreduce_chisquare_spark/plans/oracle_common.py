@@ -16,6 +16,8 @@ Cross-engine hash-stability rules applied throughout the registries:
 from __future__ import annotations
 
 from ..constants import DELIM_REGEX, MAX_TOKEN_LEN, MIN_TOKEN_LEN, STOPWORDS
+from ..operators import imagehash as ih
+from ..operators.multimodal import PERTURB_SAMPLE_C, PERTURB_SAMPLE_R
 
 SQL_DELIM = DELIM_REGEX.replace("'", "''")
 SQL_STOPWORDS = ", ".join("'" + s + "'" for s in STOPWORDS)
@@ -89,4 +91,66 @@ def sql_md5_hash32(expr: str, offset: int = 1) -> str:
             for i in range(8)
         )
         + ")"
+    )
+
+
+# dHash twins (operators/imagehash.py): the sampled pixel grid, the
+# 64-bit band lattice and the hex phash, stated in SQL. The media
+# twins pass their own per-pixel gray formula; nothing here calls the
+# Spark-side fixture encoders.
+
+
+def sql_grid_px_cols(
+    gray: str, id_col: str = "doc_id", perturb: str | None = None
+) -> str:
+    """px0..px71 of a decoded w x h grid: `gray` is the per-pixel gray
+    expression, a template over {id} (id_col) and the sample position
+    {pr}, {pc} on multimodal.gray_grid_samples' lattice
+    (r*(h-1) // (GRID_R-1), c*(w-1) // GRID_C). Where the SQL
+    condition `perturb` holds, sample (PERTURB_SAMPLE_R,
+    PERTURB_SAMPLE_C) takes the clone corpora's far-away value:
+    > 60 -> 1, else 120."""
+    outs = []
+    for i in range(ih.N_PIX):
+        r, c = divmod(i, ih.GRID_C + 1)
+        g = gray.format(
+            id=id_col,
+            pr=f"(({r} * (h - 1)) // {ih.GRID_R - 1})",
+            pc=f"(({c} * (w - 1)) // {ih.GRID_C})",
+        )
+        if perturb and (r, c) == (PERTURB_SAMPLE_R, PERTURB_SAMPLE_C):
+            g = (
+                f"CASE WHEN {perturb} THEN "
+                f"(CASE WHEN ({g}) > 60 THEN 1 ELSE 120 END) "
+                f"ELSE ({g}) END"
+            )
+        outs.append(f"CAST({g} AS INTEGER) AS px{i}")
+    return ", ".join(outs)
+
+
+def sql_band_cols() -> str:
+    """DuckDB twin of imagehash.band_exprs: identical bit lattice."""
+    outs = []
+    for j in range(ih.N_BANDS):
+        terms = []
+        for s in range(ih.BAND_BITS):
+            b = j * ih.BAND_BITS + s
+            r, c = divmod(b, ih.GRID_C)
+            a_i = r * (ih.GRID_C + 1) + c
+            terms.append(
+                f"CASE WHEN px{a_i} < px{a_i + 1} THEN {1 << s} ELSE 0 END"
+            )
+        outs.append(
+            "CAST(" + " + ".join(terms) + f" AS BIGINT) AS b{j}"
+        )
+    return ", ".join(outs)
+
+
+def sql_phash_hex(indent: int = 7) -> str:
+    """The 16-hex-digit phash of bands b0..b3, its second line
+    indented by `indent` spaces."""
+    return (
+        "lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')\n"
+        + " " * indent
+        + "|| lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0')"
     )

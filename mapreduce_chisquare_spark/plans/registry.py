@@ -62,81 +62,80 @@ REGISTRY: dict = {
 # zero overlap with the r14 window by design. Cumulative distinct
 # driver-green after r15: 100 of ~334.
 #
-# Round-16 window (50) — this is OPTIMIZATION round 2, so the window
-# leads with driver-side coverage for the optimization work (the
-# round-15 verdict's item 7: weight the rotation toward touched
-# queries): (a) the 14 round-15 tail additions that have never had a
-# driver row; (b) the queries whose plans this round's optimizations
-# changed (band-bucket self-join merge hints + their CC/pipeline
-# consumers, the MMR driver-greedy rewrite [in (a)], the IVF probe-
-# side filter pushdown, the image_phash sampling spread) — all
-# locally oracle-green at sf0.001 + sf0.01 post-change; (c) fill to
-# 50 with r9-era stale rows from the standing TODO. After this
-# window lands the staleness floor is r9 (~11 rows remain on it).
+# Round-16 window history: the 14 round-15 tail additions, the
+# entries whose plans round 16's optimizations changed, and r9-era
+# stale re-certs.
+#
+# Round-17 window (50), ordered by the last round each entry was
+# hash-matched on the driver (CORRECTNESS_r01-r16): (a) the entries
+# whose builders the one-media-fixture-path change rewrote (13 media
+# entries; stream_url_screen and dedup_url_canonical, now sharing one
+# messy-URL column; inverted_index, now merge-joined); (b) the 8 rows
+# last matched in r9; (c) simsearch_mmr_topk and the 17 entries on
+# the shared graph core (graph.py / components_over_pairs); (d) the
+# oldest r10 rows, to fill the window.
 _CERTIFY_WINDOW = [
-    # (a) round-15 tail — first driver signature due
-    "pii_screen",
-    "stream_pii_screen",
-    "char_entropy_screen",
-    "embed_drift_centroid",
-    "simsearch_mmr_topk",
-    "ngram_novelty",
-    "window_range_between",
-    "embed_standardize",
-    "source_dedup_rate",
-    "events_path_topk",
-    "graph_degree_distribution",
-    "dq_profile_columns",
-    "rank_eval_ndcg",
-    "rank_eval_recall",
-    # (b) round-16 touched plans — re-cert on the optimized shapes
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_k128",
-    "winnowing_pairs",
-    "dedup_simhash_pairs",
-    "image_neardup_pairs",
+    # (a) builders rewritten onto the shared media / URL paths
+    "image_phash_decoded",
+    "image_phash_gif",
+    "image_phash_jpeg",
+    "image_phash_palette",
     "image_neardup_decoded",
+    "image_thumbnail_decoded",
+    "video_frame_phash",
     "video_neardup",
-    "er_blocking_lsh",
-    "er_clusters_lsh",
-    "er_clusters",
-    "er_blocking_pairs",
-    "pipeline_dedup_corpus",
+    "video_shot_boundaries",
+    "audio_fingerprint",
+    "audio_energy_segments",
+    "audio_downsample_decoded",
+    "multimodal_av_probe",
+    "stream_url_screen",
+    "dedup_url_canonical",
+    "inverted_index",
+    # (b) last hash-matched in r9
+    "ts_anomaly_zscore",
+    "dq_drift_psi",
+    "similarity_join_embedding",
+    "quality_model_score",
+    "dq_quantiles_sketch",
+    "dq_quantiles_sketch_merge",
+    "heavy_hitters_mg",
+    "heavy_hitters_mg_merge",
+    # (c) the ANN mmr rewrite and the graph core
+    "simsearch_mmr_topk",
+    "graph_components_largestar",
+    "graph_pagerank",
+    "graph_triangles",
+    "graph_ppr",
+    "basket_rules",
+    "graph_label_propagation",
+    "graph_kcore",
+    "graph_linkpred_jaccard",
+    "graph_hits",
+    "dedup_components",
     "dedup_keep_best",
     "image_dedup_components",
-    "dedup_jaccard_estimate",
-    "dedup_ngram_jaccard",
-    "dedup_containment",
+    "pipeline_dedup_corpus",
     "split_no_leakage",
-    "similarity_join_minhash",
-    "simsearch_ivfpq",
-    "simsearch_ivf_topk",
-    "simsearch_ivfpq_nprobe2",
-    "simsearch_ivf_assign",
-    "image_phash",
-    "embed_power_iteration",
-    "dedup_incremental",
-    "dedup_spans",
-    # (c) r9-era stale re-certs
-    "array_scalars",
-    "join_bucketed",
-    "ngram_counts",
-    "join_bloom_prefilter",
-    "doc_chunk",
-    "pack_sequences",
-    "sink_orc_roundtrip",
-    "rollup_multigrain",
-    "explode_outer_keywords",
+    "er_clusters",
+    "er_clusters_lsh",
+    "er_survivorship",
+    # (d) oldest r10 rows
+    "json_schema_parse",
+    "map_scalars",
+    "project",
+    "nonempty_filter",
+    "casefold",
+    "tokenize_positions",
+    "regexp_extract",
+    "length_filter",
 ]
 
 # Register NEW queries at the registry TAIL, then promote them into
 # the next round's _CERTIFY_WINDOW.
 #
-# Round-17 window TODO: the remaining r9-era stale rows
-# (ts_anomaly_zscore dq_drift_psi similarity_join_embedding
-# quality_model_score dq_quantiles_sketch dq_quantiles_sketch_merge
-# heavy_hitters_mg heavy_hitters_mg_merge), then the oldest r10/r11
-# rows, keeping ~130 never-certified registry entries rotating in.
+# Round-18 window TODO: the remaining 35 rows last hash-matched in r10
+# (dedup_terms onward in registry order), then the oldest r11 rows.
 _DEFER_TO_NEXT_ROTATION: list = []
 
 assert len(_CERTIFY_WINDOW) == 50, len(_CERTIFY_WINDOW)

@@ -448,6 +448,11 @@ EXTENSION_QUERIES = {
 
 from ..operators import imagehash as ih  # noqa: E402
 from ..operators.spread import spread_for_kernel  # noqa: E402
+from .oracle_common import (  # noqa: E402
+    sql_band_cols,
+    sql_grid_px_cols,
+    sql_phash_hex,
+)
 from ..operators.curation import (  # noqa: E402
     QM_BIAS_MILLI,
     QM_BUCKETS,
@@ -466,24 +471,6 @@ def _sql_px_cols(src: str = "text") -> str:
     )
 
 
-def _sql_band_cols() -> str:
-    """DuckDB twin of imagehash.band_exprs: identical bit lattice."""
-    outs = []
-    for j in range(ih.N_BANDS):
-        terms = []
-        for s in range(ih.BAND_BITS):
-            b = j * ih.BAND_BITS + s
-            r, c = divmod(b, ih.GRID_C)
-            a_i = r * (ih.GRID_C + 1) + c
-            terms.append(
-                f"CASE WHEN px{a_i} < px{a_i + 1} THEN {1 << s} ELSE 0 END"
-            )
-        outs.append(
-            "CAST(" + " + ".join(terms) + f" AS BIGINT) AS b{j}"
-        )
-    return ", ".join(outs)
-
-
 def image_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit dHash fingerprint per document payload
     (operators/imagehash.py image_phash) — the content-level image
@@ -495,10 +482,9 @@ def image_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_IMAGE_PHASH = f"""
 WITH px AS (SELECT doc_id, {_sql_px_cols()}
             FROM documents WHERE length(text) >= 1),
-h AS (SELECT doc_id, {_sql_band_cols()} FROM px)
+h AS (SELECT doc_id, {sql_band_cols()} FROM px)
 SELECT doc_id, b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM h
 """
 
@@ -561,7 +547,7 @@ def _sql_phash_pair_ctes(corpus_sql: str) -> str:
     (a_id, b_id, hamming) BEFORE the distance filter."""
     return f"""corpus AS ({corpus_sql}),
 px AS (SELECT doc_id, {_sql_px_cols()} FROM corpus),
-h AS (SELECT doc_id, {_sql_band_cols()} FROM px),
+h AS (SELECT doc_id, {sql_band_cols()} FROM px),
 unp AS (SELECT doc_id, b0, b1, b2, b3, u.j AS band_idx,
                CASE u.j WHEN 0 THEN b0 WHEN 1 THEN b1
                         WHEN 2 THEN b2 ELSE b3 END AS band_val
@@ -1645,33 +1631,21 @@ def image_phash_decoded_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ground-truth pixels directly from the fixture formulas — it never
     sees the PNG bytes — so hash equality certifies the DECODER:
     any filter-undo, luma, CRC, or sampling defect breaks it."""
-    media = mm.synth_png_documents(_docs(spark, sf_dir))
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_png)
     return ih.image_phash_decoded(media)
 
 
-def _sql_decoded_px_cols() -> str:
-    """DuckDB twin of the decoded-pixel grid: ground-truth grayscale
-    from multimodal.synth_png_pixels' channel formulas (affine mod
-    256 in (doc_id, row, col); integer BT.601 luma for RGB/RGBA — the
-    ctsel = 0 arm is color type 0/grayscale, 1 and 2 are RGB and
-    RGBA whose luma ignores alpha), point-sampled at
-    gray_grid_samples' lattice (r*(h-1) // (GRID_R-1),
-    c*(w-1) // GRID_C)."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        gray = (
-            f"CASE WHEN ctsel = 0 "
-            f"THEN (doc_id*7 + {pr}*13 + {pc}*31) % 256 "
-            f"ELSE (299*((doc_id*5 + {pr}*11 + {pc}*17) % 256) "
-            f"+ 587*((doc_id*3 + {pr}*7 + {pc}*19) % 256) "
-            f"+ 114*((doc_id*13 + {pr}*3 + {pc}*23) % 256)) // 1000 "
-            f"END"
-        )
-        outs.append(f"CAST({gray} AS INTEGER) AS px{i}")
-    return ", ".join(outs)
+# Ground-truth gray of synth_png_pixels: affine mod 256 in (id, row,
+# col); the ctsel = 0 arm is color type 0 (grayscale), 1 and 2 are RGB
+# and RGBA, whose integer BT.601 luma ignores alpha.
+_SQL_PNG_GRAY = (
+    "CASE WHEN ctsel = 0 "
+    "THEN ({id}*7 + {pr}*13 + {pc}*31) % 256 "
+    "ELSE (299*(({id}*5 + {pr}*11 + {pc}*17) % 256) "
+    "+ 587*(({id}*3 + {pr}*7 + {pc}*19) % 256) "
+    "+ 114*(({id}*13 + {pr}*3 + {pc}*23) % 256)) // 1000 "
+    "END"
+)
 
 
 SQL_IMAGE_PHASH_DECODED = f"""
@@ -1680,11 +1654,10 @@ WITH dims AS (SELECT doc_id,
                      {mm.PNG_H_BASE} + doc_id % {mm.PNG_H_MOD} AS h,
                      doc_id % 3 AS ctsel
               FROM documents),
-px AS (SELECT doc_id, {_sql_decoded_px_cols()} FROM dims),
-hh AS (SELECT doc_id, {_sql_band_cols()} FROM px)
+px AS (SELECT doc_id, {sql_grid_px_cols(_SQL_PNG_GRAY)} FROM dims),
+hh AS (SELECT doc_id, {sql_band_cols()} FROM px)
 SELECT doc_id, b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM hh
 """
 
@@ -1751,25 +1724,13 @@ def image_phash_gif_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes ground-truth pixels from the index formula
     without ever seeing the GIF bytes, so hash equality certifies the
     LZW decoder, the interlace reorder, and the palette luma."""
-    media = mm.synth_gif_documents(_docs(spark, sf_dir))
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_gif)
     return ih.image_phash_decoded(media)
 
 
-def _sql_gif_px_cols() -> str:
-    """DuckDB twin of the GIF decoded-pixel grid: the grayscale ramp
-    palette makes luma(index) == index, so gray is
-    multimodal.synth_gif_pixels' index formula directly, sampled at
-    the shared grid lattice."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        outs.append(
-            f"CAST((doc_id*11 + {pr}*17 + {pc}*7) % 256 "
-            f"AS INTEGER) AS px{i}"
-        )
-    return ", ".join(outs)
+# The grayscale-ramp palette makes luma(index) == index, so the GIF
+# gray is synth_gif_pixels' index formula directly.
+_SQL_GIF_GRAY = "({id}*11 + {pr}*17 + {pc}*7) % 256"
 
 
 SQL_IMAGE_PHASH_GIF = f"""
@@ -1777,11 +1738,10 @@ WITH dims AS (SELECT doc_id,
                      {mm.PNG_W_BASE} + doc_id % {mm.PNG_W_MOD} AS w,
                      {mm.PNG_H_BASE} + doc_id % {mm.PNG_H_MOD} AS h
               FROM documents),
-px AS (SELECT doc_id, {_sql_gif_px_cols()} FROM dims),
-hh AS (SELECT doc_id, {_sql_band_cols()} FROM px)
+px AS (SELECT doc_id, {sql_grid_px_cols(_SQL_GIF_GRAY)} FROM dims),
+hh AS (SELECT doc_id, {sql_band_cols()} FROM px)
 SELECT doc_id, b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM hh
 """
 
@@ -1806,23 +1766,13 @@ def image_phash_jpeg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     dequantization, IDCT, MCU-edge crop). The oracle states the
     block formula directly (operators/multimodal.py
     synth_jpeg_pixels); hash equality certifies the JPEG decoder."""
-    media = mm.synth_jpeg_documents(_docs(spark, sf_dir))
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_jpeg)
     return ih.image_phash_decoded(media)
 
 
-def _sql_jpeg_px_cols() -> str:
-    """DuckDB twin of the JPEG decoded-pixel grid: the blockwise-
-    constant fixture formula sampled at the shared grid lattice."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        outs.append(
-            f"CAST(64 + 2 * ((doc_id*3 + ({pr} // 8)*5 "
-            f"+ ({pc} // 8)*7) % 64) AS INTEGER) AS px{i}"
-        )
-    return ", ".join(outs)
+# synth_jpeg_pixels' blockwise-constant formula (bit-exact through
+# the baseline JPEG round trip).
+_SQL_JPEG_GRAY = "64 + 2 * (({id}*3 + ({pr} // 8)*5 + ({pc} // 8)*7) % 64)"
 
 
 SQL_IMAGE_PHASH_JPEG = f"""
@@ -1830,11 +1780,10 @@ WITH dims AS (SELECT doc_id,
                      {mm.PNG_W_BASE} + doc_id % {mm.PNG_W_MOD} AS w,
                      {mm.PNG_H_BASE} + doc_id % {mm.PNG_H_MOD} AS h
               FROM documents),
-px AS (SELECT doc_id, {_sql_jpeg_px_cols()} FROM dims),
-hh AS (SELECT doc_id, {_sql_band_cols()} FROM px)
+px AS (SELECT doc_id, {sql_grid_px_cols(_SQL_JPEG_GRAY)} FROM dims),
+hh AS (SELECT doc_id, {sql_band_cols()} FROM px)
 SELECT doc_id, b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM hh
 """
 
@@ -1858,44 +1807,12 @@ def image_neardup_decoded_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ladder runs on decoded pixels: synth -> zlib decode -> grid ->
     dHash -> band join (operators/imagehash.py image_phash_decoded +
     image_neardup_pairs)."""
-    d = _docs(spark, sf_dir).select("doc_id")
-    clones = d.filter(F.col("doc_id") % 20 == 0).select(
-        (F.col("doc_id") + F.lit(mm.PHASH_CLONE_OFFSET)).alias("doc_id")
-    )
-    media = spread_for_kernel(d.unionByName(clones), "doc_id").mapInPandas(
-        mm.synth_png_clone_batch, mm.PNG_MEDIA_SCHEMA
-    )
+    ids = mm.clone_ids(_docs(spark, sf_dir))
+    media = mm.synth_media(ids, mm.synth_png_clone)
     return ih.image_neardup_pairs(ih.image_phash_decoded(media))
 
 
-def _sql_decoded_clone_px_cols() -> str:
-    """Decoded-pixel grid for the clone corpus: every px is the BASE
-    id's decoded-luma formula (clones re-render the same luma), and
-    the clone's sample (2, 2) — grid index 20 — gets the far-away
-    perturbation. `eid`/`iscl` come from the dims CTE."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        gray = (
-            f"CASE WHEN ctsel = 0 "
-            f"THEN (eid*7 + {pr}*13 + {pc}*31) % 256 "
-            f"ELSE (299*((eid*5 + {pr}*11 + {pc}*17) % 256) "
-            f"+ 587*((eid*3 + {pr}*7 + {pc}*19) % 256) "
-            f"+ 114*((eid*13 + {pr}*3 + {pc}*23) % 256)) // 1000 "
-            f"END"
-        )
-        if (r, c) == (mm.PERTURB_SAMPLE_R, mm.PERTURB_SAMPLE_C):
-            gray = (
-                f"CASE WHEN iscl THEN "
-                f"(CASE WHEN ({gray}) > 60 THEN 1 ELSE 120 END) "
-                f"ELSE ({gray}) END"
-            )
-        outs.append(f"CAST({gray} AS INTEGER) AS px{i}")
-    return ", ".join(outs)
-
-
+_IMAGE_CLONE_PX = sql_grid_px_cols(_SQL_PNG_GRAY, "eid", "iscl")
 SQL_IMAGE_NEARDUP_DECODED = f"""
 WITH ids AS (SELECT doc_id FROM documents
              UNION ALL
@@ -1912,8 +1829,8 @@ dims2 AS (SELECT doc_id, iscl, eid,
                  {mm.PNG_H_BASE} + eid % {mm.PNG_H_MOD} AS h,
                  eid % 3 AS ctsel
           FROM dims),
-px AS (SELECT doc_id, {_sql_decoded_clone_px_cols()} FROM dims2),
-h AS (SELECT doc_id, {_sql_band_cols()} FROM px),
+px AS (SELECT doc_id, {_IMAGE_CLONE_PX} FROM dims2),
+h AS (SELECT doc_id, {sql_band_cols()} FROM px),
 unp AS (SELECT doc_id, b0, b1, b2, b3, u.j AS band_idx,
                CASE u.j WHEN 0 THEN b0 WHEN 1 THEN b1
                         WHEN 2 THEN b2 ELSE b3 END AS band_val
@@ -2003,27 +1920,17 @@ def video_frame_phash_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the frame formula directly; equality certifies
     the container walk, the bottom-up BGR decode, and the per-frame
     fan-out."""
-    media = spread_for_kernel(
-        _docs(spark, sf_dir).select("doc_id"), "doc_id"
-    ).mapInPandas(mm.synth_avi_batch, mm.PNG_MEDIA_SCHEMA)
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_avi_frames)
     return ih.video_frame_phash(media)
 
 
-def _sql_video_px_cols() -> str:
-    """DuckDB twin of the video decoded-frame grid:
-    multimodal.synth_avi_frames_pixels' formula (B=G=R in the DIB, so
-    luma == the formula), sampled at the shared grid lattice."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        outs.append(
-            f"CAST((doc_id*7 + frame_idx*29 + {pr}*13 + {pc}*31 "
-            f"+ doc_id*{pc}*3 + frame_idx*{pr}*11) % 256 "
-            f"AS INTEGER) AS px{i}"
-        )
-    return ", ".join(outs)
+# synth_avi_frames_pixels' frame formula (B=G=R in the DIB, so luma
+# is the formula).
+_SQL_VIDEO_GRAY = (
+    "({id}*7 + frame_idx*29 + {pr}*13 + {pc}*31 "
+    "+ {id}*{pc}*3 + frame_idx*{pr}*11) % 256"
+)
+_VIDEO_PX = sql_grid_px_cols(_SQL_VIDEO_GRAY)
 
 
 SQL_VIDEO_FRAME_PHASH = f"""
@@ -2034,12 +1941,11 @@ dims AS (SELECT doc_id, frame_idx,
                 {mm.VIDEO_W_BASE} + doc_id % {mm.VIDEO_W_MOD} AS w,
                 {mm.VIDEO_H_BASE} + doc_id % {mm.VIDEO_H_MOD} AS h
          FROM fr),
-px AS (SELECT doc_id, frame_idx, {_sql_video_px_cols()} FROM dims),
-hh AS (SELECT doc_id, frame_idx, {_sql_band_cols()} FROM px)
+px AS (SELECT doc_id, frame_idx, {_VIDEO_PX} FROM dims),
+hh AS (SELECT doc_id, frame_idx, {sql_band_cols()} FROM px)
 SELECT doc_id, CAST(frame_idx AS INTEGER) AS frame_idx,
        b0, b1, b2, b3,
-       lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-       || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0') AS phash
+       {sql_phash_hex()} AS phash
 FROM hh
 """
 
@@ -2064,39 +1970,14 @@ def video_neardup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame decode -> per-frame dHash -> guarded hash-equality join
     counting distinct shared frame hashes (operators/imagehash.py
     video_neardup_pairs)."""
-    d = _docs(spark, sf_dir).select("doc_id")
-    clones = d.filter(F.col("doc_id") % 20 == 0).select(
-        (F.col("doc_id") + F.lit(mm.PHASH_CLONE_OFFSET)).alias("doc_id")
-    )
-    media = spread_for_kernel(d.unionByName(clones), "doc_id").mapInPandas(
-        mm.synth_avi_clone_batch, mm.PNG_MEDIA_SCHEMA
-    )
+    ids = mm.clone_ids(_docs(spark, sf_dir))
+    media = mm.synth_media(ids, mm.synth_avi_clone)
     return ih.video_neardup_pairs(ih.video_frame_phash(media))
 
 
-def _sql_video_clone_px_cols() -> str:
-    """Video decoded-frame grid over the clone corpus: the base id's
-    frame formula, with the clone's frame-0 sample (2, 2) perturbed
-    (the same far-away rule as the image clone fixture)."""
-    outs = []
-    for i in range(ih.N_PIX):
-        r, c = divmod(i, ih.GRID_C + 1)
-        pr = f"(({r} * (h - 1)) // {ih.GRID_R - 1})"
-        pc = f"(({c} * (w - 1)) // {ih.GRID_C})"
-        gray = (
-            f"(eid*7 + frame_idx*29 + {pr}*13 + {pc}*31 "
-            f"+ eid*{pc}*3 + frame_idx*{pr}*11) % 256"
-        )
-        if (r, c) == (mm.PERTURB_SAMPLE_R, mm.PERTURB_SAMPLE_C):
-            gray = (
-                f"CASE WHEN iscl AND frame_idx = 0 THEN "
-                f"(CASE WHEN ({gray}) > 60 THEN 1 ELSE 120 END) "
-                f"ELSE ({gray}) END"
-            )
-        outs.append(f"CAST({gray} AS INTEGER) AS px{i}")
-    return ", ".join(outs)
-
-
+_VIDEO_CLONE_PX = sql_grid_px_cols(
+    _SQL_VIDEO_GRAY, "eid", "iscl AND frame_idx = 0"
+)
 SQL_VIDEO_NEARDUP = f"""
 WITH ids AS (SELECT doc_id FROM documents
              UNION ALL
@@ -2114,12 +1995,11 @@ dims AS (SELECT doc_id, eid, iscl, frame_idx,
                 {mm.VIDEO_W_BASE} + eid % {mm.VIDEO_W_MOD} AS w,
                 {mm.VIDEO_H_BASE} + eid % {mm.VIDEO_H_MOD} AS h
          FROM fr),
-px AS (SELECT doc_id, frame_idx, {_sql_video_clone_px_cols()}
+px AS (SELECT doc_id, frame_idx, {_VIDEO_CLONE_PX}
        FROM dims),
-hh AS (SELECT doc_id, frame_idx, {_sql_band_cols()} FROM px),
+hh AS (SELECT doc_id, frame_idx, {sql_band_cols()} FROM px),
 hv AS (SELECT doc_id,
-              lpad(hex(b0), 4, '0') || lpad(hex(b1), 4, '0')
-              || lpad(hex(b2), 4, '0') || lpad(hex(b3), 4, '0')
+              {sql_phash_hex(14)}
                 AS phash
        FROM hh),
 sized AS (SELECT *, count(*) OVER (PARTITION BY phash) AS sz FROM hv),
@@ -2214,9 +2094,7 @@ def video_shot_boundaries_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the frame dHashes, exact popcount-of-XOR distance,
     cut where >= SHOT_THRESHOLD of 64 bits flip. The oracle restates
     the frame formula, the band hash, and the same lag algebra."""
-    media = spread_for_kernel(
-        _docs(spark, sf_dir).select("doc_id"), "doc_id"
-    ).mapInPandas(mm.synth_avi_batch, mm.PNG_MEDIA_SCHEMA)
+    media = mm.synth_media(_docs(spark, sf_dir), mm.synth_avi_frames)
     return ih.video_shot_boundaries(media)
 
 
@@ -2228,8 +2106,8 @@ dims AS (SELECT doc_id, frame_idx,
                 {mm.VIDEO_W_BASE} + doc_id % {mm.VIDEO_W_MOD} AS w,
                 {mm.VIDEO_H_BASE} + doc_id % {mm.VIDEO_H_MOD} AS h
          FROM fr),
-px AS (SELECT doc_id, frame_idx, {_sql_video_px_cols()} FROM dims),
-hh AS (SELECT doc_id, frame_idx, {_sql_band_cols()} FROM px),
+px AS (SELECT doc_id, frame_idx, {_VIDEO_PX} FROM dims),
+hh AS (SELECT doc_id, frame_idx, {sql_band_cols()} FROM px),
 lg AS (SELECT doc_id, frame_idx, b0, b1, b2, b3,
               lag(b0) OVER w AS p0, lag(b1) OVER w AS p1,
               lag(b2) OVER w AS p2, lag(b3) OVER w AS p3

@@ -27,12 +27,11 @@ from .run import file_source, to_completion
 
 
 def _messy_url(doc_id_col: str = "doc_id") -> F.Column:
-    """The batch dedup_url_canonical fixture's mod-6 messy variants,
-    row-local (plans/ext_round12.py dedup_url_canonical_q states the
-    same construction; keep in sync). Takes the column NAME so both
-    the base-path `div` and the mod-6 branch derive from the same
-    column — a Column argument previously let the two silently
-    diverge."""
+    """The URL fixture's mod-6 messy variants, row-local — shared by
+    this screen and the batch dedup_url_canonical
+    (plans/ext_round12.py). Takes the column NAME so both the
+    base-path `div` and the mod-6 branch derive from the same
+    column."""
     c = F.col(doc_id_col)
     base = F.concat(
         F.lit("/docs/p"),
@@ -86,23 +85,25 @@ def url_screen_stream(
     stored corpus — broadcast here (at real scale: a bucketed
     canonical index joined on the canon string, or a bloom-filter
     prefilter before it). Stateless — no watermark, no state
-    store."""
+    store.
+
+    The messy URL is projected to its own column before
+    canonicalize_url reads it: inlined, each of the canonicalizer's
+    many references to its input copies the whole mod-6 CASE (an
+    812K-character analyzed plan at sf0.001 against 47K), and every
+    micro-batch plans and runs that tree again."""
     known = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("doc_id") % 2 == 0)
-        .select(
-            canonicalize_url(_messy_url("doc_id")).alias(
-                "canon_url"
-            )
-        )
+        .select(_messy_url("doc_id").alias("url"))
+        .select(canonicalize_url("url").alias("canon_url"))
         .distinct()
         .withColumn("__known", F.lit(1))
     )
     stream = file_source(spark, sf_dir, "documents", parts)
     pages = stream.select(
-        "doc_id",
-        canonicalize_url(_messy_url("doc_id")).alias("canon_url"),
-    )
+        "doc_id", _messy_url("doc_id").alias("url")
+    ).select("doc_id", canonicalize_url("url").alias("canon_url"))
     screened = pages.join(F.broadcast(known), "canon_url", "left").select(
         "doc_id",
         "canon_url",

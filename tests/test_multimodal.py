@@ -510,7 +510,7 @@ def test_synth_png_corpus_matches_formula_ground_truth(spark):
     from mapreduce_chisquare_spark.operators import multimodal as mm
 
     docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    media = mm.synth_png_documents(docs)
+    media = mm.synth_media(docs, mm.synth_png)
     px = media.mapInPandas(ih.decoded_pixel_batch, ih.PX_SCHEMA)
     got = {r["doc_id"]: r for r in px.collect()}
     assert len(got) == 40
@@ -610,7 +610,7 @@ def test_synth_gif_feeds_decoded_phash_path(spark):
     from mapreduce_chisquare_spark.operators import multimodal as mm
 
     docs = spark.range(0, 24).withColumnRenamed("id", "doc_id")
-    media = mm.synth_gif_documents(docs)
+    media = mm.synth_media(docs, mm.synth_gif)
     px = media.mapInPandas(ih.decoded_pixel_batch, ih.PX_SCHEMA)
     got = {r["doc_id"]: r for r in px.collect()}
     assert len(got) == 24
@@ -817,7 +817,7 @@ def test_video_frame_phash_keys_and_fanout(spark):
     from mapreduce_chisquare_spark.operators import multimodal as mm
 
     docs = spark.range(0, 9).withColumnRenamed("id", "doc_id")
-    media = docs.mapInPandas(mm.synth_avi_batch, mm.PNG_MEDIA_SCHEMA)
+    media = mm.synth_media(docs, mm.synth_avi_frames)
     rows = ih.video_frame_phash(media).collect()
     per_doc = {}
     for r in rows:
@@ -841,12 +841,7 @@ def test_video_neardup_recalls_every_planted_clone(spark):
     from mapreduce_chisquare_spark.operators import multimodal as mm
 
     base = spark.range(0, 60).withColumnRenamed("id", "doc_id")
-    clones = base.filter("doc_id % 20 = 0").selectExpr(
-        f"doc_id + {mm.PHASH_CLONE_OFFSET} AS doc_id"
-    )
-    media = base.unionByName(clones).mapInPandas(
-        mm.synth_avi_clone_batch, mm.PNG_MEDIA_SCHEMA
-    )
+    media = mm.synth_media(mm.clone_ids(base), mm.synth_avi_clone)
     pairs = {
         (r.a_id, r.b_id): r.n_shared
         for r in ih.video_neardup_pairs(

@@ -109,6 +109,18 @@ def test_band_self_join_is_sort_merge_single_scan(spark, sf_dir):
     assert executed.count("Scan parquet") == 1, executed
 
 
+def test_inverted_index_join_is_co_partitioned_merge(spark, sf_dir):
+    # The df/cf stats and the posting lists are both aggregated on
+    # term, so the join back on term needs no exchange of its own.
+    # Unpinned, AQE broadcast one side or the other from run to run.
+    df = REGISTRY["inverted_index"][0](spark, sf_dir)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    executed = executed.split("== Initial Plan ==")[0]
+    assert "BroadcastHashJoin" not in executed, executed
+    assert "SortMergeJoin" in executed, executed
+
+
 def test_ivf_probe_filter_reaches_scan(spark, sf_dir):
     # Round 16: the query/probe side of the IVF ladder filters
     # vec_id < n_queries BELOW the Arrow assignment kernel (the UDF

@@ -51,6 +51,11 @@ _DEFAULT_TIER = (
     "stream_chi_square", "stream_static_join", "stream_anomaly_screen",
     "stream_gopher_screen", "stream_toxicity_screen", "stream_cdc_screen",
     "stream_er_screen", "stream_bloom_screen",
+    "image_phash_decoded", "image_phash_gif", "image_phash_jpeg",
+    "image_phash_palette", "image_neardup_decoded",
+    "image_thumbnail_decoded", "video_frame_phash", "video_neardup",
+    "video_shot_boundaries", "audio_fingerprint", "audio_energy_segments",
+    "audio_downsample_decoded", "multimodal_av_probe",
 )
 
 
@@ -58,9 +63,11 @@ def _oracle_param(name):
     """The similarity-search family (simsearch_*, similarity_join*),
     the graph family (graph_*, basket_rules), the text n-gram family
     (lm_*, collocations_*, ngram_counts, ngram_novelty,
-    quality_perplexity_buckets) and one streaming entry per
+    quality_perplexity_buckets), one streaming entry per
     run-to-completion shape (complete mode, stateful, foreachBatch,
-    stream-static joins, stateless screens) run in the default tier;
+    stream-static joins, stateless screens) and the 13 synthesized-
+    media entries (image_*_decoded/gif/jpeg/palette, video_*,
+    audio_*, multimodal_av_probe) run in the default tier;
     the rest of the ~9 min registry sweep is `slow` (full tier:
     pytest -m ""), as scripts/check_oracle covers the same ground."""
     if name.startswith(_DEFAULT_TIER):

@@ -185,7 +185,7 @@ def _py_frame_bits(doc_id: int, f: int):
 
 def test_video_shot_boundaries_match_python_model(spark):
     docs = spark.createDataFrame([(i,) for i in range(9)], "doc_id long")
-    media = docs.mapInPandas(mm.synth_avi_batch, mm.PNG_MEDIA_SCHEMA)
+    media = mm.synth_media(docs, mm.synth_avi_frames)
     got = {
         (r.doc_id, r.frame_idx): (r.dist, r.is_boundary)
         for r in ih.video_shot_boundaries(media).collect()

@@ -301,7 +301,7 @@ def _thumb_model(doc_id, t=mm.THUMB_T):
 def test_image_thumbnail_decoded_matches_ground_truth(spark):
     ids = [0, 1, 2, 7, 12]  # all color types, several dims/filters
     docs = spark.createDataFrame([(i,) for i in ids], "doc_id long")
-    media = mm.synth_png_documents(docs)
+    media = mm.synth_media(docs, mm.synth_png)
     got = {
         r.doc_id: (r.w, r.h, r.thumb)
         for r in mm.image_thumbnail_decoded(media).collect()

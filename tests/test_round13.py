@@ -153,7 +153,7 @@ def test_image_thumbnail_full_size_unchanged(spark):
     # fixture-sized images (w,h >= t) must be byte-identical to the
     # pre-placeholder behavior: no '' fields anywhere
     docs = spark.createDataFrame([(0,), (7,)], "doc_id long")
-    media = mm.synth_png_documents(docs)
+    media = mm.synth_media(docs, mm.synth_png)
     for r in mm.image_thumbnail_decoded(media).collect():
         fields = r.thumb.split(",")
         assert len(fields) == mm.THUMB_T * mm.THUMB_T

@@ -1311,9 +1311,7 @@ def test_decoded_phash_scales_linearly(spark):
     from mapreduce_chisquare_spark.operators import multimodal as mm
 
     def run(n):
-        media = _id_df(spark, n).mapInPandas(
-            mm.synth_png_batch, mm.PNG_MEDIA_SCHEMA
-        )
+        media = mm.synth_media(_id_df(spark, n), mm.synth_png)
         t0 = time.perf_counter()
         cnt = ih.image_phash_decoded(media).count()
         return cnt, time.perf_counter() - t0
@@ -1413,7 +1411,7 @@ def test_video_neardup_survives_slate_frame_bomb(spark):
     media = (
         base.unionByName(clones)
         .unionByName(bombs)
-        .mapInPandas(media_batch, mm.PNG_MEDIA_SCHEMA)
+        .mapInPandas(media_batch, mm.MEDIA_SCHEMA)
     )
     t0 = time.perf_counter()
     got = {
