@@ -1,11 +1,27 @@
-"""Time-series resampling: regular-grid spine + forward fill.
+"""Time-series family over the events log: per-user value series.
 
-The classic observability/feature-store operator Spark has no builtin
-for: put each entity on a regular time grid from its first to its
-last observation and carry the last value forward through empty
-periods. Expressed as a composition — per-entity bounds, sequence()
-spine explode, per-period last observation, ignorenulls window fill —
-every step distributed and bounded.
+Operators: resampling onto an hourly grid (resample_ffill,
+resample_interpolate), the conversion funnel, the data-series search
+ladder (PAA sketch -> SAX symbols -> grid refine -> banded DTW, each
+tier a shortlist-then-refine search), the matrix profile (ts_motif,
+ts_discord), diagnostics (changepoint, z-score anomalies,
+seasonality, autocorrelation, classical decomposition, lead-lag,
+pairwise correlation) and the forecast folds (EWMA, Holt,
+Holt-Winters).
+
+The family's contract, shared by every operator and its DuckDB twin:
+- values enter as exact integer cents (`round(value * 100)` as
+  BIGINT, one `_cents` expression); sums and every decision made on
+  them (segment means, SAX symbols, argmaxes, flags) are exact
+  integers, and each reported double is one final division;
+- a series is ordered by (ts, event_id), with the event id breaking
+  same-timestamp ties, so positions are the same on both engines;
+- a float reduction folds in segment (or hour, or offset) order,
+  never in the engine's aggregation order, so doubles are
+  bit-identical across engines;
+- a search tier raises ValueError when the query series lacks the
+  resolution it needs (`_guard_query_points`), rather than returning
+  an empty result.
 """
 
 from __future__ import annotations
@@ -15,6 +31,54 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 HOUR = 3600
+
+
+def _cents(value_col: str) -> Column:
+    """The value as exact integer cents."""
+    return F.round(F.col(value_col) * 100).cast("long")
+
+
+def _winner(df: DataFrame, w) -> DataFrame:
+    """The first row of each partition of window `w`."""
+    return df.withColumn("__rn", F.row_number().over(w)).filter(
+        F.col("__rn") == 1
+    )
+
+
+def _hourly(
+    events: DataFrame, step: int, max_user: int | None
+) -> tuple[DataFrame, DataFrame]:
+    """The resamplers' observation relation (user_id, us, value, h)
+    and their grid spine (user_id, h): each user's hours from its
+    first to its last observation. `max_user` bounds the checked
+    slice at test scale; None resamples everyone.
+
+    Integer division end to end (`div`, not a float divide+cast):
+    epoch-µs values sit at ~1.7e15 where double rounding could move
+    a boundary, and the oracle's `//` is integer division too. The
+    spine explode is per-user bounded (sequence() of that user's own
+    range, never a cross join of users x grid)."""
+    ev = events
+    if max_user is not None:
+        ev = ev.filter(F.col("user_id") < max_user)
+    obs = ev.select(
+        "user_id",
+        F.unix_micros("ts").alias("us"),
+        "value",
+    ).withColumn(
+        "h", F.expr(f"(us div 1000000 div {step}) * {step}")
+    )
+    spine = (
+        obs.groupBy("user_id")
+        .agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
+        .select(
+            "user_id",
+            F.explode(
+                F.sequence("h0", "h1", F.lit(step).cast("long"))
+            ).alias("h"),
+        )
+    )
+    return obs, spine
 
 
 def resample_ffill(
@@ -27,25 +91,10 @@ def resample_ffill(
     time in µs, then by max value among same-µs events, so the fill
     is deterministic).
 
-    Scale: the spine explode is per-user bounded (sequence() of that
-    user's own range — no global cross join of users x grid), the
-    per-hour reductions are hash aggregates, and the fill is one
-    window per user ordered by hour. State per user = one row.
-    `max_user` bounds the checked slice at test scale; None resamples
-    everyone."""
-    ev = events
-    if max_user is not None:
-        ev = ev.filter(F.col("user_id") < max_user)
-    # Integer division end to end (`div`, not a float divide+cast):
-    # epoch-µs values sit at ~1.7e15 where double rounding could move
-    # a boundary, and the oracle's `//` is integer division too.
-    obs = ev.select(
-        "user_id",
-        F.unix_micros("ts").alias("us"),
-        "value",
-    ).withColumn(
-        "h", F.expr(f"(us div 1000000 div {step}) * {step}")
-    )
+    Scale: the spine is `_hourly`'s, the per-hour reductions are
+    hash aggregates, and the fill is one window per user ordered by
+    hour. State per user = one row."""
+    obs, spine = _hourly(events, step, max_user)
 
     # Last-in-hour value with every aggregate hash-based: max(struct)
     # or max_by over a struct ordering falls back to SortAggregate
@@ -60,16 +109,6 @@ def resample_ffill(
     per_hour = per_us.groupBy("user_id", "h").agg(
         F.sum("c").alias("n_events"),
         F.max_by("v", "us").alias("last_value"),
-    )
-    spine = (
-        obs.groupBy("user_id")
-        .agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("h0", "h1", F.lit(step).cast("long"))
-            ).alias("h"),
-        )
     )
     w = Window.partitionBy("user_id").orderBy("h").rowsBetween(
         Window.unboundedPreceding, 0
@@ -188,14 +227,16 @@ def ts_paa(
     summarizes, which is what makes series similarity affordable at
     100 TB: downstream search touches sketches, not raw series."""
     return _paa_segments(events, segments, value_col).select(
-        "user_id",
-        "seg",
-        (
-            F.col("__sc").cast("double")
-            / (F.lit(100.0) * F.col("n_points").cast("double"))
-        ).alias("paa_value"),
-        "n_points",
+        "user_id", "seg", _paa_value(), "n_points"
     )
+
+
+def _paa_value() -> Column:
+    """A segment's mean: its exact-cent sum divided once."""
+    return (
+        F.col("__sc").cast("double")
+        / (F.lit(100.0) * F.col("n_points").cast("double"))
+    ).alias("paa_value")
 
 
 def _paa_segments(
@@ -213,7 +254,6 @@ def _paa_segments(
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
     pos = (F.row_number().over(w) - 1).cast("long")
-    cents = F.round(F.col(value_col) * 100).cast("long")
     base = (
         events.select("user_id", "ts", "event_id", value_col)
         .withColumn("__pos", pos)
@@ -222,7 +262,7 @@ def _paa_segments(
         .withColumn("seg", F.expr(f"(__pos * {int(segments)}) div __n"))
     )
     return base.groupBy("user_id", "seg").agg(
-        F.sum(cents).alias("__sc"),
+        F.sum(_cents(value_col)).alias("__sc"),
         F.count("*").cast("long").alias("n_points"),
     )
 
@@ -253,14 +293,44 @@ def ts_similarity_topk(
     on engine-chosen addition order."""
     sk = ts_paa(events, segments, value_col)
     per_user = _sketch_dist2(sk, query_user)
-    # Unpartitioned rank window is BOUNDED: it runs AFTER the
-    # TakeOrdered .limit(k), so the single task ranks k rows.
-    w = Window.orderBy(F.asc("dist2"), F.asc("user_id"))
+    return _top_ranked(per_user, "dist2", k, "user_id", "dist2")
+
+
+def _top_ranked(df: DataFrame, score: str, k: int, *cols: str) -> DataFrame:
+    """The ladder's rank tail: the k rows of smallest `score`
+    (user_id tie-break), projected to `cols` plus a 1-based `rank`.
+    The unpartitioned rank window is bounded: it runs after the
+    TakeOrdered `limit(k)`, so a single task ranks k rows."""
+    w = Window.orderBy(F.asc(score), F.asc("user_id"))
     return (
-        per_user.orderBy(F.asc("dist2"), F.asc("user_id"))
+        df.orderBy(F.asc(score), F.asc("user_id"))
         .limit(k)
-        .withColumn("rank", F.row_number().over(w).cast("int"))
+        .select(*cols, F.row_number().over(w).cast("int").alias("rank"))
     )
+
+
+def _shortlist(
+    bounds: DataFrame, bound: str, n: int, cand_col: str, *extra: int
+) -> tuple[DataFrame, DataFrame]:
+    """The ladder's shortlist step: collect the <= `n` users of
+    smallest `bound` (user_id tie-break) once and re-broadcast them as
+    literal relations, so the coarse tier's lineage is not re-run per
+    downstream reference. Returns (cand: user_id + the bound as
+    `cand_col` ("name type"), members: the shortlisted user_ids plus
+    `extra`). Freeze-at-build semantics: the shortlist is fixed when
+    the plan is built; doubles survive the round trip exactly."""
+    rows = (
+        bounds.orderBy(F.asc(bound), F.asc("user_id")).limit(n).collect()
+    )
+    spark = bounds.sparkSession
+    cand = spark.createDataFrame(
+        [(r.user_id, r[bound]) for r in rows], f"user_id long, {cand_col}"
+    )
+    members = spark.createDataFrame(
+        [(r.user_id,) for r in rows] + [(u,) for u in extra],
+        "user_id long",
+    )
+    return cand, members
 
 
 def _sketch_dist2(sk: DataFrame, query_user: int) -> DataFrame:
@@ -505,46 +575,16 @@ def ts_similarity_sax_topk(
         .groupBy("user_id")
         .agg(F.sum(cell * cell).alias("mindist2"))
     )
-    cand_rows = (
-        mind.orderBy(F.asc("mindist2"), F.asc("user_id"))
-        .limit(shortlist)
-        .collect()
-    )
-    spark = events.sparkSession
-    cand = spark.createDataFrame(
-        [(r.user_id, int(r.mindist2)) for r in cand_rows],
-        "user_id long, mindist2 long",
-    )
-    members = spark.createDataFrame(
-        [(r.user_id,) for r in cand_rows] + [(query_user,)],
-        "user_id long",
+    cand, members = _shortlist(
+        mind, "mindist2", shortlist, "mindist2 long", query_user
     )
     # sketch derived from the SAME checkpointed segment relation the
     # symbol tier used — no second event scan
-    sk = segs.select(
-        "user_id",
-        "seg",
-        (
-            F.col("__sc").cast("double")
-            / (F.lit(100.0) * F.col("n_points").cast("double"))
-        ).alias("paa_value"),
-    ).join(F.broadcast(members), "user_id")
-    ranked = _sketch_dist2(sk, query_user)
-    # Unpartitioned rank window is BOUNDED: the join with the
-    # broadcast `cand` shortlist cuts the relation to shortlist size
-    # before ranking.
-    w = Window.orderBy(F.asc("dist2"), F.asc("user_id"))
-    return (
-        ranked.join(F.broadcast(cand), "user_id")
-        .orderBy(F.asc("dist2"), F.asc("user_id"))
-        .limit(k)
-        .select(
-            "user_id",
-            "mindist2",
-            "dist2",
-            F.row_number().over(w).cast("int").alias("rank"),
-        )
+    sk = segs.select("user_id", "seg", _paa_value()).join(
+        F.broadcast(members), "user_id"
     )
+    ranked = _sketch_dist2(sk, query_user).join(F.broadcast(cand), "user_id")
+    return _top_ranked(ranked, "dist2", k, "user_id", "mindist2", "dist2")
 
 
 def ts_similarity_refined(
@@ -586,18 +626,17 @@ def ts_similarity_refined(
     degenerate-query guard, the shortlist cut, and its own distance
     fold; fine (after the members cut a shortlist x grid relation)
     serves both _sketch_dist2 sides. The event log is therefore
-    scanned exactly TWICE per call — round 7 paid five scans: a
-    dedicated validation `count()`, two through the un-checkpointed
-    coarse lineage, and two through the fine tier's double
-    reference. The
+    scanned exactly twice per call: each un-checkpointed reference
+    would re-plan the full event scan and ordering window. The
     shortlist cut is TakeOrderedAndProject on the bit-stable coarse
     distance, collected ONCE (<= `shortlist` rows — a bounded,
     driver-safe collect) and re-broadcast as a literal relation; the
     refine tier then touches shortlist x grid rows via broadcast
-    joins — the event log itself never re-shuffles. At 100 TB the expensive exact scorer runs on a
-    fixed, tiny candidate relation exactly like the PQ refine path.
-    Freeze-at-build semantics (select_token_budget pattern): the
-    shortlist is fixed when this function runs."""
+    joins — the event log itself never re-shuffles. At 100 TB the
+    expensive exact scorer runs on a fixed, tiny candidate relation
+    exactly like the PQ refine path. Freeze-at-build semantics
+    (select_token_budget pattern): the shortlist is fixed when this
+    function runs."""
     coarse = ts_paa(events, segments, value_col).localCheckpoint()
     # The query series must exist at GRID resolution too: ts_paa's
     # n >= grid cut would otherwise drop it silently and the refined
@@ -605,54 +644,27 @@ def ts_similarity_refined(
     # CANDIDATES with 8..grid-1 points dropping is the documented
     # inner-join semantic; the QUERY degrading is an error).
     _guard_query_points(coarse, query_user, grid, "grid", "refinement")
-    # Shortlist is <= `shortlist` rows by construction; collect once
-    # and re-broadcast as a literal relation so the coarse-tier
-    # lineage isn't re-run per downstream reference. Build-time
-    # freeze semantics like select_token_budget: the shortlist is
-    # fixed when the plan is built. Values survive the round-trip
-    # exactly (IEEE doubles).
-    cand_rows = (
-        _sketch_dist2(coarse, query_user)
-        .orderBy(F.asc("dist2"), F.asc("user_id"))
-        .limit(shortlist)
-        .collect()
-    )
-    spark = events.sparkSession
-    cand = spark.createDataFrame(
-        [(r.user_id, float(r.dist2)) for r in cand_rows],
-        "user_id long, paa_dist2 double",
-    )
-    members = spark.createDataFrame(
-        [(r.user_id,) for r in cand_rows] + [(query_user,)],
-        "user_id long",
+    cand, members = _shortlist(
+        _sketch_dist2(coarse, query_user),
+        "dist2",
+        shortlist,
+        "paa_dist2 double",
+        query_user,
     )
     # The fine sketch is ALSO referenced twice downstream
-    # (_sketch_dist2 reads a query side and a candidate side), and
-    # each reference would re-plan the full event scan + ordering
-    # window. After the members cut it is a shortlist x grid relation
-    # — vanishing — so materialize it once: the whole call now scans
-    # the event log exactly twice (coarse checkpoint + fine
-    # checkpoint), round 7 paid four scans plus the validation scan.
+    # (_sketch_dist2 reads a query side and a candidate side); after
+    # the members cut it is a shortlist x grid relation, so it
+    # materializes once.
     fine = (
         ts_paa(events, grid, value_col)
         .join(F.broadcast(members), "user_id")
         .localCheckpoint()
     )
-    refined = _sketch_dist2(fine, query_user)
-    # Unpartitioned rank window is BOUNDED: the join with the
-    # broadcast `cand` shortlist cuts the relation to shortlist size
-    # before ranking.
-    w = Window.orderBy(F.asc("dist2"), F.asc("user_id"))
-    return (
-        refined.join(F.broadcast(cand), "user_id")
-        .orderBy(F.asc("dist2"), F.asc("user_id"))
-        .limit(k)
-        .select(
-            "user_id",
-            "paa_dist2",
-            "dist2",
-            F.row_number().over(w).cast("int").alias("rank"),
-        )
+    refined = _sketch_dist2(fine, query_user).join(
+        F.broadcast(cand), "user_id"
+    )
+    return _top_ranked(
+        refined, "dist2", k, "user_id", "paa_dist2", "dist2"
     )
 
 
@@ -797,57 +809,19 @@ def ts_similarity_dtw_topk(
         "user_id",
         F.col("c"),
     ).select("user_id", F.col("__sum").alias("lb2"))
-    cand_rows = (
-        lb.orderBy(F.asc("lb2"), F.asc("user_id")).limit(shortlist).collect()
-    )
-    spark = events.sparkSession
-    cand = spark.createDataFrame(
-        [(r.user_id, float(r.lb2)) for r in cand_rows],
-        "user_id long, lb2 double",
-    )
-    members = spark.createDataFrame(
-        [(r.user_id,) for r in cand_rows], "user_id long"
-    )
-    arrs = (
-        g.join(F.broadcast(members), "user_id")
-        .groupBy("user_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("seg", "paa_value"))
-                ),
-                lambda s: s["paa_value"],
-            ).alias("cells")
-        )
-    )
+    cand, members = _shortlist(lb, "lb2", shortlist, "lb2 double")
+    arrs = _cells(g.join(F.broadcast(members), "user_id"))
     scored = arrs.select(
         "user_id", _dtw_band_arrow(qv, band)(F.col("cells")).alias("dtw2")
-    )
-    # Unpartitioned rank window is BOUNDED: the join with the
-    # broadcast `cand` shortlist cuts the relation to shortlist size
-    # before ranking.
-    w = Window.orderBy(F.asc("dtw2"), F.asc("user_id"))
-    return (
-        scored.join(F.broadcast(cand), "user_id")
-        .orderBy(F.asc("dtw2"), F.asc("user_id"))
-        .limit(k)
-        .select(
-            "user_id",
-            "lb2",
-            "dtw2",
-            F.row_number().over(w).cast("int").alias("rank"),
-        )
-    )
+    ).join(F.broadcast(cand), "user_id")
+    return _top_ranked(scored, "dtw2", k, "user_id", "lb2", "dtw2")
 
 
-def _series_cells(
-    events: DataFrame, grid: int, value_col: str
-) -> DataFrame:
-    """Seg-ordered grid-cell array per entity from the shared PAA
-    sketch — the ONE place the matrix-profile operators' cells array
-    is built (ts_motif and ts_discord fold over it; keeping a single
-    builder keeps the seg-sort discipline in sync)."""
-    return ts_paa(events, grid, value_col).groupBy("user_id").agg(
+def _cells(sk: DataFrame) -> DataFrame:
+    """(user_id, cells): each user's sketch values as one array in seg
+    order, over a (user_id, seg, paa_value) relation — the DTW tier
+    scores it, ts_motif and ts_discord fold over it."""
+    return sk.groupBy("user_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("seg", "paa_value"))),
             lambda st: st["paa_value"],
@@ -918,7 +892,7 @@ def ts_motif(
             f"exclusion zone {exclusion} admits no candidate pair at "
             f"grid={grid}, m={m} (need grid - m + 1 > exclusion + 1)"
         )
-    arr = _series_cells(events, grid, value_col)
+    arr = _cells(ts_paa(events, grid, value_col))
     starts = F.sequence(F.lit(0), F.lit(grid - m))
     pairs = (
         arr.select("user_id", "cells", F.explode(starts).alias("a"))
@@ -936,11 +910,7 @@ def ts_motif(
     w = Window.partitionBy("user_id").orderBy(
         F.asc("dist2"), F.asc("start_a"), F.asc("start_b")
     )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "start_a", "start_b", "dist2")
-    )
+    return _winner(scored, w).select("user_id", "start_a", "start_b", "dist2")
 
 
 def ts_discord(
@@ -989,7 +959,7 @@ def ts_discord(
             f"valid partner at grid={grid}, m={m} (need grid - m + 1 >= "
             f"2*exclusion + 2)"
         )
-    arr = _series_cells(events, grid, value_col)
+    arr = _cells(ts_paa(events, grid, value_col))
     starts = F.sequence(F.lit(0), F.lit(s - 1))
     sub = arr.select("user_id", "cells", F.explode(starts).alias("a"))
     c = F.col("cells")
@@ -1012,11 +982,7 @@ def ts_discord(
     w = Window.partitionBy("user_id").orderBy(
         F.desc("nn_dist2"), F.asc("start")
     )
-    return (
-        nn.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("user_id", "start", "nn_dist2")
-    )
+    return _winner(nn, w).select("user_id", "start", "nn_dist2")
 
 
 def ts_changepoint(
@@ -1050,9 +1016,10 @@ def ts_changepoint(
     is a single pass over each series."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wn = Window.partitionBy("user_id")
-    cents = F.round(F.col(value_col) * 100).cast("long")
     base = (
-        events.select("user_id", "ts", "event_id", cents.alias("__c"))
+        events.select(
+            "user_id", "ts", "event_id", _cents(value_col).alias("__c")
+        )
         .withColumn("__pos", F.row_number().over(w).cast("long"))
         .withColumn(
             "__csum",
@@ -1074,8 +1041,7 @@ def ts_changepoint(
         F.desc(F.abs(F.col("__s"))), F.asc("__pos")
     )
     return (
-        scored.withColumn("__rn", F.row_number().over(win))
-        .filter(F.col("__rn") == 1)
+        _winner(scored, win)
         .select(
             "user_id",
             F.col("__pos").alias("cp_pos"),
@@ -1115,9 +1081,8 @@ def ts_anomaly_zscore(
     windows (totals + flags are row-local after them); linear in the
     event log, no UDFs, map-side after the single exchange."""
     wn = Window.partitionBy("user_id")
-    cents = F.round(F.col(value_col) * 100).cast("long")
     base = (
-        events.select("user_id", "event_id", cents.alias("__c"))
+        events.select("user_id", "event_id", _cents(value_col).alias("__c"))
         .withColumn("__n", F.count("*").over(wn))
         .withColumn("__sc", F.sum("__c").over(wn))
         .withColumn("__ssq", F.sum(F.col("__c") * F.col("__c")).over(wn))
@@ -1186,10 +1151,9 @@ def ts_seasonality(
     aggregate computes totals AND the hour-ordered folds from a
     ≤24-element collected array. Linear in the event log, bounded
     per-entity state, no UDFs."""
-    cents = F.round(F.col(value_col) * 100).cast("long")
     g = (
         events.select(
-            "user_id", F.hour("ts").alias("h"), cents.alias("__c")
+            "user_id", F.hour("ts").alias("h"), _cents(value_col).alias("__c")
         )
         .groupBy("user_id", "h")
         .agg(
@@ -1328,13 +1292,12 @@ def ts_corr_topk(
             ),
         ).alias("c")
     )
-    n = F.lit(segments)
     c = F.col("c")
-    da = n * c["sxx"] - c["sx"] * c["sx"]
-    db = n * c["syy"] - c["sy"] * c["sy"]
-    r = (n * c["sxy"] - c["sx"] * c["sy"]) / (F.sqrt(da) * F.sqrt(db))
+    ok, r = _pearson(
+        F.lit(segments), c["sx"], c["sy"], c["sxx"], c["syy"], c["sxy"]
+    )
     return (
-        agg.filter((da > 0) & (db > 0))
+        agg.filter(ok)
         .select(
             F.col("ua").alias("user_a"),
             F.col("ub").alias("user_b"),
@@ -1345,29 +1308,53 @@ def ts_corr_topk(
     )
 
 
-def _user_value_arrays(
-    events: DataFrame, value_col: str = "value"
+def _pearson(n, sx, sy, sxx, syy, sxy) -> tuple[Column, Column]:
+    """(defined, r): Pearson correlation from its five sums over `n`
+    pairs, defined when both variances are positive."""
+    da = n * sxx - sx * sx
+    db = n * syy - sy * sy
+    return (da > 0) & (db > 0), (n * sxy - sx * sy) / (
+        F.sqrt(da) * F.sqrt(db)
+    )
+
+
+def _series_array(
+    events: DataFrame, field: str, value: Column, out: str
 ) -> DataFrame:
-    """THE one builder of the per-user (ts, event_id)-ordered value
-    array both forecast folds consume — a single owner keeps the
-    cross-engine ordering contract (us, then event_id, doubles last)
-    from drifting between operators (the cells-builder discipline,
-    line ~833)."""
+    """(user_id, `out`): each user's `value`s as one array in
+    (ts, event_id) order — the order both engines share."""
     return (
         events.select(
             "user_id",
             F.struct(
                 F.unix_micros("ts").alias("us"),
                 F.col("event_id").alias("eid"),
-                F.col(value_col).cast("double").alias("v"),
+                value.alias(field),
             ).alias("e"),
         )
         .groupBy("user_id")
         .agg(F.array_sort(F.collect_list("e")).alias("es"))
         .select(
             "user_id",
-            F.expr("transform(es, e -> e.v)").alias("vals"),
+            F.expr(f"transform(es, e -> e.{field})").alias(out),
         )
+    )
+
+
+def _values(events: DataFrame, value_col: str) -> DataFrame:
+    """(user_id, vals): the forecast folds' ordered double series."""
+    return _series_array(
+        events, "v", F.col(value_col).cast("double"), "vals"
+    )
+
+
+def _fold_vals(seed, step) -> Column:
+    """Left fold of `step` over vals[2..], its state seeded by
+    `seed(vals[1])` — the forecast folds' shared shape."""
+    return F.aggregate(
+        F.slice(F.col("vals"), 2, F.greatest(F.size("vals") - 1, F.lit(0))),
+        seed(F.element_at(F.col("vals"), 1)),
+        step,
     )
 
 
@@ -1397,10 +1384,9 @@ def ts_forecast_ewma(
     this is one shuffle and one linear pass — the minimum for an
     order-dependent statistic."""
     beta = 1.0 - alpha
-    arr = _user_value_arrays(events, value_col)
-    level = F.aggregate(
-        F.slice(F.col("vals"), 2, F.greatest(F.size("vals") - 1, F.lit(0))),
-        F.element_at(F.col("vals"), 1),
+    arr = _values(events, value_col)
+    level = _fold_vals(
+        lambda first: first,
         lambda acc, x: x * F.lit(alpha) + acc * F.lit(beta),
     )
     return arr.select(
@@ -1443,17 +1429,13 @@ def ts_forecast_holt(
     materialized-array pass."""
     a1, a2 = float(alpha), 1.0 - float(alpha)
     b1, b2 = float(beta), 1.0 - float(beta)
-    arr = _user_value_arrays(events, value_col)
+    arr = _values(events, value_col)
 
     def _lvl(acc, x):
         return x * F.lit(a1) + (acc["l"] + acc["b"]) * F.lit(a2)
 
-    fold = F.aggregate(
-        F.slice(F.col("vals"), 2, F.greatest(F.size("vals") - 1, F.lit(0))),
-        F.struct(
-            F.element_at(F.col("vals"), 1).alias("l"),
-            F.lit(0.0).alias("b"),
-        ),
+    fold = _fold_vals(
+        lambda first: F.struct(first.alias("l"), F.lit(0.0).alias("b")),
         lambda acc, x: F.struct(
             _lvl(acc, x).alias("l"),
             (
@@ -1492,19 +1474,14 @@ def resample_interpolate(
     prev lives in an earlier hour (us_p < t) and next at-or-after the
     hour start (us_n >= t).
 
-    Scale shape: same as resample_ffill — per-user bounded spine
-    explode (never users x grid), hash-aggregate hour collapse
+    Scale shape: same as resample_ffill — `_hourly`'s per-user
+    bounded spine, hash-aggregate hour collapse
     (max_by/min_by over LONG orderings stay in HashAggregate), and
     TWO frame windows sharing ONE user partitioning; the plan pays
     the (user, h, us) tie-collapse exchange, the (user, h) hour
     exchange, and the user window exchange — all key-local, nothing
     corpus-wide twice."""
-    ev = events
-    if max_user is not None:
-        ev = ev.filter(F.col("user_id") < max_user)
-    obs = ev.select(
-        "user_id", F.unix_micros("ts").alias("us"), "value"
-    ).withColumn("h", F.expr(f"(us div 1000000 div {step}) * {step}"))
+    obs, spine = _hourly(events, step, max_user)
     per_us = obs.groupBy("user_id", "h", "us").agg(
         F.max("value").alias("v")
     )
@@ -1513,16 +1490,6 @@ def resample_interpolate(
         F.max_by("v", "us").alias("v_last"),
         F.min("us").alias("us_first"),
         F.min_by("v", "us").alias("v_first"),
-    )
-    spine = (
-        obs.groupBy("user_id")
-        .agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-        .select(
-            "user_id",
-            F.explode(
-                F.sequence("h0", "h1", F.lit(step).cast("long"))
-            ).alias("h"),
-        )
     )
     joined = spine.join(per_hour, ["user_id", "h"], "left")
     wp = Window.partitionBy("user_id").orderBy("h").rowsBetween(
@@ -1578,23 +1545,7 @@ def ts_acf(
     array; each lag is a linear fold over that SAME array in the same
     projection — max_lag folds, zero extra shuffles, no pair relation
     materialized."""
-    arr = (
-        events.select(
-            "user_id",
-            F.struct(
-                F.unix_micros("ts").alias("us"),
-                F.col("event_id").alias("eid"),
-                F.round(F.col(value_col) * 100)
-                .cast("long")
-                .alias("c"),
-            ).alias("e"),
-        )
-        .groupBy("user_id")
-        .agg(F.array_sort(F.collect_list("e")).alias("es"))
-        .select(
-            "user_id", F.expr("transform(es, e -> e.c)").alias("cs")
-        )
-    )
+    arr = _series_array(events, "c", _cents(value_col), "cs")
 
     def sums_for(lag: int):
         m = F.size("cs") - F.lit(lag)
@@ -1641,19 +1592,17 @@ def ts_acf(
             F.array(*[sums_for(L) for L in range(1, int(max_lag) + 1)])
         ).alias("cell"),
     ).filter(F.col("cell.m") >= 2)
-    m = F.col("cell.m").cast("double")
-    sx = F.col("cell.s.sx").cast("double")
-    sy = F.col("cell.s.sy").cast("double")
-    sxx = F.col("cell.s.sxx").cast("double")
-    syy = F.col("cell.s.syy").cast("double")
-    sxy = F.col("cell.s.sxy").cast("double")
-    da = m * sxx - sx * sx
-    db = m * syy - sy * sy
-    return cells.filter((da > 0) & (db > 0)).select(
+    ok, r = _pearson(
+        *[
+            F.col(f"cell.{f}").cast("double")
+            for f in ("m", "s.sx", "s.sy", "s.sxx", "s.syy", "s.sxy")
+        ]
+    )
+    return cells.filter(ok).select(
         "user_id",
         F.col("cell.lag").alias("lag"),
         F.col("cell.m").alias("n_pairs"),
-        ((m * sxy - sx * sy) / (F.sqrt(da) * F.sqrt(db))).alias("acf"),
+        r.alias("acf"),
     )
 
 
@@ -1698,7 +1647,7 @@ def ts_forecast_holt_winters(
     a1, a2 = float(alpha), 1.0 - float(alpha)
     b1, b2 = float(beta), 1.0 - float(beta)
     g1, g2 = float(gamma), 1.0 - float(gamma)
-    arr = _user_value_arrays(events, value_col)
+    arr = _values(events, value_col)
 
     def _j(acc):  # 1-based seasonal slot of the element consumed now
         return (acc["i"] % F.lit(m)) + F.lit(1)
@@ -1711,10 +1660,9 @@ def ts_forecast_holt_winters(
             acc["l"] + acc["b"]
         ) * F.lit(a2)
 
-    fold = F.aggregate(
-        F.slice(F.col("vals"), 2, F.greatest(F.size("vals") - 1, F.lit(0))),
-        F.struct(
-            F.element_at(F.col("vals"), 1).alias("l"),
+    fold = _fold_vals(
+        lambda first: F.struct(
+            first.alias("l"),
             F.lit(0.0).alias("b"),
             F.array_repeat(F.lit(0.0), m).alias("s"),
             F.lit(1).alias("i"),
@@ -1765,14 +1713,14 @@ def ts_decompose_classical(
     n − m/2, where the centered window is full). Period m must be
     even (the 2×m form).
 
-    Exactness posture (round-12 hardening): values quantize to
+    Exactness: values quantize to
     integer CENTS and every statistic is EXACT BIGINT until one
     final division per output column — trend = N/(2m·100) with
     N = vc₋ₕ + 2Σ interior + vcₕ, detrended D = 2m·vc − N, seasonal
     = ΣD / (n·2m·100). Integer sums are order-independent, so the
     per-slot aggregate cannot drift between engines no matter the
-    partial-aggregate schedule (the original float-sum form passed
-    the 9-digit gate at sf0.01 but broke at sf0.1 group sizes).
+    partial-aggregate schedule (a float sum's does, at sf0.1 group
+    sizes).
     Overflow budget: |D| ≤ 2m·max_cents, ΣD over n rows ≤
     n·2m·max_cents — 1e9 rows of 1e7-cent values at m = 12 stays
     under 2.5e17, inside int64.
@@ -1793,7 +1741,7 @@ def ts_decompose_classical(
         "user_id",
         F.unix_micros("ts").alias("us"),
         F.col("event_id").alias("eid"),
-        F.round(F.col(value_col) * 100).cast("long").alias("vc"),
+        _cents(value_col).alias("vc"),
     ).withColumn("idx", F.row_number().over(w))
     lags = base
     for off in range(-h, h + 1):
@@ -1927,8 +1875,7 @@ def ts_lead_lag(
         F.desc("corr"), F.asc("lag")
     )
     return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
+        _winner(scored, w)
         .select(
             F.col("ta").alias("type_a"),
             F.col("tb").alias("type_b"),

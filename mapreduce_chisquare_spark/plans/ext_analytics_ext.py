@@ -1,4 +1,4 @@
-"""Time-series, warehouse-maintenance, embedding-stat, and stream-enrich builders + oracle SQL.
+"""Warehouse-maintenance, embedding-stat, and stream-enrich builders + oracle SQL.
 
 Split from registry_extensions.py (round 12) — pure mechanical move;
 registration order is unchanged (registry_extensions.py registers).
@@ -34,41 +34,8 @@ from .ext_media import (
 )
 
 # =========================================================================
-# Time series, warehouse maintenance, embedding stats, stream enrich
+# Warehouse maintenance, embedding stats, stream enrich
 # =========================================================================
-
-def resample_ffill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timeseries import resample_ffill
-
-    return resample_ffill(_events(spark, sf_dir))
-
-
-SQL_RESAMPLE_FFILL = """
-WITH o AS (
-  SELECT user_id, epoch_us(ts) AS us, value,
-         (epoch_us(ts) // 1000000 // 3600) * 3600 AS h
-  FROM events WHERE user_id < 40),
-lv AS (
-  SELECT user_id, h, value FROM (
-    SELECT user_id, h, value,
-      row_number() OVER (PARTITION BY user_id, h
-                         ORDER BY us DESC, value DESC) AS rn
-    FROM o) t WHERE rn = 1),
-n AS (
-  SELECT user_id, h, CAST(count(*) AS BIGINT) AS n_events
-  FROM o GROUP BY user_id, h),
-sp AS (
-  SELECT user_id, unnest(generate_series(h0, h1, 3600)) AS h
-  FROM (SELECT user_id, min(h) AS h0, max(h) AS h1
-        FROM o GROUP BY user_id) t)
-SELECT sp.user_id, sp.h AS hour_start,
-  coalesce(n.n_events, 0) AS n_events,
-  last_value(lv.value IGNORE NULLS) OVER (
-    PARTITION BY sp.user_id ORDER BY sp.h) AS value_ffill
-FROM sp
-LEFT JOIN lv ON sp.user_id = lv.user_id AND sp.h = lv.h
-LEFT JOIN n  ON sp.user_id = n.user_id  AND sp.h = n.h
-"""
 
 
 _DQ_COLUMNS = ["o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"]
@@ -1394,407 +1361,6 @@ FROM pd CROSS JOIN tot
 """
 
 
-def ts_paa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PAA sketches of each user's event-value series
-    (operators/timeseries.py ts_paa)."""
-    from ..operators.timeseries import ts_paa
-
-    return ts_paa(_events(spark, sf_dir))
-
-
-def _paa_ctes(segments: int, tag: str) -> str:
-    """PAA sketch CTEs at a given resolution, mirroring
-    operators/timeseries.py _paa_segments — the ONE segmentation
-    definition on the oracle side too: {tag}s = (user_id, seg, sc
-    exact-cent sum, np) is the shared base (ts_sax compares it in
-    exact integers), {tag}k divides it into the sketch
-    (user_id, seg, paa_value, n_points). Integer floor division for
-    segment assignment, exact-cents sums before one final divide."""
-    return f"""
-{tag}b AS (
-  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents,
-         CAST(row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) - 1
-              AS BIGINT) AS pos,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n
-  FROM events),
-{tag}f AS (SELECT *, (pos * {segments}) // n AS seg
-           FROM {tag}b WHERE n >= {segments}),
-{tag}s AS (SELECT user_id, seg, CAST(sum(cents) AS BIGINT) AS sc,
-                  CAST(count(*) AS BIGINT) AS np
-           FROM {tag}f GROUP BY user_id, seg),
-{tag}k AS (SELECT user_id, seg,
-          CAST(sc AS DOUBLE) / (100.0 * CAST(np AS DOUBLE))
-            AS paa_value,
-          np AS n_points
-        FROM {tag}s)
-"""
-
-
-_PAA_CTES = _paa_ctes(8, "ts")
-
-SQL_TS_PAA = (
-    "WITH " + _PAA_CTES
-    + " SELECT user_id, seg, paa_value, n_points FROM tsk"
-)
-
-
-def ts_similarity_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-10 most similar user series to user 0 by squared PAA
-    distance (operators/timeseries.py ts_similarity_topk)."""
-    from ..operators.timeseries import ts_similarity_topk
-
-    return ts_similarity_topk(_events(spark, sf_dir))
-
-
-SQL_TS_SIMILARITY = (
-    "WITH " + _PAA_CTES + ", "
-    "tq AS (SELECT seg, paa_value AS q_value FROM tsk WHERE user_id = 0), "
-    "td AS (SELECT s.user_id, "
-    "sum((s.paa_value - q_value) * (s.paa_value - q_value) "
-    "    ORDER BY s.seg) AS dist2 "
-    "FROM tsk s JOIN tq USING (seg) WHERE s.user_id <> 0 "
-    "GROUP BY s.user_id) "
-    "SELECT user_id, dist2, "
-    "CAST(row_number() OVER (ORDER BY dist2 ASC, user_id ASC) "
-    "     AS INTEGER) AS rank "
-    "FROM td ORDER BY dist2 ASC, user_id ASC LIMIT 10"
-)
-
-
-def ts_similarity_refined_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PAA-shortlist + grid-resolution exact re-rank: top-10 series
-    nearest user 0, coarse 8-segment prune to a 40-user shortlist,
-    refined at 32 cells (operators/timeseries.py
-    ts_similarity_refined)."""
-    from ..operators.timeseries import ts_similarity_refined
-
-    return ts_similarity_refined(_events(spark, sf_dir))
-
-
-SQL_TS_SIMILARITY_REFINED = (
-    "WITH " + _PAA_CTES + ", " + _paa_ctes(32, "fg") + ", "
-    "tq AS (SELECT seg, paa_value AS q_value FROM tsk WHERE user_id = 0), "
-    "td AS (SELECT s.user_id, "
-    "sum((s.paa_value - q_value) * (s.paa_value - q_value) "
-    "    ORDER BY s.seg) AS dist2 "
-    "FROM tsk s JOIN tq USING (seg) WHERE s.user_id <> 0 "
-    "GROUP BY s.user_id), "
-    "cand AS (SELECT user_id, dist2 AS paa_dist2 FROM td "
-    "ORDER BY dist2 ASC, user_id ASC LIMIT 40), "
-    "fq AS (SELECT seg, paa_value AS q_value FROM fgk WHERE user_id = 0), "
-    "fd AS (SELECT f.user_id, "
-    "sum((f.paa_value - q_value) * (f.paa_value - q_value) "
-    "    ORDER BY f.seg) AS dist2 "
-    "FROM fgk f JOIN fq USING (seg) "
-    "JOIN cand c ON f.user_id = c.user_id "
-    "GROUP BY f.user_id) "
-    "SELECT c.user_id, c.paa_dist2, f.dist2, "
-    "CAST(row_number() OVER (ORDER BY f.dist2 ASC, f.user_id ASC) "
-    "     AS INTEGER) AS rank "
-    "FROM fd f JOIN cand c USING (user_id) "
-    "ORDER BY f.dist2 ASC, f.user_id ASC LIMIT 10"
-)
-
-
-def ts_sax_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SAX words per user series — the symbol tier of an iSAX index
-    (operators/timeseries.py ts_sax)."""
-    from ..operators.timeseries import ts_sax
-
-    return ts_sax(_events(spark, sf_dir))
-
-
-# The ONE symbol expression both SAX oracles share (word builder +
-# symbol-tier search): the cross-multiplied-cents comparison
-# (mean >= b  <=>  sc >= b_cents * n) — no float exists anywhere.
-def _sax_sym_expr() -> str:
-    from ..operators.timeseries import SAX_BREAKS_CENTS
-
-    return " + ".join(
-        f"(CASE WHEN sc >= {int(b)} * np THEN 1 ELSE 0 END)"
-        for b in SAX_BREAKS_CENTS
-    )
-
-
-# SAX CTEs: built on _paa_ctes' shared exact-sums base ({tag}s — the
-# one segmentation definition).
-def _sax_ctes() -> str:
-    sym = _sax_sym_expr()
-    return (
-        _paa_ctes(8, "sx")
-        + f""",
-sxw AS (SELECT user_id,
-               string_agg(CAST(({sym}) AS VARCHAR), '' ORDER BY seg)
-                 AS sax_word
-        FROM sxs GROUP BY user_id)
-"""
-    )
-
-
-def _sax_card() -> int:
-    from ..operators.timeseries import SAX_BREAKS_CENTS
-
-    return len(SAX_BREAKS_CENTS) + 1
-
-
-SQL_TS_SAX = (
-    "WITH "
-    + _sax_ctes()
-    + f" SELECT user_id, sax_word, CAST({_sax_card()} AS INTEGER)"
-    " AS card FROM sxw"
-)
-
-
-def ts_sax_group_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Non-singleton iSAX leaves: users grouped by identical SAX word
-    (operators/timeseries.py ts_sax_group)."""
-    from ..operators.timeseries import ts_sax_group
-
-    return ts_sax_group(_events(spark, sf_dir))
-
-
-SQL_TS_SAX_GROUP = (
-    "WITH "
-    + _sax_ctes()
-    + """
-SELECT sax_word, CAST(count(*) AS BIGINT) AS n_users,
-       min(user_id) AS min_user
-FROM sxw GROUP BY sax_word HAVING count(*) >= 2
-"""
-)
-
-
-def ts_similarity_sax_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Symbol-tier iSAX search: MINDIST prune + exact PAA re-rank
-    (operators/timeseries.py ts_similarity_sax_topk)."""
-    from ..operators.timeseries import ts_similarity_sax_topk
-
-    return ts_similarity_sax_topk(_events(spark, sf_dir))
-
-
-def _sql_ts_sax_topk() -> str:
-    from ..operators.timeseries import SAX_BREAKS_CENTS
-
-    blist = "[" + ", ".join(
-        f"CAST({int(b)} AS BIGINT)" for b in SAX_BREAKS_CENTS
-    ) + "]"
-    return (
-        "WITH "
-        + _paa_ctes(8, "sx")
-        + f""",
-sxy AS (SELECT user_id, seg, ({_sax_sym_expr()}) AS sym FROM sxs),
-sq AS (SELECT seg, sym AS q_sym FROM sxy WHERE user_id = 0),
-mdc AS (SELECT s.user_id,
-  CASE WHEN greatest(s.sym, q_sym) - least(s.sym, q_sym) <= 1
-    THEN CAST(0 AS BIGINT)
-    ELSE {blist}[greatest(s.sym, q_sym)]
-         - {blist}[least(s.sym, q_sym) + 1] END AS cell
-  FROM sxy s JOIN sq USING (seg) WHERE s.user_id <> 0),
-md AS (SELECT user_id, CAST(sum(cell * cell) AS BIGINT) AS mindist2
-       FROM mdc GROUP BY user_id),
-cand AS (SELECT user_id, mindist2 FROM md
-         ORDER BY mindist2 ASC, user_id ASC LIMIT 40),
-pq AS (SELECT seg, paa_value AS q_value FROM sxk WHERE user_id = 0),
-pd AS (SELECT s.user_id,
-  sum((s.paa_value - q_value) * (s.paa_value - q_value)
-      ORDER BY s.seg) AS dist2
-  FROM sxk s JOIN pq USING (seg)
-  JOIN cand c ON s.user_id = c.user_id
-  GROUP BY s.user_id)
-SELECT c.user_id, c.mindist2, d.dist2,
-  CAST(row_number() OVER (ORDER BY d.dist2 ASC, d.user_id ASC)
-       AS INTEGER) AS rank
-FROM pd d JOIN cand c USING (user_id)
-ORDER BY d.dist2 ASC, d.user_id ASC LIMIT 10
-"""
-    )
-
-
-SQL_TS_SAX_TOPK = _sql_ts_sax_topk()
-
-
-def ts_similarity_dtw_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Elastic tier of the series-search ladder: LB_Keogh-pruned
-    banded DTW top-10 around user 0 at 16 grid cells, band radius 2,
-    40-candidate shortlist (operators/timeseries.py
-    ts_similarity_dtw_topk)."""
-    from ..operators.timeseries import ts_similarity_dtw_topk
-
-    return ts_similarity_dtw_topk(_events(spark, sf_dir))
-
-
-def _sql_ts_dtw_topk(
-    grid: int = 16, band: int = 2, shortlist: int = 40, k: int = 10
-) -> str:
-    """DuckDB twin of the DTW tier. The DP runs as ONE recursive CTE
-    in (i, j) lexicographic order carrying the previous and current
-    DP rows as LIST(DOUBLE) — each step evaluates EXACTLY the Spark
-    UDF's cell formula (cs[i]-q[j])^2 + least(prev-up, prev-diag,
-    cur-left) in the same operation order, so dtw2 is bit-identical.
-    Out-of-band cells stay at the same +Infinity sentinel both
-    engines use; the envelope is a seg-range window min/max (picks
-    existing doubles — exact); the LB fold is an ORDER BY seg sum
-    (bit-stable)."""
-    g1 = grid + 1
-    inf = "'Infinity'::DOUBLE"
-    inf_row = f"list_transform(range({g1}), x -> {inf})"
-    zero_row = (
-        f"list_transform(range({g1}), "
-        f"x -> CASE WHEN x = 0 THEN 0.0 ELSE {inf} END)"
-    )
-    hi = f"LEAST({grid}, i + {band})"
-    # Index map (SQL carries j = nj - 1 for the DP column nj being
-    # filled): 1-based list index of 0-based DP position p is p + 1,
-    # so dp[i-1][nj] = prev[j + 2], dp[i-1][nj-1] = prev[j + 1],
-    # dp[i][nj-1] = cur[j + 1], and the query cell q[nj] = q[j + 1].
-    cell = (
-        "((cs[i] - q[j + 1]) * (cs[i] - q[j + 1]))"
-        " + least(prev[j + 2], prev[j + 1], cur[j + 1])"
-    )
-    return (
-        "WITH RECURSIVE "
-        + _paa_ctes(grid, "dw")
-        + f""",
-qg AS (SELECT seg, paa_value FROM dwk WHERE user_id = 0),
-qe AS (SELECT seg,
-         max(paa_value) OVER (ORDER BY seg RANGE BETWEEN {band}
-           PRECEDING AND {band} FOLLOWING) AS u,
-         min(paa_value) OVER (ORDER BY seg RANGE BETWEEN {band}
-           PRECEDING AND {band} FOLLOWING) AS l
-       FROM qg),
-lbc AS (SELECT s.user_id, s.seg,
-          CASE WHEN s.paa_value > e.u
-                 THEN (s.paa_value - e.u) * (s.paa_value - e.u)
-               WHEN s.paa_value < e.l
-                 THEN (e.l - s.paa_value) * (e.l - s.paa_value)
-               ELSE 0.0 END AS c
-        FROM dwk s JOIN qe e USING (seg) WHERE s.user_id <> 0),
-lb AS (SELECT user_id, sum(c ORDER BY seg) AS lb2
-       FROM lbc GROUP BY user_id),
-cand AS (SELECT user_id, lb2 FROM lb
-         ORDER BY lb2 ASC, user_id ASC LIMIT {shortlist}),
-qa AS (SELECT array_agg(paa_value ORDER BY seg) AS q FROM qg),
-ca AS (SELECT c.user_id, array_agg(s.paa_value ORDER BY s.seg) AS cs
-       FROM dwk s JOIN cand c USING (user_id) GROUP BY c.user_id),
-rec AS (
-  SELECT user_id, cs, q, 1 AS i,
-         GREATEST(1, 1 - {band}) - 1 AS j,
-         {zero_row} AS prev, {inf_row} AS cur
-  FROM ca, qa
-  UNION ALL
-  SELECT user_id, cs, q,
-    CASE WHEN j < {hi} THEN i ELSE i + 1 END,
-    CASE WHEN j < {hi} THEN j + 1
-         ELSE GREATEST(1, i + 1 - {band}) - 1 END,
-    CASE WHEN j < {hi} THEN prev ELSE cur END,
-    CASE WHEN j < {hi} THEN
-      list_transform(range({g1}),
-        x -> CASE WHEN x = j + 1 THEN {cell} ELSE cur[x + 1] END)
-    ELSE {inf_row} END
-  FROM rec WHERE NOT (i = {grid} AND j >= {hi})
-),
-dtw AS (SELECT user_id, cur[{g1}] AS dtw2
-        FROM rec WHERE i = {grid} AND j = {grid})
-SELECT c.user_id, c.lb2, d.dtw2,
-  CAST(row_number() OVER (ORDER BY d.dtw2 ASC, d.user_id ASC)
-       AS INTEGER) AS rank
-FROM dtw d JOIN cand c USING (user_id)
-ORDER BY d.dtw2 ASC, d.user_id ASC LIMIT {k}
-"""
-    )
-
-
-SQL_TS_DTW_TOPK = _sql_ts_dtw_topk()
-
-
-def ts_motif_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series motif discovery: closest non-trivial pair of 8-cell
-    subsequences within each user's 32-cell grid representation
-    (operators/timeseries.py ts_motif)."""
-    from ..operators.timeseries import ts_motif
-
-    return ts_motif(_events(spark, sf_dir))
-
-
-def _sql_ts_motif(grid: int = 32, m: int = 8, exclusion: int = 4) -> str:
-    """DuckDB twin of ts_motif: same grid cells (_paa_ctes), candidate
-    pairs from two range() laterals with the exclusion-zone filter,
-    the per-pair distance as an ORDER BY o sum over the offset range
-    (left-to-right — matching Spark's fold over a literal sequence
-    exactly), winner per series via QUALIFY row_number."""
-    s = grid - m + 1
-    sq = "(cells[a + o + 1] - cells[b + o + 1])"
-    return (
-        "WITH "
-        + _paa_ctes(grid, "mp")
-        + f""",
-ma AS (SELECT user_id, array_agg(paa_value ORDER BY seg) AS cells
-       FROM mpk GROUP BY user_id),
-pr AS (SELECT user_id, cells, r1.a, r2.b
-       FROM ma, range(0, {s}) r1(a), range(0, {s}) r2(b)
-       WHERE r2.b - r1.a > {exclusion}),
-dv AS (SELECT user_id, a, b,
-         sum({sq} * {sq} ORDER BY o) AS dist2
-       FROM pr, range(0, {m}) r3(o)
-       GROUP BY user_id, a, b)
-SELECT user_id, CAST(a AS BIGINT) AS start_a,
-       CAST(b AS BIGINT) AS start_b, dist2
-FROM dv
-QUALIFY row_number() OVER (PARTITION BY user_id
-                           ORDER BY dist2 ASC, a ASC, b ASC) = 1
-"""
-    )
-
-
-SQL_TS_MOTIF = _sql_ts_motif()
-
-
-def ts_discord_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series discord discovery: the 8-cell subsequence of each
-    user's 32-cell grid representation whose nearest non-trivial
-    neighbor is farthest (operators/timeseries.py ts_discord)."""
-    from ..operators.timeseries import ts_discord
-
-    return ts_discord(_events(spark, sf_dir))
-
-
-def _sql_ts_discord(grid: int = 32, m: int = 8, exclusion: int = 4) -> str:
-    """DuckDB twin of ts_discord: same grid cells (_paa_ctes),
-    partner pairs from two range() laterals with the two-sided
-    exclusion filter, per-pair distance as an ORDER BY o sum
-    (matching Spark's inner offset fold exactly), nearest neighbor
-    via a min aggregate (order-insensitive over bit-identical sums,
-    so it matches Spark's running-min fold), discord per series via
-    QUALIFY row_number on (nn_dist2 DESC, a ASC)."""
-    s = grid - m + 1
-    sq = "(cells[a + o + 1] - cells[b + o + 1])"
-    return (
-        "WITH "
-        + _paa_ctes(grid, "dc")
-        + f""",
-da AS (SELECT user_id, array_agg(paa_value ORDER BY seg) AS cells
-       FROM dck GROUP BY user_id),
-pr AS (SELECT user_id, cells, r1.a, r2.b
-       FROM da, range(0, {s}) r1(a), range(0, {s}) r2(b)
-       WHERE abs(r2.b - r1.a) > {exclusion}),
-dv AS (SELECT user_id, a, b,
-         sum({sq} * {sq} ORDER BY o) AS d2
-       FROM pr, range(0, {m}) r3(o)
-       GROUP BY user_id, a, b),
-nn AS (SELECT user_id, a, min(d2) AS nn_dist2
-       FROM dv GROUP BY user_id, a)
-SELECT user_id, CAST(a AS BIGINT) AS start, nn_dist2
-FROM nn
-QUALIFY row_number() OVER (PARTITION BY user_id
-                           ORDER BY nn_dist2 DESC, a ASC) = 1
-"""
-    )
-
-
-SQL_TS_DISCORD = _sql_ts_discord()
-
-
 def bpe_pair_counts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 adjacent-character pair frequencies over the corpus
     vocabulary, word-frequency weighted — the first BPE merge
@@ -1904,123 +1470,6 @@ ORDER BY token_count DESC, token ASC LIMIT {k}"""
 SQL_BPE_VOCAB = _sql_bpe_vocab()
 
 
-def ts_changepoint_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series CUSUM changepoint location
-    (operators/timeseries.py ts_changepoint)."""
-    from ..operators.timeseries import ts_changepoint
-
-    return ts_changepoint(_events(spark, sf_dir))
-
-
-SQL_TS_CHANGEPOINT = """
-WITH b AS (
-  SELECT user_id,
-         CAST(row_number() OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS BIGINT) AS pos,
-         CAST(sum(CAST(round(value * 100) AS BIGINT))
-              OVER (PARTITION BY user_id ORDER BY ts, event_id
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-              AS BIGINT) AS csum,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT))
-              OVER (PARTITION BY user_id) AS BIGINT) AS sc
-  FROM events),
-s AS (SELECT user_id, pos, n, n * csum - pos * sc AS sv
-      FROM b WHERE pos < n)
-SELECT user_id, pos AS cp_pos, n AS n_points,
-       CAST(sv AS DOUBLE) / (100.0 * CAST(n AS DOUBLE)) AS cusum
-FROM s
-QUALIFY row_number() OVER (PARTITION BY user_id
-                           ORDER BY abs(sv) DESC, pos ASC) = 1
-"""
-
-
-def ts_anomaly_zscore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series exact-decision z-score anomaly flags
-    (operators/timeseries.py ts_anomaly_zscore)."""
-    from ..operators.timeseries import ts_anomaly_zscore
-
-    return ts_anomaly_zscore(_events(spark, sf_dir))
-
-
-SQL_TS_ANOMALY_ZSCORE = """
-WITH b AS (
-  SELECT user_id, event_id,
-         CAST(round(value * 100) AS BIGINT) AS c,
-         CAST(count(*) OVER (PARTITION BY user_id) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT))
-              OVER (PARTITION BY user_id) AS BIGINT) AS sc,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)
-                  * CAST(round(value * 100) AS BIGINT))
-              OVER (PARTITION BY user_id) AS BIGINT) AS ssq
-  FROM events),
-f AS (SELECT user_id, event_id, c, n, sc, ssq,
-        CAST(n AS HUGEINT) * CAST(c AS HUGEINT)
-          - CAST(sc AS HUGEINT) AS dev,
-        CAST(n AS HUGEINT) * CAST(ssq AS HUGEINT)
-          - CAST(sc AS HUGEINT) * CAST(sc AS HUGEINT) AS nvar
-      FROM b)
-SELECT user_id, event_id,
-       (CAST(c AS DOUBLE) - CAST(sc AS DOUBLE) / CAST(n AS DOUBLE))
-         / sqrt(CAST(nvar AS DOUBLE)
-                / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))) AS z
-FROM f
-WHERE nvar > 0 AND dev * dev > 9 * nvar
-"""
-
-
-def ts_corr_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 most correlated series pairs, SAX-word-blocked
-    (operators/timeseries.py ts_corr_topk)."""
-    from ..operators.timeseries import ts_corr_topk
-
-    return ts_corr_topk(_events(spark, sf_dir))
-
-
-def _sql_ts_corr_topk(
-    segments: int = 8, k: int = 20, max_bucket: int = 100
-) -> str:
-    """DuckDB twin of ts_corr_topk: same SAX-word blocking with the
-    bucket-size guard, same sketch cells, the five Pearson components
-    as sum(... ORDER BY seg) (componentwise the same left-to-right
-    additions as Spark's seg-ordered struct fold), one shared double
-    formula for r."""
-    return (
-        "WITH "
-        + _sax_ctes()
-        + f""",
-cbw AS (SELECT sax_word FROM sxw GROUP BY sax_word
-        HAVING count(*) BETWEEN 2 AND {max_bucket}),
-cu AS (SELECT w.user_id, w.sax_word, s.seg, s.paa_value
-       FROM sxw w JOIN cbw USING (sax_word)
-       JOIN sxk s ON s.user_id = w.user_id),
-cp AS (SELECT a.user_id AS ua, b.user_id AS ub, a.seg,
-              a.paa_value AS x, b.paa_value AS y
-       FROM cu a JOIN cu b
-         ON a.sax_word = b.sax_word AND a.seg = b.seg
-        AND a.user_id < b.user_id),
-cc AS (SELECT ua, ub,
-         sum(x ORDER BY seg) AS sx, sum(y ORDER BY seg) AS sy,
-         sum(x * x ORDER BY seg) AS sxx,
-         sum(y * y ORDER BY seg) AS syy,
-         sum(x * y ORDER BY seg) AS sxy
-       FROM cp GROUP BY ua, ub)
-SELECT ua AS user_a, ub AS user_b,
-       ({segments} * sxy - sx * sy)
-         / (sqrt({segments} * sxx - sx * sx)
-            * sqrt({segments} * syy - sy * sy)) AS corr
-FROM cc
-WHERE {segments} * sxx - sx * sx > 0
-  AND {segments} * syy - sy * sy > 0
-ORDER BY corr DESC, user_a ASC, user_b ASC
-LIMIT {k}
-"""
-    )
-
-
-SQL_TS_CORR_TOPK = _sql_ts_corr_topk()
-
-
 def dq_drift_psi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type PSI drift between the first and second half of
     the event log (operators/warehouse.py dq_drift_psi)."""
@@ -2089,46 +1538,6 @@ WHERE n_ref > 0
 
 
 SQL_DQ_DRIFT_PSI = _sql_dq_drift_psi()
-
-
-def ts_seasonality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series hour-of-day seasonality strength and peak hour
-    (operators/timeseries.py ts_seasonality)."""
-    from ..operators.timeseries import ts_seasonality
-
-    return ts_seasonality(_events(spark, sf_dir))
-
-
-SQL_TS_SEASONALITY = """
-WITH g AS (
-  SELECT user_id, CAST(hour(ts) AS INTEGER) AS h,
-         CAST(count(*) AS BIGINT) AS n_h,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sc_h,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)
-                  * CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS ssq_h
-  FROM events GROUP BY user_id, CAST(hour(ts) AS INTEGER)),
-u AS (SELECT user_id,
-        CAST(sum(n_h) AS BIGINT) AS n,
-        CAST(sum(sc_h) AS BIGINT) AS sc,
-        CAST(sum(ssq_h) AS BIGINT) AS ssq,
-        sum(CAST(ssq_h AS DOUBLE)
-            - (CAST(sc_h AS DOUBLE) * CAST(sc_h AS DOUBLE))
-              / CAST(n_h AS DOUBLE) ORDER BY h) AS sse
-      FROM g GROUP BY user_id),
-pk AS (SELECT user_id, h FROM g
-       QUALIFY row_number() OVER (
-         PARTITION BY user_id
-         ORDER BY CAST(sc_h AS DOUBLE) / CAST(n_h AS DOUBLE) DESC,
-                  h ASC) = 1)
-SELECT u.user_id, CAST(pk.h AS INTEGER) AS peak_hour,
-       1.0 - u.sse / (CAST(u.ssq AS DOUBLE)
-                      - (CAST(u.sc AS DOUBLE) * CAST(u.sc AS DOUBLE))
-                        / CAST(u.n AS DOUBLE)) AS strength,
-       u.n AS n_points
-FROM u JOIN pk USING (user_id)
-WHERE CAST(u.n AS HUGEINT) * CAST(u.ssq AS HUGEINT)
-      - CAST(u.sc AS HUGEINT) * CAST(u.sc AS HUGEINT) > 0
-"""
 
 
 def skew_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:

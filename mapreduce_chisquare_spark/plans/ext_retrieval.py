@@ -148,36 +148,6 @@ SQL_DEDUP_MINHASH_K128 = (
 )
 
 
-def events_funnel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """view -> click -> purchase conversion funnel with real event
-    sequencing (operators/timeseries.py funnel)."""
-    from ..operators.timeseries import funnel
-
-    return funnel(_events(spark, sf_dir))
-
-
-SQL_EVENTS_FUNNEL = """
-WITH b AS (SELECT user_id, event_type AS et, epoch_us(ts) AS us
-           FROM events WHERE event_type IN ('view', 'click', 'purchase')),
-w0 AS (SELECT *, min(CASE WHEN et = 'view' THEN us END)
-         OVER (PARTITION BY user_id) AS t0 FROM b),
-w1 AS (SELECT *, min(CASE WHEN et = 'click' AND us >= t0 THEN us END)
-         OVER (PARTITION BY user_id) AS t1 FROM w0),
-w2 AS (SELECT *, min(CASE WHEN et = 'purchase' AND us >= t1 THEN us END)
-         OVER (PARTITION BY user_id) AS t2 FROM w1),
-pu AS (SELECT user_id, max(t0) AS t0, max(t1) AS t1, max(t2) AS t2
-       FROM w2 GROUP BY user_id),
-a AS (SELECT CAST(count(t0) AS BIGINT) AS n0, CAST(count(t1) AS BIGINT) AS n1,
-             CAST(count(t2) AS BIGINT) AS n2 FROM pu)
-SELECT 'view' AS stage, n0 AS n_users,
-  CASE WHEN n0 > 0 THEN CAST(1.0 AS DOUBLE) END AS share FROM a
-UNION ALL SELECT 'click', n1,
-  CASE WHEN n0 > 0 THEN CAST(n1 AS DOUBLE) / CAST(n0 AS DOUBLE) END FROM a
-UNION ALL SELECT 'purchase', n2,
-  CASE WHEN n0 > 0 THEN CAST(n2 AS DOUBLE) / CAST(n0 AS DOUBLE) END FROM a
-"""
-
-
 def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC diff between two deterministic snapshot views of documents:
     old = ids not divisible by 7; new = ids not divisible by 5 with

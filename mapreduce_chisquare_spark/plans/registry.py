@@ -5,6 +5,8 @@ Split by domain:
 - registry_relational: join/agg/window/set-op proof over TPC-H-ish tables.
 - registry_extensions: LLM-data-pipeline ops (dedup, simsearch, text
   analysis, windows, multimodal).
+- registry_analytics: graph analytics, sketches, quantile audits.
+- timeseries: the time-series family (operators/timeseries.py).
 """
 
 from __future__ import annotations
@@ -13,12 +15,14 @@ from .registry_text import TEXT_QUERIES
 from .registry_relational import RELATIONAL_QUERIES
 from .registry_extensions import EXTENSION_QUERIES
 from .registry_analytics import ANALYTICS_QUERIES
+from .timeseries import TIMESERIES_QUERIES
 
 REGISTRY: dict = {
     **TEXT_QUERIES,
     **RELATIONAL_QUERIES,
     **EXTENSION_QUERIES,
     **ANALYTICS_QUERIES,
+    **TIMESERIES_QUERIES,
 }
 
 # Certification-window rotation: the driver's per-round correctness
@@ -134,8 +138,16 @@ _CERTIFY_WINDOW = [
 # Register NEW queries at the registry TAIL, then promote them into
 # the next round's _CERTIFY_WINDOW.
 #
-# Round-18 window TODO: the remaining 35 rows last hash-matched in r10
-# (dedup_terms onward in registry order), then the oldest r11 rows.
+# Round-18 window TODO: first the 21 time-series entries that moved to
+# plans/timeseries.py and are not in the window above
+# (ts_anomaly_zscore is): resample_ffill, resample_interpolate,
+# events_funnel, ts_paa, ts_similarity_topk, ts_similarity_refined,
+# ts_sax, ts_sax_group, ts_similarity_sax_topk, ts_similarity_dtw_topk,
+# ts_motif, ts_discord, ts_changepoint, ts_seasonality, ts_corr_topk,
+# ts_acf, ts_decompose_classical, ts_lead_lag, ts_forecast_ewma,
+# ts_forecast_holt, ts_forecast_holt_winters; then the remaining 35
+# rows last hash-matched in r10 (dedup_terms onward in registry
+# order), then the oldest r11 rows.
 _DEFER_TO_NEXT_ROTATION: list = []
 
 assert len(_CERTIFY_WINDOW) == 50, len(_CERTIFY_WINDOW)

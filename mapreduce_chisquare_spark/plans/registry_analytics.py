@@ -1,5 +1,5 @@
 """queries()/oracle_sql() registry — graph analytics, deterministic
-sketches, exact quantile audits, and series forecasting.
+sketches, exact quantile audits, curation passes and event analytics.
 
 The graph tier extends the engine the way the reference's mrjob
 lineage was historically extended (PageRank is the original MapReduce
@@ -286,47 +286,11 @@ FROM r GROUP BY event_type
 SQL_DQ_QUANTILES = _sql_dq_quantiles()
 
 
-# =========================================================================
-# EWMA forecast
-# =========================================================================
-
-_EWMA_ALPHA = 0.3
-
-
-def ts_forecast_ewma_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-series EWMA level / one-step forecast
-    (operators/timeseries.py ts_forecast_ewma)."""
-    from ..operators.timeseries import ts_forecast_ewma
-
-    return ts_forecast_ewma(_t(spark, sf_dir, "events"), alpha=_EWMA_ALPHA)
-
-
-def _sql_ewma(alpha: float = _EWMA_ALPHA) -> str:
-    a, b = repr(alpha), repr(1.0 - alpha)
-    return f"""
-WITH s AS (
-  SELECT user_id,
-         list(CAST(value AS DOUBLE) ORDER BY epoch_us(ts), event_id)
-           AS vals
-  FROM events GROUP BY user_id)
-SELECT user_id,
-       CAST(len(vals) AS BIGINT) AS n_points,
-       list_reduce(vals, (acc, x) -> x * CAST({a} AS DOUBLE)
-                                     + acc * CAST({b} AS DOUBLE))
-         AS ewma_level
-FROM s
-"""
-
-
-SQL_TS_FORECAST_EWMA = _sql_ewma()
-
-
 ANALYTICS_QUERIES = {
     "graph_pagerank": (graph_pagerank_q, SQL_GRAPH_PAGERANK),
     "graph_triangles": (graph_triangles_q, SQL_GRAPH_TRIANGLES),
     "distinct_sketch_kmv": (distinct_sketch_kmv_q, SQL_DISTINCT_SKETCH_KMV),
     "dq_quantiles": (dq_quantiles_q, SQL_DQ_QUANTILES),
-    "ts_forecast_ewma": (ts_forecast_ewma_q, SQL_TS_FORECAST_EWMA),
 }
 
 
@@ -505,54 +469,6 @@ LIMIT 50
 """
 
 
-_HOLT_A, _HOLT_B = 0.3, 0.2
-
-
-def ts_forecast_holt_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timeseries import ts_forecast_holt
-
-    return ts_forecast_holt(
-        _t(spark, sf_dir, "events"), alpha=_HOLT_A, beta=_HOLT_B
-    )
-
-
-def _sql_holt(alpha: float = _HOLT_A, beta: float = _HOLT_B) -> str:
-    """Recursive-CTE twin — deliberately NOT list_reduce: DuckDB's
-    list_reduce mutates a struct accumulator's fields in place, so a
-    later field's expression reads the earlier field's NEW value
-    (measured: trend diverges from step 3). The recursion evaluates
-    both expressions against the previous row, matching Spark's
-    fresh-struct-per-step fold."""
-    a1, a2 = repr(float(alpha)), repr(1.0 - float(alpha))
-    b1, b2 = repr(float(beta)), repr(1.0 - float(beta))
-    lvl = (
-        f"vals[i + 1] * CAST({a1} AS DOUBLE) "
-        f"+ (l + b) * CAST({a2} AS DOUBLE)"
-    )
-    return f"""
-WITH RECURSIVE s AS (
-  SELECT user_id,
-         list(CAST(value AS DOUBLE) ORDER BY epoch_us(ts), event_id)
-           AS vals
-  FROM events GROUP BY user_id),
-rec AS (
-  SELECT user_id, vals, 1 AS i,
-         CAST(vals[1] AS DOUBLE) AS l, CAST(0.0 AS DOUBLE) AS b
-  FROM s
-  UNION ALL
-  SELECT user_id, vals, i + 1,
-         {lvl},
-         ({lvl} - l) * CAST({b1} AS DOUBLE) + b * CAST({b2} AS DOUBLE)
-  FROM rec WHERE i < len(vals))
-SELECT user_id, CAST(len(vals) AS BIGINT) AS n_points,
-       l AS level, b AS trend, l + b AS forecast_1
-FROM rec WHERE i = len(vals)
-"""
-
-
-SQL_TS_FORECAST_HOLT = _sql_holt()
-
-
 ANALYTICS_QUERIES.update(
     {
         "quality_gopher_rules": (
@@ -561,7 +477,6 @@ ANALYTICS_QUERIES.update(
         ),
         "c4_line_dedup": (c4_line_dedup_q, SQL_C4_LINE_DEDUP),
         "dsir_importance": (dsir_importance_q, SQL_DSIR_IMPORTANCE),
-        "ts_forecast_holt": (ts_forecast_holt_q, SQL_TS_FORECAST_HOLT),
     }
 )
 
@@ -613,72 +528,6 @@ ANALYTICS_QUERIES.update(
         "multimodal_av_probe": (
             multimodal_av_probe_q,
             SQL_MULTIMODAL_AV_PROBE,
-        ),
-    }
-)
-
-
-# =========================================================================
-# Linear-interpolation resampling
-# =========================================================================
-
-def resample_interpolate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timeseries import resample_interpolate
-
-    return resample_interpolate(_t(spark, sf_dir, "events"))
-
-
-SQL_RESAMPLE_INTERPOLATE = """
-WITH o AS (
-  SELECT user_id, epoch_us(ts) AS us, value,
-         (epoch_us(ts) // 1000000 // 3600) * 3600 AS h
-  FROM events WHERE user_id < 40),
-pu AS (
-  SELECT user_id, h, us, max(value) AS v
-  FROM o GROUP BY user_id, h, us),
-ph AS (
-  SELECT user_id, h,
-         max(us) AS us_last, arg_max(v, us) AS v_last,
-         min(us) AS us_first, arg_min(v, us) AS v_first
-  FROM pu GROUP BY user_id, h),
-sp AS (
-  SELECT user_id, unnest(generate_series(h0, h1, 3600)) AS h
-  FROM (SELECT user_id, min(h) AS h0, max(h) AS h1
-        FROM o GROUP BY user_id) t),
-j AS (
-  SELECT sp.user_id, sp.h,
-         ph.us_last, ph.v_last, ph.us_first, ph.v_first
-  FROM sp LEFT JOIN ph ON sp.user_id = ph.user_id AND sp.h = ph.h),
-w AS (
-  SELECT user_id, h, h * 1000000 AS t,
-    last_value(us_last IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY h
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS us_p,
-    last_value(v_last IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY h
-      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS v_p,
-    first_value(us_first IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY h
-      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS us_n,
-    first_value(v_first IGNORE NULLS) OVER (
-      PARTITION BY user_id ORDER BY h
-      ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS v_n
-  FROM j)
-SELECT user_id, h AS hour_start,
-  CASE WHEN us_p IS NULL THEN v_n
-       WHEN us_n IS NULL THEN v_p
-       ELSE v_p + (v_n - v_p)
-            * (CAST(t - us_p AS DOUBLE) / CAST(us_n - us_p AS DOUBLE))
-  END AS value_interp
-FROM w
-"""
-
-
-ANALYTICS_QUERIES.update(
-    {
-        "resample_interpolate": (
-            resample_interpolate_q,
-            SQL_RESAMPLE_INTERPOLATE,
         ),
     }
 )
@@ -987,63 +836,6 @@ ANALYTICS_QUERIES.update(
         "basket_rules": (basket_rules_q, _sql_basket_rules()),
     }
 )
-
-
-# =========================================================================
-# Autocorrelation function (correlogram)
-# =========================================================================
-
-_ACF_MAX_LAG = 3
-
-
-def ts_acf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timeseries import ts_acf
-
-    return ts_acf(_t(spark, sf_dir, "events"), max_lag=_ACF_MAX_LAG)
-
-
-def _sql_ts_acf(max_lag: int = _ACF_MAX_LAG) -> str:
-    """DuckDB twin builds the five components relationally
-    (positional unnest + SUM) — legitimate because they are EXACT
-    BIGINT sums, order-independent by construction, unlike the float
-    folds elsewhere in this module."""
-    lags = ", ".join(str(L) for L in range(1, int(max_lag) + 1))
-    return f"""
-WITH s AS (
-  SELECT user_id,
-         list(CAST(round(value * 100) AS BIGINT)
-              ORDER BY epoch_us(ts), event_id) AS l
-  FROM events GROUP BY user_id),
-p AS (
-  SELECT user_id, lag, len(l) - lag AS m, l
-  FROM s, UNNEST([{lags}]) AS t(lag)
-  WHERE len(l) - lag >= 2),
-u AS (
-  SELECT user_id, lag, m, l[i] AS x, l[i + lag] AS y
-  FROM p, UNNEST(range(1, m + 1)) AS r(i)),
-a AS (
-  SELECT user_id, lag, CAST(max(m) AS BIGINT) AS m,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy,
-         CAST(sum(x * y) AS BIGINT) AS sxy
-  FROM u GROUP BY user_id, lag)
-SELECT user_id, CAST(lag AS INT) AS lag, m AS n_pairs,
-  (CAST(m AS DOUBLE) * CAST(sxy AS DOUBLE)
-   - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-  / (sqrt(CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
-          - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-     * sqrt(CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)
-            - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS acf
-FROM a
-WHERE CAST(m AS DOUBLE) * CAST(sxx AS DOUBLE)
-      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0
-  AND CAST(m AS DOUBLE) * CAST(syy AS DOUBLE)
-      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) > 0
-"""
-
-
-ANALYTICS_QUERIES.update({"ts_acf": (ts_acf_q, _sql_ts_acf())})
 
 
 # =========================================================================
@@ -1632,82 +1424,6 @@ ANALYTICS_QUERIES.update(
 
 
 # =========================================================================
-# Holt-Winters additive seasonal forecast (round 11 sixth batch)
-# =========================================================================
-
-_HW_A, _HW_B, _HW_G, _HW_M = 0.3, 0.2, 0.3, 4
-
-
-def ts_forecast_holt_winters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.timeseries import ts_forecast_holt_winters
-
-    return ts_forecast_holt_winters(
-        _t(spark, sf_dir, "events"),
-        alpha=_HW_A, beta=_HW_B, gamma=_HW_G, period=_HW_M,
-    )
-
-
-def _sql_holt_winters(
-    alpha: float = _HW_A,
-    beta: float = _HW_B,
-    gamma: float = _HW_G,
-    m: int = _HW_M,
-) -> str:
-    """Recursive-CTE twin of the Holt-Winters fold — the _sql_holt
-    discipline (never list_reduce; l' inlined into b' and the
-    seasonal update; slice-concat array rebuild)."""
-    a1, a2 = repr(float(alpha)), repr(1.0 - float(alpha))
-    b1, b2 = repr(float(beta)), repr(1.0 - float(beta))
-    g1, g2 = repr(float(gamma)), repr(1.0 - float(gamma))
-    j = f"((i % {m}) + 1)"
-    lvl = (
-        f"(vals[i + 1] - sn[{j}]) * CAST({a1} AS DOUBLE) "
-        f"+ (l + b) * CAST({a2} AS DOUBLE)"
-    )
-    zeros = ", ".join(["CAST(0.0 AS DOUBLE)"] * int(m))
-    return f"""
-WITH RECURSIVE s AS (
-  SELECT user_id,
-         list(CAST(value AS DOUBLE) ORDER BY epoch_us(ts), event_id)
-           AS vals
-  FROM events GROUP BY user_id),
-rec AS (
-  SELECT user_id, vals, 1 AS i,
-         CAST(vals[1] AS DOUBLE) AS l, CAST(0.0 AS DOUBLE) AS b,
-         [{zeros}] AS sn
-  FROM s
-  UNION ALL
-  SELECT user_id, vals, i + 1,
-         {lvl},
-         ({lvl} - l) * CAST({b1} AS DOUBLE)
-           + b * CAST({b2} AS DOUBLE),
-         list_concat(list_concat(
-           list_slice(sn, 1, {j} - 1),
-           [(vals[i + 1] - ({lvl})) * CAST({g1} AS DOUBLE)
-            + sn[{j}] * CAST({g2} AS DOUBLE)]),
-           list_slice(sn, {j} + 1, {m}))
-  FROM rec WHERE i < len(vals))
-SELECT user_id, CAST(len(vals) AS BIGINT) AS n_points,
-       l AS level, b AS trend,
-       sn[(len(vals) % {m}) + 1] AS season_next,
-       l + b + sn[(len(vals) % {m}) + 1] AS forecast_1
-FROM rec WHERE i = len(vals)
-"""
-
-
-ANALYTICS_QUERIES.update(
-    {
-        # round-11 sixth batch (continued) — registry tail, queued
-        # for the round-12 certification window
-        "ts_forecast_holt_winters": (
-            ts_forecast_holt_winters_q,
-            _sql_holt_winters(),
-        ),
-    }
-)
-
-
-# =========================================================================
 # k-core peeling (round 11 sixth batch)
 # =========================================================================
 
@@ -1766,60 +1482,8 @@ ANALYTICS_QUERIES.update(
 
 
 # =========================================================================
-# Classical seasonal decomposition + Jaccard link prediction (round 11)
+# Jaccard link prediction
 # =========================================================================
-
-def ts_decompose_classical_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classical additive decomposition (operators/timeseries.py
-    ts_decompose_classical): centered 2x4 moving-average trend,
-    per-slot seasonal means, residuals — pure windows, no
-    materialized arrays."""
-    from ..operators.timeseries import ts_decompose_classical
-
-    return ts_decompose_classical(_t(spark, sf_dir, "events"))
-
-
-SQL_TS_DECOMPOSE = """
-WITH b AS (SELECT user_id, epoch_us(ts) AS us, event_id AS eid,
-                  CAST(round(value * 100) AS BIGINT) AS vc
-           FROM events),
-r AS (SELECT user_id, vc,
-             row_number() OVER w AS idx,
-             lag(vc, 2) OVER w AS l2, lag(vc, 1) OVER w AS l1,
-             lead(vc, 1) OVER w AS f1, lead(vc, 2) OVER w AS f2
-      FROM b WINDOW w AS (PARTITION BY user_id ORDER BY us, eid)),
-t AS (SELECT user_id, idx, vc,
-             CAST(l2 + 2 * l1 + 2 * vc + 2 * f1 + f2 AS BIGINT) AS nt,
-             (idx - 1) % 4 AS slot
-      FROM r),
-d AS (SELECT user_id, idx, vc, nt, slot,
-             CAST(8 * vc - nt AS BIGINT) AS dd
-      FROM t WHERE nt IS NOT NULL),
-s AS (SELECT user_id, slot, CAST(sum(dd) AS BIGINT) AS sd,
-             CAST(count(*) AS BIGINT) AS n
-      FROM d GROUP BY user_id, slot)
-SELECT d.user_id, CAST(d.idx AS INTEGER) AS idx,
-       CAST(d.vc AS DOUBLE) / 100.0 AS value,
-       CAST(d.nt AS DOUBLE) / 800.0 AS trend,
-       CAST(s.sd AS DOUBLE) / (CAST(s.n AS DOUBLE) * 800.0)
-         AS seasonal,
-       CAST(d.dd AS DOUBLE) / 800.0
-         - CAST(s.sd AS DOUBLE) / (CAST(s.n AS DOUBLE) * 800.0)
-         AS resid
-FROM d JOIN s USING (user_id, slot)
-"""
-
-
-ANALYTICS_QUERIES.update(
-    {
-        # round-11 seventh batch — registry tail, queued for the
-        # round-12 certification window
-        "ts_decompose_classical": (
-            ts_decompose_classical_q,
-            SQL_TS_DECOMPOSE,
-        ),
-    }
-)
 
 
 def graph_linkpred_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2070,7 +1734,7 @@ ANALYTICS_QUERIES.update(
 
 
 # =========================================================================
-# Round-12 second batch: HLL distinct sketch, lead-lag, bucketize
+# Round-12 second batch: HLL distinct sketch, bucketize
 # =========================================================================
 
 def distinct_sketch_hll_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2145,52 +1809,6 @@ FROM agg
 """
 
 
-def ts_lead_lag_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead-lag detection over event-type daily activity
-    (operators/timeseries.py ts_lead_lag): best cross-correlation
-    lag in [-2, +2] days per ordered type pair, exact BIGINT Pearson
-    components, ties to the smaller lag."""
-    from ..operators.timeseries import ts_lead_lag
-
-    return ts_lead_lag(_t(spark, sf_dir, "events"))
-
-
-SQL_TS_LEAD_LAG = """
-WITH daily AS (
-  SELECT event_type AS t,
-         epoch_us(ts) // CAST(86400000000 AS BIGINT) AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2),
-m AS (
-  SELECT a.t AS ta, b.t AS tb, l.lag,
-         a.c AS x, b.c AS y
-  FROM daily a
-  CROSS JOIN (SELECT CAST(lag AS BIGINT) AS lag
-              FROM UNNEST(range(-2, 3)) v(lag)) l
-  JOIN daily b ON a.t < b.t AND b.d = a.d + l.lag),
-sums AS (
-  SELECT ta, tb, lag, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM m GROUP BY ta, tb, lag),
-scored AS (
-  SELECT ta, tb, lag, n,
-         CAST(n * sxy - sx * sy AS DOUBLE)
-           / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syy - sy * sy AS DOUBLE)) AS corr
-  FROM sums
-  WHERE n >= 3 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0),
-rk AS (
-  SELECT *, row_number() OVER (PARTITION BY ta, tb
-                               ORDER BY corr DESC, lag ASC) AS rn
-  FROM scored)
-SELECT ta AS type_a, tb AS type_b, lag AS best_lag, n AS n_days, corr
-FROM rk WHERE rn = 1
-"""
-
-
 def quantile_bucketize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact equi-depth binning of lineitem extended price (cents)
     into 8 buckets (operators/warehouse.py quantile_bucketize):
@@ -2237,7 +1855,6 @@ ANALYTICS_QUERIES.update(
             distinct_sketch_hll_merge_q,
             _sql_hll(),
         ),
-        "ts_lead_lag": (ts_lead_lag_q, SQL_TS_LEAD_LAG),
         "quantile_bucketize": (
             quantile_bucketize_q,
             SQL_QUANTILE_BUCKETIZE,

@@ -47,7 +47,6 @@ from .ext_retrieval import (
     SQL_DEDUP_MINHASH_K128,
     SQL_DEDUP_SIMHASH,
     SQL_EMBED_NEARDUP,
-    SQL_EVENTS_FUNNEL,
     SQL_FINGERPRINT,
     SQL_LANG_ID,
     SQL_QUALITY,
@@ -71,7 +70,6 @@ from .ext_retrieval import (
     dedup_simhash,
     doc_fingerprint,
     embed_neardup,
-    events_funnel_q,
     lang_id,
     quality_score,
     simsearch_lsh,
@@ -174,7 +172,6 @@ from .ext_analytics_ext import (
     SQL_PQ_ENCODE,
     SQL_PQ_REFINED,
     SQL_PQ_TOPK,
-    SQL_RESAMPLE_FFILL,
     SQL_ROLLUP_MULTIGRAIN,
     SQL_SAMPLE_WEIGHTED,
     SQL_SAMPLE_WEIGHTED_PER_SOURCE,
@@ -190,19 +187,6 @@ from .ext_analytics_ext import (
     SQL_STREAM_QUALITY,
     SQL_STREAM_STATIC_JOIN,
     SQL_TOKENS_TO_IDS,
-    SQL_TS_ANOMALY_ZSCORE,
-    SQL_TS_CHANGEPOINT,
-    SQL_TS_CORR_TOPK,
-    SQL_TS_DISCORD,
-    SQL_TS_DTW_TOPK,
-    SQL_TS_MOTIF,
-    SQL_TS_PAA,
-    SQL_TS_SAX,
-    SQL_TS_SAX_GROUP,
-    SQL_TS_SAX_TOPK,
-    SQL_TS_SEASONALITY,
-    SQL_TS_SIMILARITY,
-    SQL_TS_SIMILARITY_REFINED,
     SQL_VOCAB_OOV,
     SQL_VOCAB_TOPV,
     SQL_WINNOWING,
@@ -241,7 +225,6 @@ from .ext_analytics_ext import (
     pipeline_dedup_corpus,
     pipeline_span_surgery_q,
     pipeline_training_corpus,
-    resample_ffill_q,
     rollup_multigrain_q,
     sample_weighted_per_source_q,
     sample_weighted_q,
@@ -259,25 +242,13 @@ from .ext_analytics_ext import (
     source_temperature_q,
     split_no_leakage_q,
     tokens_to_ids_q,
-    ts_anomaly_zscore_q,
-    ts_changepoint_q,
-    ts_corr_topk_q,
-    ts_discord_q,
-    ts_motif_q,
-    ts_paa_q,
-    ts_sax_group_q,
-    ts_sax_q,
-    ts_seasonality_q,
-    ts_similarity_dtw_topk_q,
-    ts_similarity_refined_q,
-    ts_similarity_sax_topk_q,
-    ts_similarity_topk_q,
     vocab_oov_q,
     vocab_topv_q,
     winnowing_fingerprint_q,
     winnowing_pairs_q,
     zorder_values_q,
 )
+from .timeseries import SQL_TS_ANOMALY_ZSCORE
 
 EXTENSION_QUERIES = {
     "decontaminate": (decontaminate_q, SQL_DECONTAMINATE),
@@ -290,7 +261,6 @@ EXTENSION_QUERIES = {
         attribution_to_completion,
         SQL_STREAM_INTERVAL_JOIN,
     ),
-    "resample_ffill": (resample_ffill_q, SQL_RESAMPLE_FFILL),
     "dq_profile": (dq_profile_q, SQL_DQ_PROFILE),
     "scd2_merge": (scd2_merge_q, SQL_SCD2_MERGE),
     "embed_label_means": (embed_label_means_q, SQL_EMBED_LABEL_MEANS),
@@ -367,7 +337,6 @@ EXTENSION_QUERIES = {
     "asof_nearest": (asof_nearest_q, SQL_ASOF_NEAREST),
     "snapshot_diff": (snapshot_diff_q, SQL_SNAPSHOT_DIFF),
     "corpus_composition": (corpus_composition_q, SQL_CORPUS_COMPOSITION),
-    "events_funnel": (events_funnel_q, SQL_EVENTS_FUNNEL),
     "simsearch_ivfpq": (simsearch_ivfpq_q, SQL_IVFPQ),
     "sample_weighted_per_source": (
         sample_weighted_per_source_q,
@@ -403,40 +372,16 @@ EXTENSION_QUERIES = {
     "normalize_text": (normalize_text_q, SQL_NORMALIZE_TEXT),
     "dedup_normalized": (dedup_normalized_q, SQL_DEDUP_NORMALIZED),
     "skew_profile": (skew_profile_q, SQL_SKEW_PROFILE),
-    "ts_paa": (ts_paa_q, SQL_TS_PAA),
-    "ts_similarity_topk": (ts_similarity_topk_q, SQL_TS_SIMILARITY),
-    "ts_similarity_refined": (
-        ts_similarity_refined_q,
-        SQL_TS_SIMILARITY_REFINED,
-    ),
     # round-7 tail additions — queued for the round-8 certification
     # window per the registry rotation protocol (plans/registry.py)
-    "ts_sax": (ts_sax_q, SQL_TS_SAX),
-    "ts_sax_group": (ts_sax_group_q, SQL_TS_SAX_GROUP),
     "dedup_semantic": (dedup_semantic_q, SQL_DEDUP_SEMANTIC),
-    "ts_similarity_sax_topk": (
-        ts_similarity_sax_topk_q,
-        SQL_TS_SAX_TOPK,
-    ),
-    # round-8 addition — certified in the round-8 window (same-round
-    # promotion per the registry rotation protocol, plans/registry.py)
-    "ts_similarity_dtw_topk": (
-        ts_similarity_dtw_topk_q,
-        SQL_TS_DTW_TOPK,
-    ),
-    "ts_motif": (ts_motif_q, SQL_TS_MOTIF),
-    "ts_discord": (ts_discord_q, SQL_TS_DISCORD),
     "bpe_pair_counts": (bpe_pair_counts_q, SQL_BPE_PAIR_COUNTS),
     "bpe_merges": (bpe_merges_q, SQL_BPE_MERGES),
     "bpe_vocab": (bpe_vocab_q, SQL_BPE_VOCAB),
-    "ts_changepoint": (ts_changepoint_q, SQL_TS_CHANGEPOINT),
-    "ts_anomaly_zscore": (ts_anomaly_zscore_q, SQL_TS_ANOMALY_ZSCORE),
-    "ts_seasonality": (ts_seasonality_q, SQL_TS_SEASONALITY),
     "stream_anomaly_screen": (
         anomaly_screen_stream,
         SQL_TS_ANOMALY_ZSCORE,
     ),
-    "ts_corr_topk": (ts_corr_topk_q, SQL_TS_CORR_TOPK),
     "dq_drift_psi": (dq_drift_psi_q, SQL_DQ_DRIFT_PSI),
 }
 

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from pathlib import Path
 
 import pyarrow.parquet as pq
@@ -112,32 +113,44 @@ def csv_documents(sf_dir: str) -> str:
     return str(dst)
 
 
+# Bump when the split layout changes: the READY marker records it, and
+# a directory written by an older builder is rebuilt in place.
+_MULTIFILE_FIXTURE_FMT = "v2"
+
+
 def table_multifile_dir(
     sf_dir: str, table: str, parts: int = 4
 ) -> str:
     """Split <table>.parquet row-wise into `parts` files so a file
     source delivers several micro-batches (maxFilesPerTrigger=1) —
-    the streaming fixtures' input."""
+    the streaming fixtures' input. The file source takes files in
+    modification-time order, and parts written within one
+    millisecond would tie, so part i is stamped i seconds after
+    part 0: batches arrive in part order."""
     import pyarrow.parquet as pqm
 
     tag = Path(sf_dir).name
     stem = "docs" if table == "documents" else table
     d = _CACHE / f"{stem}_stream_{tag}_{parts}"
     done = d / "_FIXTURE_READY"
-    if done.exists():
+    if done.exists() and done.read_text() == _MULTIFILE_FIXTURE_FMT:
         return str(d)
     _CACHE.mkdir(exist_ok=True)
     d.mkdir(exist_ok=True)
     tbl = pqm.read_table(f"{sf_dir}/{table}.parquet")
     step = max(1, -(-tbl.num_rows // parts))
+    t0 = time.time_ns()
     for i in range(parts):
         chunk = tbl.slice(i * step, step)
         if chunk.num_rows == 0:
             break
         tmp = d / f"part{i}.tmp{os.getpid()}"
         pqm.write_table(chunk, tmp)
-        _atomic_publish(tmp, d / f"part{i}.parquet")
-    done.touch()
+        part = d / f"part{i}.parquet"
+        _atomic_publish(tmp, part)
+        t = t0 + i * 1_000_000_000
+        os.utime(part, ns=(t, t))
+    done.write_text(_MULTIFILE_FIXTURE_FMT)
     return str(d)
 
 

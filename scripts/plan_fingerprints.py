@@ -10,7 +10,7 @@ when the builder awaits its termination (`stream`): a memory-sink
 entry's final plan is only a `LocalTableScan` of the sink. Plans are
 normalized so that two runs of unchanged code give the same text:
 expression ids (`#12`), `[id=12]`, `plan_id=12`, lambda-variable
-counters (`x_12`), AQE query-stage ids (`ShuffleQueryStage 3`),
+counters (`x_12`, `y_12`, `z_12`), AQE query-stage ids (`ShuffleQueryStage 3`),
 whole-stage-codegen ids (`*(5)`), the checkout path, and the per-run
 tokens of a streaming plan (sink object hashes, temporary checkpoint
 directories, run ids, watermark node ids and the batch timestamp of a
@@ -22,12 +22,16 @@ Usage:
   python scripts/plan_fingerprints.py --show NAME
       print the normalized plans of one entry
   python scripts/plan_fingerprints.py --diff REV [NAME ...]
-      build REV in a temporary git worktree and this checkout, each in
-      its own process; list the entries whose plans differ, each with
-      a unified diff. Exits 1 when any entry differs. Entries whose
-      plans differ only in the order of items within lines (the
-      Expand projections of multi-column distinct aggregates, ordered
-      by expression-id hashes) are listed apart and do not count.
+      build REV (exported to a temporary directory) and this checkout,
+      each in its own process; list the entries whose plans differ,
+      each with a unified diff. Exits 1 when any entry differs. Both
+      sides record in REV's entry order, this checkout's new entries
+      last: a recorded plan depends on what the JVM built before it
+      (lambda counters, where long strings are cut, AQE build sides).
+      Entries whose plans differ only in the order of items within
+      lines (the Expand projections of multi-column distinct
+      aggregates, ordered by expression-id hashes) are listed apart
+      and do not count.
 
   --out FILE writes {name: [[action, plan], ...]} as JSON;
   --root DIR builds the checkout at DIR instead of this one.
@@ -54,7 +58,7 @@ _NORMALIZE = [
     (re.compile(r"#\d+"), "#"),
     (re.compile(r"\[id=\d+\]"), "[id=]"),
     (re.compile(r"plan_id=\d+"), "plan_id="),
-    (re.compile(r"\bx_\d+"), "x_"),
+    (re.compile(r"\b([xyz])_\d+"), r"\1_"),
     (re.compile(r"QueryStage \d+"), "QueryStage"),
     (re.compile(r"\*\(\d+\)"), "*()"),
     (re.compile(r"MemoryStreamingWrite@[0-9a-f]+"), "MemoryStreamingWrite@"),
@@ -181,20 +185,33 @@ def _lines(actions: list[list[str]]) -> list[str]:
     return lines
 
 
+def _in_order_of(first: list[str]) -> list[str]:
+    """This checkout's registry entries: those in `first` in its
+    order, then the rest in registry order."""
+    sys.path.insert(0, str(ROOT))
+    from mapreduce_chisquare_spark.plans.registry import REGISTRY
+
+    return [n for n in first if n in REGISTRY] + [
+        n for n in REGISTRY if n not in first
+    ]
+
+
 def diff(rev: str, names: list[str]) -> int:
     tmp = Path(tempfile.mkdtemp(prefix="plan_fingerprints_"))
     tree = tmp / "tree"
-    git = ["git", "-C", str(ROOT)]
-    subprocess.run(
-        git + ["worktree", "add", "--detach", str(tree), rev],
-        check=True, stdout=subprocess.DEVNULL,
-    )
+    tree.mkdir()
     try:
+        archive = subprocess.run(
+            ["git", "-C", str(ROOT), "archive", rev],
+            check=True, stdout=subprocess.PIPE,
+        ).stdout
+        subprocess.run(
+            ["tar", "-x", "-C", str(tree)], input=archive, check=True
+        )
         old = _dump(tree, names, tmp / "old.json")
+        new = _dump(ROOT, names or _in_order_of(list(old)), tmp / "new.json")
     finally:
-        subprocess.run(git + ["worktree", "remove", "--force", str(tree)])
-    new = _dump(ROOT, names, tmp / "new.json")
-    shutil.rmtree(tmp, ignore_errors=True)
+        shutil.rmtree(tmp, ignore_errors=True)
     differ = [n for n in {**old, **new} if old.get(n) != new.get(n)]
     shuffled = [
         n for n in differ
@@ -207,7 +224,7 @@ def diff(rev: str, names: list[str]) -> int:
             line + "\n"
             for line in difflib.unified_diff(
                 _lines(old.get(name, [])), _lines(new.get(name, [])),
-                f"{rev}:{name}", f"worktree:{name}", lineterm="",
+                f"{rev}:{name}", f"checkout:{name}", lineterm="",
             )
         )
     if shuffled:

@@ -671,3 +671,21 @@ def test_perplexity_buckets_thresholds_broadcast(spark, sf_dir):
     )
     assert "BroadcastHashJoin" in p, p
     assert "WindowGroupLimit" in p, p
+
+
+def test_plan_fingerprint_normalizes_every_lambda_counter():
+    """PySpark names lambda variables x, y and z with a JVM-wide
+    counter, so each counter is normalized, not only x_N."""
+    import importlib.util
+    import pathlib
+
+    path = (
+        pathlib.Path(__file__).parent.parent / "scripts" / "plan_fingerprints.py"
+    )
+    spec = importlib.util.spec_from_file_location("plan_fingerprints", path)
+    pf = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pf)
+    plan = "lambdafunction((x_7#1 + y_12#2), x_7#1, y_12#2, z_3#3, max_12#4)"
+    assert pf.normalize(plan, "/nowhere") == (
+        "lambdafunction((x_# + y_#), x_#, y_#, z_#, max_12#)"
+    )

@@ -56,6 +56,7 @@ _DEFAULT_TIER = (
     "image_thumbnail_decoded", "video_frame_phash", "video_neardup",
     "video_shot_boundaries", "audio_fingerprint", "audio_energy_segments",
     "audio_downsample_decoded", "multimodal_av_probe",
+    "ts_", "resample_", "events_funnel",
 )
 
 
@@ -67,7 +68,8 @@ def _oracle_param(name):
     run-to-completion shape (complete mode, stateful, foreachBatch,
     stream-static joins, stateless screens) and the 13 synthesized-
     media entries (image_*_decoded/gif/jpeg/palette, video_*,
-    audio_*, multimodal_av_probe) run in the default tier;
+    audio_*, multimodal_av_probe) and the 22 time-series entries
+    (ts_*, resample_*, events_funnel) run in the default tier;
     the rest of the ~9 min registry sweep is `slow` (full tier:
     pytest -m ""), as scripts/check_oracle covers the same ground."""
     if name.startswith(_DEFAULT_TIER):

@@ -158,3 +158,21 @@ def test_incremental_chi_checkpoint_recovery(spark, tmp_path):
     want = {(r.term, r.category): r.chi2 for r in batch.collect()}
     got = {(r.term, r.category): r.chi2 for r in resumed.collect()}
     assert got == want
+
+
+def test_multifile_parts_have_increasing_mtimes(tmp_path, monkeypatch):
+    """The file source reads one part per trigger in modification-time
+    order, so a split fixture's parts carry strictly increasing mtimes
+    in part order, and a directory whose READY marker lacks the format
+    tag is rebuilt with them."""
+    from mapreduce_chisquare_spark.sources import fixtures
+
+    monkeypatch.setattr(fixtures, "_CACHE", tmp_path)
+    d = tmp_path / "orders_stream_sf0.001_4"
+    d.mkdir()
+    (d / "_FIXTURE_READY").touch()  # marker of an untagged build
+    out = fixtures.table_multifile_dir("/root/testdata/sf0.001", "orders")
+    assert out == str(d)
+    mtimes = [os.stat(d / f"part{i}.parquet").st_mtime_ns for i in range(4)]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    assert (d / "_FIXTURE_READY").read_text() == fixtures._MULTIFILE_FIXTURE_FMT
