@@ -5,7 +5,8 @@ Semantics are pinned to the reference's majority/most-correct variant
 
 - tokenizer delimiter class: the `run_chi` superset regex
   (reference run_chi:55-57, chi_square.py:36, multi_jobs_hdfs.py:74),
-  expressed once, valid in both Java regex (Spark) and RE2 (DuckDB).
+  expressed once, selecting the same characters in Java regex (Spark),
+  RE2 (DuckDB) and Python `re`.
 - casefold FIRST, then stopword filter, then length filter, then
   per-document distinct (run_chi:66-68, multi_jobs_hdfs.py:74-78).
 - token length bounds: 1 < len(term) < 50 (run_chi:67).
@@ -15,10 +16,14 @@ Semantics are pinned to the reference's majority/most-correct variant
 
 from __future__ import annotations
 
-# Delimiter character class. Works identically as a Java regex (Spark
-# `split`) and an RE2 regex (DuckDB `regexp_split_to_array`):
-#   whitespace, digits, ()[]{} .!?,;:+=/_ quotes backtick ~#@&*% €$§ backslash -
-DELIM_REGEX = "[\\s\\d()\\[\\]{}.!?,;:+=/_\"'`~#@&*%€$§\\\\-]+"
+# Delimiter character class: 46 code points, each spelled out, so Java
+# (Spark `split`), RE2 (DuckDB `regexp_split_to_array`) and Python `re`
+# select the same set. `\s`/`\d` would not: RE2's `\s` lacks U+000B and
+# Python's are Unicode-aware (719 code points). Java compiles the class
+# to one bitmap plus `€`.
+#   space \t \n \v \f \r, digits, ()[]{} .!?,;:+=/_ quotes backtick
+#   ~#@&*% €$§ backslash -
+DELIM_REGEX = "[ \\t\\n\\x0B\\f\\r0123456789()\\[\\]{}.!?,;:+=/_\"'`~#@&*%€$§\\\\-]+"
 
 MIN_TOKEN_LEN = 2  # keep len(t) > 1
 MAX_TOKEN_LEN = 49  # keep len(t) < 50

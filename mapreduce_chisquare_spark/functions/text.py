@@ -1,14 +1,20 @@
 """Text scalar functions (SURVEY.md §2.2-2.3: F1-F4, X1-X3).
 
-All pure Catalyst column expressions — no Python UDFs — so every step
-stays inside whole-stage codegen and filters/projections push down to
-the parquet/JSON scan.
+All pure Catalyst column expressions — no Python UDFs — and no lambda
+higher-order functions (`filter`, `transform`, …) on the token path:
+a lambda is a `CodegenFallback` expression, and one inside the
+exploded array drops the whole `Generate` out of whole-stage codegen.
+The token filters therefore run as one `Filter` on the exploded term,
+so scan, `Generate`, token filter and the consumer's partial aggregate
+compile to one generated stage.
 
-Canonical order (quirk Q1, SURVEY.md §2.10): lowercase → tokenize →
+Canonical semantics (quirk Q1, SURVEY.md §2.10): lowercase → tokenize →
 drop empties → stopword filter → length filter → per-doc distinct.
 This is the run_chi:66-68 / multi_jobs_hdfs.py:74-78 semantics (true
 document frequency), not the single-job variant's dedup-before-casefold
-bug (chi_square.py:37-38).
+bug (chi_square.py:37-38). `tokens_relation` dedups each document's
+casefolded terms before the explode and filters after it; the filters
+look at one term at a time, so the kept multiset is the same.
 """
 
 from __future__ import annotations
@@ -32,19 +38,36 @@ def nonempty_documents(df: DataFrame, text_col: str = "text", cat_col: str = "ca
     )
 
 
-def tokenize_expr(text: Column, stopwords: Sequence[str]) -> Column:
-    """X1+X2+F2+F3+X3 fused into one array expression.
-
-    split(lower(text)) → remove '' → remove stopwords → length bounds →
-    distinct. `array_except` both removes the stopword set (F2,
-    chi_square.py:37's set-minus) and dedups (X3) in one pass; the
-    reference's 1 < len < 50 bound is run_chi:67 (quirks Q2/Q3).
-    """
-    toks = F.split(F.lower(text), DELIM_REGEX)
-    toks = F.array_except(toks, F.array(*[F.lit(s) for s in stopwords]))
-    return F.filter(
-        toks,
-        lambda t: (F.length(t) >= MIN_TOKEN_LEN) & (F.length(t) <= MAX_TOKEN_LEN),
+def _terms(
+    docs: DataFrame,
+    stopwords: Sequence[str],
+    id_col: str,
+    text_col: str,
+    cat_col: str,
+    *,
+    per_doc_distinct: bool,
+) -> DataFrame:
+    """The one token path. X1+X2 (casefold, split) build the array,
+    X3 (per-doc distinct) dedups it, and after the explode one Filter
+    applies F3+F2: the reference's 1 < len < 50 bound (run_chi:67,
+    quirks Q2/Q3; it also drops the empty strings a leading delimiter
+    leaves) and the stopword set-minus (chi_square.py:37), whose IN
+    list Catalyst turns into an `InSet` built once per plan."""
+    toks = F.split(F.lower(F.col(text_col)), DELIM_REGEX)
+    if per_doc_distinct:
+        toks = F.array_distinct(toks)
+    term = F.col("term")
+    keep = F.length(term).between(MIN_TOKEN_LEN, MAX_TOKEN_LEN)
+    if stopwords:
+        keep = keep & ~term.isin(*stopwords)
+    return (
+        nonempty_documents(docs, text_col, cat_col)
+        .select(
+            F.col(id_col).alias("doc_id"),
+            F.col(cat_col).alias("category"),
+            F.explode(toks).alias("term"),
+        )
+        .filter(keep)
     )
 
 
@@ -58,18 +81,7 @@ def terms_with_multiplicity(
     """X1+X2+F2+F3 WITHOUT the per-doc distinct (X3): the term stream
     with multiplicity, for tf-style scores (TF-IDF) where in-document
     counts matter. Same canonical filter order otherwise."""
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), DELIM_REGEX),
-        lambda t: (F.length(t) >= MIN_TOKEN_LEN)
-        & (F.length(t) <= MAX_TOKEN_LEN)
-        & ~F.array_contains(stop_arr, t),
-    )
-    return nonempty_documents(docs, text_col, cat_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.col(cat_col).alias("category"),
-        F.explode(toks).alias("term"),
-    )
+    return _terms(docs, stopwords, id_col, text_col, cat_col, per_doc_distinct=False)
 
 
 def tokens_relation(
@@ -90,11 +102,4 @@ def tokens_relation(
     vocabularies instead of 1). The floor stays only on paths whose
     per-row kernel cost dominates (media synth/decode, k-hash
     MinHash)."""
-    return (
-        nonempty_documents(docs, text_col, cat_col)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.col(cat_col).alias("category"),
-            F.explode(tokenize_expr(F.col(text_col), stopwords)).alias("term"),
-        )
-    )
+    return _terms(docs, stopwords, id_col, text_col, cat_col, per_doc_distinct=True)

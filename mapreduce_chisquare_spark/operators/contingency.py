@@ -6,14 +6,16 @@ ceiling) or by fragile metadata re-keying (run_chi:95-131). Here each
 count is a distributed hash aggregate with automatic map-side partial
 aggregation, and the "joins" are:
 
-- df_t  (J1): a window sum over the term partition — reuses the
-  groupBy(term, category) shuffle, so NO extra shuffle for the
-  per-term totals.
+- df_t  (J1): a window sum over the term partition. Its exchange,
+  hashpartitioning(term), is separate from the groupBy(term, category)
+  one, but it ships the aggregated (term, category) counts, not the
+  tokens.
 - df_c  (J2): broadcast hash join (category cardinality is tiny).
 - N     (J3): broadcast cross join with a 1-row aggregate.
 
-Two shuffles total for the whole χ² relation; scales linearly in
-tokens with no single-partition funnel.
+Two shuffles on the token lineage (the counts and the term window),
+plus the df_c aggregate that N reuses; scales linearly in tokens with
+no single-partition funnel.
 """
 
 from __future__ import annotations
@@ -58,8 +60,9 @@ def chi_square_from_counts(
     one-shot batch plan and by the incremental streaming plan (where
     the inputs are merged per-batch partials).
 
-    J1 is a window sum over term (reuses the counts shuffle), J2/J3 are
-    broadcasts — no single-partition funnel anywhere.
+    J1 is a window sum over term (one exchange of the aggregated
+    counts), J2/J3 are broadcasts — no single-partition funnel
+    anywhere.
     """
     df_tc = df_tc.withColumn(
         "df_t", F.sum("df_tc").over(Window.partitionBy("term"))
@@ -120,8 +123,8 @@ def g2_from_counts(
 ) -> DataFrame:
     """(category, term, g2) — Dunning's log-likelihood ratio from the
     SAME pre-aggregated counts chi_square_from_counts consumes (one
-    window sum on the counts shuffle + two broadcasts; identical
-    shuffle budget, different statistic). The G² score stays
+    window sum over term + two broadcasts; identical shuffle budget,
+    different statistic). The G² score stays
     calibrated at small expected counts where Pearson χ² overshoots —
     the standard alternative feature-selection statistic."""
     from ..functions.stats import g2_expr

@@ -1840,8 +1840,10 @@ def recall_at_k(
     ann = lsh_topk(emb, n_queries=n_queries, k=k).select(
         "query_id", "vec_id"
     )
+    # Both sides are q·k rows; pinning the build side keeps the
+    # AQE-final join independent of what the session ran before.
     hits = (
-        ann.join(exact, ["query_id", "vec_id"])
+        ann.join(F.broadcast(exact), ["query_id", "vec_id"])
         .groupBy("query_id")
         .agg(F.count("*").cast("long").alias("n_hit"))
     )

@@ -4,10 +4,14 @@ pipeline (SURVEY.md §2.9).
 Reference lifecycles replaced (SURVEY.md §3): single-step mrjob with
 its everything-to-one-reducer combiner (chi_square.py:46-47), the
 4-round MR chain (run_chi:192-213), and the sequential dict pipeline
-(multi_jobs_hdfs.py:185-215) all collapse into one Catalyst plan with
-exactly two shuffles: groupBy(term, category), then the term-window /
-category exchange. Stopwords and the category/total counts travel as
-broadcasts, not through a single reducer.
+(multi_jobs_hdfs.py:185-215) all collapse into one Catalyst plan. Its
+token lineage shuffles three times: groupBy(term, category), the term
+partition of the df_t window sum, and the category partition of the
+top-k window; the category counts add one more aggregate of the
+documents, shared with N through exchange reuse
+(tests/test_plans.py::test_flagship_shuffle_budget). Stopwords and the
+category/total counts travel as broadcasts, not through a single
+reducer.
 """
 
 from __future__ import annotations

@@ -76,6 +76,29 @@ def test_flagship_aggs_stay_hash_based(flagship_plan):
     assert "SortAggregate" not in flagship_plan
 
 
+@pytest.mark.parametrize("name", ["topk_per_group", "tfidf"])
+def test_token_path_is_one_codegen_stage(spark, sf_dir, name):
+    # A lambda on the token path (`filter(arr, t -> ...)`) is a
+    # CodegenFallback expression and drops the whole Generate out of
+    # whole-stage codegen. Without one, the explode, the token filter
+    # and (for the flagship) the partial (term, category) aggregate
+    # compile to one generated stage.
+    import re
+
+    df = REGISTRY[name][0](spark, sf_dir)
+    df.collect()
+    p = df._jdf.queryExecution().executedPlan().toString()
+    p = p.split("== Initial Plan ==")[0]
+    gen = re.search(r"\*\((\d+)\) Generate explode", p)
+    assert gen, p
+    stage = re.escape(f"*({gen.group(1)})")
+    assert re.search(stage + r" Filter \(+length\(term#", p), p
+    if name == "topk_per_group":
+        agg = r" HashAggregate\(keys=\[term#\d+, category#\d+\], functions=\[partial_"
+        assert re.search(stage + agg, p), p
+    assert "lambdafunction" not in p and "filter(" not in p, p
+
+
 def test_minhash_signature_agg_is_hash_based(spark, sf_dir):
     p = plan_text(REGISTRY["dedup_minhash_lsh"][0](spark, sf_dir))
     # min over numeric hashes keeps the 16-way signature aggregate in
@@ -689,3 +712,20 @@ def test_plan_fingerprint_normalizes_every_lambda_counter():
     assert pf.normalize(plan, "/nowhere") == (
         "lambdafunction((x_# + y_#), x_#, y_#, z_#, max_12#)"
     )
+
+
+def test_rank_eval_recall_broadcasts_exact_side(spark, sf_dir):
+    # Both join sides are q*k rows, so left to AQE the build side
+    # depended on what the session ran before; the exact top-k side
+    # is the pinned build side.
+    import re
+
+    df = REGISTRY["rank_eval_recall"][0](spark, sf_dir)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    executed = executed.split("== Initial Plan ==")[0]
+    joins = re.findall(
+        r"BroadcastHashJoin \[query_id#\d+L?, vec_id#\d+L?\], .*?, Inner, (Build\w+)",
+        executed,
+    )
+    assert joins == ["BuildRight"], executed
