@@ -21,18 +21,25 @@ aggregates, the failure mode a float PageRank has at cluster scale.
 The only doubles (rule confidence/lift, link Jaccard) are single
 shared quotients of integer counts.
 
-Checkpoint per round: every iterative operator materializes its state
-(localCheckpoint) once per round. That truncates lineage, and it is
-the only cadence that measured safe: checkpointing every second round
-made the next round's broadcast subtrees recompute the
-un-checkpointed step and ran slower (OPTIMIZATION_r15.md,
-OPTIMIZATION_r16.md).
+Checkpoint per round, where a round re-reads its state: an iterative
+operator materializes its state (localCheckpoint) once per round when
+the round reads the previous state more than once (pagerank's ranks
+feed contrib and the dangling mass; LPA and link prediction re-join
+the edge relation). Without it each read recomputes the whole chain
+of earlier rounds; checkpointing only every second round made the
+next round's broadcast subtrees recompute the un-checkpointed step
+and ran slower (OPTIMIZATION_r15.md, OPTIMIZATION_r16.md). A round
+that reads its state once needs no materialization: kcore_peel's
+rounds form one linear plan, one exchange each, and run as stages of
+the caller's action instead of as jobs inside the builder.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..sources.readers import literal_relation
 
 PR_SCALE = 10**12  # ranks are integer multiples of 1e-12
 PR_ITERATIONS = 10
@@ -42,8 +49,8 @@ PR_DAMP_DEN = 100
 
 def _undirected(edges: DataFrame) -> DataFrame:
     """The symmetrized (a, b) relation of an undirected `lo`/`hi`
-    edge list: both directions, self-loops dropped, deduped,
-    materialized once for the rounds that re-join it."""
+    edge list: both directions, self-loops dropped, deduped. Lazy:
+    callers whose rounds re-join it materialize it themselves."""
     return (
         edges.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
         .union(
@@ -51,7 +58,6 @@ def _undirected(edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
 
 
@@ -287,8 +293,8 @@ def personalized_pagerank(
     if not seeds:
         raise ValueError("personalized_pagerank needs >= 1 seed")
     e = edges.select("src", "dst").distinct().localCheckpoint()
-    seed_df = edges.sparkSession.createDataFrame(
-        [(s,) for s in seeds], "node string"
+    seed_df = literal_relation(
+        edges.sparkSession, [(s,) for s in seeds], "node string"
     )
     nodes = _node_set(e, seed_df.select("node"))
     ns = len(seeds)
@@ -412,7 +418,7 @@ def label_propagation(
     WindowGroupLimit-eligible.) Label state is |V|
     rows, checkpointed per round to truncate lineage. No driver
     state; the round count, not |V|, bounds the chain."""
-    sym = _undirected(edges)
+    sym = _undirected(edges).localCheckpoint()
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -455,24 +461,38 @@ def kcore_peel(
     graphs whose peeling converges within `rounds` (asserted for the
     test fixture) the result IS the exact k-core.
 
-    Scale shape: per round one degree aggregate over |E| and one
-    semi-join restriction of the edge relation on each endpoint —
-    all on the node key; the edge relation is checkpointed per round
-    (lineage discipline), state is |E| rows and shrinks
-    monotonically. No driver state beyond the loop counter."""
+    Scale shape: one |E| shuffle per round. Each row (x, y, dy) of
+    the symmetric edge set is hash-partitioned on x and carries y's
+    degree from the previous round; a window count per x gives x's
+    degree, one filter keeps the rows whose two degrees are both
+    >= k, and a second window on the same partitioning (no exchange,
+    no sort) counts x's surviving degree, which the swapped row
+    (y, x, dx) carries to the next round. That replaces a degree
+    aggregate, two semi-joins and a checkpoint per round. The state
+    is read once per round, so the rounds form one linear plan with
+    no materialization; the last round ends in a groupBy on x, which
+    needs no exchange. State is |E| rows and shrinks monotonically.
+    No driver state beyond the loop counter."""
     e = _undirected(edges)
-    for _ in range(int(rounds)):
-        deg = e.groupBy("a").agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= F.lit(int(k))).select("a")
-        e = (
-            e.join(keep, "a", "left_semi")
-            .join(keep.select(F.col("a").alias("b")), "b", "left_semi")
-            .select("a", "b")
-            .localCheckpoint()
+    by_x = Window.partitionBy("x")
+    # (x, y, dy): the row keyed by x carries y's degree
+    s = e.select(
+        F.col("b").alias("x"),
+        F.col("a").alias("y"),
+        F.count("*").over(Window.partitionBy("a")).alias("dy"),
+    )
+    for i in range(int(rounds)):
+        s = s.withColumn("dx", F.count("*").over(by_x)).filter(
+            (F.col("dx") >= F.lit(int(k))) & (F.col("dy") >= F.lit(int(k)))
         )
-    return (
-        e.groupBy(F.col("a").alias("node"))
-        .agg(F.count("*").cast("long").alias("deg"))
+        if i + 1 < int(rounds):
+            s = s.select(
+                F.col("y").alias("x"),
+                F.col("x").alias("y"),
+                F.count("*").over(by_x).alias("dy"),
+            )
+    return s.groupBy(F.col("x").alias("node")).agg(
+        F.count("*").cast("long").alias("deg")
     )
 
 
@@ -504,7 +524,7 @@ def jaccard_link_prediction(
     aggregate; existing edges leave via one anti-join; the head is a
     TakeOrdered. Ties cannot drift: equal rationals compare equal as
     doubles, and (a, b) breaks the rest."""
-    sym = _undirected(edges)
+    sym = _undirected(edges).localCheckpoint()
     deg = sym.groupBy("a").agg(F.count("*").alias("deg"))
     centers = deg.filter(F.col("deg") <= F.lit(int(max_deg))).select(
         F.col("a").alias("n")

@@ -57,6 +57,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import literal_relation
 from .topk import topk_per_group
 
 DIM = 64
@@ -1717,7 +1718,7 @@ def mmr_topk(
             T.StructField("step", T.IntegerType()),
         ]
     )
-    return emb.sparkSession.createDataFrame(out_rows, out_schema)
+    return literal_relation(emb.sparkSession, out_rows, out_schema)
 
 
 def standardize_dims(emb: DataFrame) -> DataFrame:

@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..constants import DELIM_REGEX, STOPWORDS
+from ..sources.readers import literal_relation
 
 # Tiny per-language marker profiles (n-gram-heuristic stand-in; real
 # deployments would ship fastText-style models via a pandas_udf).
@@ -1093,8 +1094,8 @@ def bpe_merges(
     times builder + collect together)."""
     spark = docs.sparkSession
     merges, _ = _bpe_learn(docs, n_merges, text_col)
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count long"
+    return literal_relation(
+        spark, merges, "rank int, left string, right string, pair_count long"
     )
 
 

@@ -30,6 +30,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.readers import literal_relation
+
 HOUR = 3600
 
 
@@ -323,10 +325,13 @@ def _shortlist(
         bounds.orderBy(F.asc(bound), F.asc("user_id")).limit(n).collect()
     )
     spark = bounds.sparkSession
-    cand = spark.createDataFrame(
-        [(r.user_id, r[bound]) for r in rows], f"user_id long, {cand_col}"
+    cand = literal_relation(
+        spark,
+        [(r.user_id, r[bound]) for r in rows],
+        f"user_id long, {cand_col}",
     )
-    members = spark.createDataFrame(
+    members = literal_relation(
+        spark,
         [(r.user_id,) for r in rows] + [(u,) for u in extra],
         "user_id long",
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..operators import imagehash as ih
 from ..operators import multimodal as mm
 from ..operators import sketches as sk
+from ..sources.readers import literal_relation
 from ..streaming.bloom import bloom_screen_stream
 from .ext_common import _docs
 from .oracle_common import (
@@ -142,8 +143,8 @@ def robots_screen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("/"))
         .alias("path"),
     )
-    rules = spark.createDataFrame(
-        _ROBOTS_RULES, "host string, rule_path string, allow boolean"
+    rules = literal_relation(
+        spark, _ROBOTS_RULES, "host string, rule_path string, allow boolean"
     )
     return robots_screen(pages, rules)
 

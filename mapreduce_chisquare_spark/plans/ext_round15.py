@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import curation as cu
-from ..sources.readers import scan_parquet
 from ..streaming.curation import pii_screen_stream
 from .ext_common import _docs, _events
 
@@ -486,15 +485,9 @@ def graph_degree_distribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     power-law sanity, join-skew forecasting for the heavier graph
     passes). Edge derivation as in graph_triangles; then one degree
     aggregate + one histogram aggregate, both map-side-combinable."""
-    from .registry_analytics import _TRI_PLANT
+    from .registry_analytics import _coorder_parts
 
-    li = scan_parquet(spark, sf_dir, "lineitem")
-    op = li.select(
-        F.col("l_orderkey").alias("o_key"),
-        F.col("l_partkey").alias("p_key"),
-    )
-    plant = spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long")
-    dop = op.union(plant).distinct()
+    dop = _coorder_parts(spark, sf_dir).distinct()
     a = dop.select(F.col("o_key"), F.col("p_key").alias("lo"))
     b = dop.select(F.col("o_key"), F.col("p_key").alias("hi"))
     edges = (

@@ -24,7 +24,7 @@ from ..operators.graph import (
     triangle_counts,
 )
 from ..operators.sketches import KMV_HASH_SPACE, kmv_distinct
-from ..sources.readers import scan_parquet
+from ..sources.readers import literal_relation, scan_parquet
 from ..streaming.curation import gopher_screen_stream
 
 
@@ -128,7 +128,7 @@ def _coorder_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return li.select(
         F.col("l_orderkey").alias("o_key"),
         F.col("l_partkey").alias("p_key"),
-    ).union(spark.createDataFrame(_TRI_PLANT, "o_key long, p_key long"))
+    ).union(literal_relation(spark, _TRI_PLANT, "o_key long, p_key long"))
 
 
 def _coorder_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1676,9 +1676,7 @@ def dq_referential_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     li = _t(spark, sf_dir, "lineitem")
     cust = _t(spark, sf_dir, "customer")
-    plant = spark.createDataFrame(
-        [(int(k),) for k in _RI_PLANT], "k long"
-    )
+    plant = literal_relation(spark, [(k,) for k in _RI_PLANT], "k long")
     li_fk = li.select(F.col("l_orderkey").alias("k")).unionAll(plant)
     o_fk = orders.select(F.col("o_custkey").alias("k")).unionAll(plant)
     return referential_integrity(

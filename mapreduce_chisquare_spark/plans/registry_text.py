@@ -28,7 +28,11 @@ from ..operators.contingency import (
 from ..operators.report import format_report, merged_dict
 from ..operators.topk import topk_per_group
 from ..plans.chisquare import chi_square_top_terms
-from ..sources.readers import reviews_from_documents, scan_parquet
+from ..sources.readers import (
+    literal_relation,
+    reviews_from_documents,
+    scan_parquet,
+)
 from .oracle_common import (
     CHI2_CTES,
     COUNTS_CTES,
@@ -259,8 +263,8 @@ SQL_DEDUP_TERMS = with_text_ctes() + (
 def q_anti_join_stopwords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: stopword removal as an explicit broadcast left-anti join —
     the alternative physical form of F2."""
-    spark_stop = spark.createDataFrame(
-        [(s,) for s in STOPWORDS], "term string"
+    spark_stop = literal_relation(
+        spark, [(s,) for s in STOPWORDS], "term string"
     )
     return (
         _raw_terms(spark, sf_dir)

@@ -131,6 +131,66 @@ def scan_json_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+_FRACTIONAL = (T.FloatType, T.DoubleType)
+
+
+def _sql_string(s: str) -> str:
+    """`s` as a Spark SQL string literal. The parser unescapes only
+    backslash sequences, so every other character, newlines and
+    non-ASCII included, stands for itself."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_literal(v, dt: T.DataType) -> str:
+    """One typed cell: `v` as an exact literal of Spark type `dt`."""
+    t = dt.simpleString()
+    if v is None:
+        return f"CAST(NULL AS {t})"
+    if isinstance(dt, T.BooleanType):
+        return "true" if v else "false"
+    if isinstance(dt, _INTEGRAL):
+        # CAST pins the declared width: the parser types 1 as int
+        # and 2^40 as bigint
+        return f"CAST({int(v)} AS {t})"
+    if isinstance(dt, _FRACTIONAL):
+        # repr round-trips a double exactly; CAST parses nan/inf/-0.0
+        return f"CAST('{float(v)!r}' AS {t})"
+    if isinstance(dt, T.StringType):
+        return _sql_string(str(v))
+    raise TypeError(f"literal_relation: unsupported column type {t}")
+
+
+def literal_relation(
+    spark: SparkSession, rows, schema: str | T.StructType
+) -> DataFrame:
+    """A small driver-side relation as a `LocalRelation`: the rows
+    become one SQL `VALUES` text of typed literals, so the plan reads
+    them with a `LocalTableScan`. `createDataFrame` instead ships its
+    rows through Python workers (a PythonRDD) on every run of the
+    plan. `schema` is a DDL string or a StructType of boolean,
+    integral, float/double and string columns; values round-trip
+    exactly (NaN, ±Infinity, -0.0, subnormals, ±2^63 bounds, any
+    string)."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    fields = schema.fields
+    names = ", ".join(
+        "`" + f.name.replace("`", "``") + "`" for f in fields
+    )
+    rows = [tuple(r) for r in rows]
+    body = rows or [(None,) * len(fields)]
+    values = ", ".join(
+        "(" + ", ".join(
+            _sql_literal(v, f.dataType)
+            for v, f in zip(r, fields, strict=True)
+        ) + ")"
+        for r in body
+    )
+    where = "" if rows else " WHERE false"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS v({names}){where}")
+
+
 def reviews_from_documents(documents: DataFrame) -> DataFrame:
     """FIXTURES.md fixture-A mapping: documents(text, lang) → reviews."""
     return documents.selectExpr(

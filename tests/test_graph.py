@@ -5,10 +5,15 @@ loudly instead of returning partial labels."""
 
 from __future__ import annotations
 
+import random
+import re
+from collections import Counter
+
 import pytest
 
 from mapreduce_chisquare_spark.operators.dedup import components_over_pairs
 from mapreduce_chisquare_spark.operators.graph import (
+    KCORE_ROUNDS,
     connected_components_star,
     hits,
     kcore_peel,
@@ -16,6 +21,7 @@ from mapreduce_chisquare_spark.operators.graph import (
     pagerank,
     personalized_pagerank,
 )
+from mapreduce_chisquare_spark.plans.registry import REGISTRY
 
 # directed: a 4-cycle, a hub citing it, two sinks, a duplicate edge
 _DIRECTED = [
@@ -80,3 +86,74 @@ def test_components_over_pairs_raises_when_rounds_run_out(spark):
     }
     assert got == {i: 0 for i in range(5)}
     assert stats == {"rounds": 5}
+
+
+def _peel(edges, k: int, rounds: int) -> Counter:
+    """Reference k-core peel: symmetrize, drop self-loops, then per
+    round keep the edges whose two endpoints have degree >= k."""
+    e = {(a, b) for lo, hi in edges for a, b in ((lo, hi), (hi, lo))}
+    e = {(a, b) for a, b in e if a != b}
+    for _ in range(rounds):
+        deg = Counter(a for a, _ in e)
+        e = {(a, b) for a, b in e if deg[a] >= k and deg[b] >= k}
+    return Counter(Counter(a for a, _ in e).items())
+
+
+def _random_graph(seed: int, k: int) -> list:
+    """Up to 60 nodes, dense enough that most k-cores are non-empty
+    and some peel to nothing; self-loops and duplicates included."""
+    rng = random.Random(seed)
+    n = rng.randint(k + 1, 60)
+    m = rng.randint(k * n // 2, (k + 1) * n)
+    return [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
+
+
+_KCORE_CASES = [
+    *(
+        (f"random{i}", _random_graph(i, k), k, rounds)
+        for i, (k, rounds) in enumerate(
+            (k, r) for k in (1, 2, 3, 4) for r in (0, 1, 2, 4, 6)
+        )
+    ),
+    ("empty", [], 1, 2),
+    ("one_edge", [(1, 2)], 1, 2),
+    ("self_loops_only", [(1, 1), (2, 2), (3, 3)], 1, 2),
+    ("both_directions_duplicated", [(1, 2), (2, 1), (1, 2), (2, 1)], 1, 4),
+]
+
+
+@pytest.mark.parametrize(
+    "edges,k,rounds",
+    [c[1:] for c in _KCORE_CASES],
+    ids=[f"{c[0]}-k{c[2]}-r{c[3]}" for c in _KCORE_CASES],
+)
+def test_kcore_matches_reference_peel(spark, edges, k, rounds):
+    df = spark.createDataFrame(edges, "lo long, hi long")
+    got = kcore_peel(df, k=k, rounds=rounds).collect()
+    assert Counter(tuple(r) for r in got) == _peel(edges, k, rounds)
+
+
+def test_graph_kcore_is_one_lazy_plan(spark, sf_dir):
+    """The builder submits no job (its rounds run at the action), the
+    planted K4 is a LocalTableScan rather than a Python-fed RDD scan,
+    and each peel round costs one exchange."""
+    sc = spark.sparkContext
+    group = "test_graph_kcore_is_one_lazy_plan"
+    sc.setJobGroup(group, group)
+    try:
+        df = REGISTRY["graph_kcore"][0](spark, sf_dir)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in text
+    plan = text.split("== Initial Plan ==")[0]
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    # a ReusedExchange line names the exchange it reuses: not counted
+    exchanges = re.findall(
+        r"^[\s:+*()\d-]*Exchange hashpartitioning", plan, re.M
+    )
+    assert 0 < len(exchanges) <= KCORE_ROUNDS + 4, plan
