@@ -170,7 +170,7 @@ def literal_relation(
     rows through Python workers (a PythonRDD) on every run of the
     plan. `schema` is a DDL string or a StructType of boolean,
     integral, float/double and string columns; values round-trip
-    exactly (NaN, ±Infinity, -0.0, subnormals, ±2^63 bounds, any
+    exactly (NaN, ±Infinity, -0.0, subnormals, the int64 bounds, any
     string)."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
